@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components by min-label propagation with pointer
@@ -15,17 +15,12 @@ import org.apache.spark.sql.functions._
   * pointer-jump — `comp ← label(comp)` — halves label-chain depth,
   * so rounds needed are O(log diameter), not O(diameter): a 1M-hop
   * chain converges in ~20 rounds. Per-node state is one label, the
-  * widest row is O(1). Convergence is detected by an `observe()`
-  * metric collected while the round's localCheckpoint job streams the
-  * labels past — one job per round, not checkpoint + a separate scan; if
-  * `maxIterations` is somehow exhausted first the run FAILS LOUDLY
-  * rather than returning silently-split components.
+  * widest row is O(1). The loop runs on [[Iterate.untilStable]]: the
+  * count of changed labels rides each round's own checkpoint job, and
+  * if `maxIterations` is exhausted first the run FAILS LOUDLY rather
+  * than returning silently-split components.
   */
 object Components {
-
-  /** Broadcast ceiling for the per-round label relations — same gate
-    * class as PageRank.BroadcastMaxNodes / Graph.BroadcastMaxEdges. */
-  val BroadcastMaxLabels = 4000000L
 
   /** `edges(src, dst)` of any orderable key type → `(node, comp)`
     * where comp = min node id reachable. */
@@ -47,22 +42,25 @@ object Components {
     // label table is keyed by und's endpoints, received/jumpSrc are
     // its projections), so ONE count over the just-materialized leaf
     // decides every round's join strategy. Without it (r12 second
-    // pass), freshLeaf's conservative stats made every round
+    // pass), the leaf's conservative stats made every round
     // sort-merge: the edge-sized und relation re-shuffled EVERY round
     // — exchange reuse never spans the per-round checkpoint queries —
     // for a loop whose mutable state is |V|-sized. Under the gate the
     // label side ships and und never moves (the BFS-frontier /
     // LPA-label gate class); past it the rounds degrade to the
     // shuffled joins exactly as before.
-    val doBroadcast = und.count() <= BroadcastMaxLabels
-    def gate(df: DataFrame) = if (doBroadcast) broadcast(df) else df
-    var labels = und.select(col("a").as("node")).distinct()
+    val gate = Iterate.broadcastIf(und.count() <= Iterate.BroadcastMaxRows)
+    val init = und.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("comp"))
       .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
-      iter += 1
+    // `changed` is null when a node has no inbound neighbor (null OR
+    // false folds to null) — that means unchanged, and when() skips it
+    Iterate.untilStable("graft.cc.changed", init, maxIterations,
+        _ => sum(when(col("changed"), 1L)).as("n_changed"),
+        refuse = Some("connectedComponents")) { (state, _, _) =>
+      // the state carries last round's `changed` flag; a no-op
+      // projection on the initial labels
+      val labels = state.select(col("node"), col("comp"))
       // (1) neighbor min
       val received = und.join(gate(labels), col("a") === col("node"))
         .groupBy(col("b")).agg(min(col("comp")).as("nbr_comp"))
@@ -77,43 +75,10 @@ object Components {
       // because per-round cost is dominated by the two joins already
       // present, not by round count.
       val jumpSrc = stepped.select(col("node").as("jnode"), col("comp").as("jcomp"))
-      val jumped = stepped.join(gate(jumpSrc), col("comp") === col("jnode"), "left")
+      stepped.join(gate(jumpSrc), col("comp") === col("jnode"), "left")
         .select(col("node"),
           least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"),
           (col("changed") || col("jcomp") < col("comp")).as("changed"))
-      // count changed labels as the checkpoint job streams rows past —
-      // piggybacking on the materialization instead of a second
-      // filter/isEmpty job halves the actions per round. observe()
-      // attaches a CollectMetrics node to the SAME action with no
-      // encoder boundary (the old Dataset.map + Encoders.row paid a
-      // full deserialize/serialize round trip per row), and its
-      // metrics are exactly-once per execution — a task retry can't
-      // even overcount. `changed` is null when a node has no inbound
-      // neighbor (null OR false folds to null) — that means unchanged,
-      // and when() skips it.
-      val obs = Observation(s"graft.cc.changed.$iter")
-      val prev = labels
-      // freshLeaf: Spark 4's localCheckpoint PRESERVES the source
-      // plan's stats estimate, and the two self-joins above square it
-      // — left alone, the estimate compounds ~4x per round and the
-      // driver ends up grinding BigInteger stats math instead of
-      // running jobs (measured: 611 bits → 728k bits by round 6).
-      // Re-wrapping the checkpointed RDD as a fresh leaf resets the
-      // estimate each round at zero execution cost.
-      labels = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        jumped
-          .observe(obs, sum(when(col("changed"), 1L)).as("n_changed"))
-          .localCheckpoint())
-      prev.unpersist() // cap checkpoint residency at 2 label tables
-      converged = Option(obs.get("n_changed")).forall(_ == 0L)
-      labels = labels.select(col("node"), col("comp"))
-    }
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIterations iterations " +
-          "(graph diameter > 2^iterations?) — refusing to return split components")
-    }
-    labels
+    }.select(col("node"), col("comp"))
   }
 }

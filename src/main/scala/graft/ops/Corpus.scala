@@ -295,13 +295,9 @@ object Corpus {
     * Both probes are equi-joins on (band, sig)/hash keys; the band
     * relation is checkpointed once for its two consumers. */
   def dedupIncremental(docs: DataFrame): DataFrame = {
-    // freshLeaf: a bare checkpoint leaf's size estimate varies with
-    // in-memory block layout and can flip the probe joins between
-    // broadcast and shuffled across runs (the q_modularity lesson,
-    // Graph.checkpointLeaf) — reset to deterministic stats; AQE still
-    // upgrades from exact shuffle sizes at runtime
-    val bands = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-      Text.portableBands(docs).localCheckpoint())
+    // a leaf, not a bare checkpoint: deterministic stats keep the
+    // probe joins' plan fixed across runs (see Iterate.leaf)
+    val bands = Iterate.leaf(Text.portableBands(docs))
     val hist = bands.filter(HistPred(col("doc_id")))
       .select(col("band").as("hb"), col("band_sig").as("hs")).distinct()
     val hits = bands.filter(!HistPred(col("doc_id")))
@@ -597,10 +593,11 @@ object Corpus {
     * identical semantics in Spark and DuckDB and reproduces the
     * greedy leftmost-first merge fold ("aaa" + (a,a) → [aa, a]).
     * All statistics are exact integers; there is no float anywhere.
-    * Loop state is the vocab relation, checkpointed per round (the
-    * kCore idiom — each vocab feeds both the next round's pair count
-    * and the replace, and an uncheckpointed chain would recompute
-    * 2^rounds subplans). Words are guarded to ^[a-z]+$ (both
+    * Loop state is the vocab relation, cut by [[Iterate.leaf]] per
+    * round (each vocab feeds both the next round's pair count and the
+    * replace, and an uncut chain would recompute 2^rounds subplans);
+    * the loop stays hand-written because each round's rule is cut
+    * too and outlives the loop. Words are guarded to ^[a-z]+$ (both
     * engines) so the separator can never collide with a symbol. */
   def bpeMerges(docs: DataFrame, rounds: Int = BpeRounds): DataFrame =
     bpeMergesFromFreq(docs
@@ -613,13 +610,11 @@ object Corpus {
     * (it re-aggregates its per-source rollup into the training
     * frequencies instead of exploding the text a second time). */
   private def bpeMergesFromFreq(wordFreq: DataFrame, rounds: Int): DataFrame = {
-    def cut(df: DataFrame) =
-      org.apache.spark.sql.GraftColumnBridge.freshLeaf(df.localCheckpoint())
-    var vocab = cut(wordFreq
+    var vocab = Iterate.leaf(wordFreq
       .select(regexp_replace(col("word"), "(.)", "~$1").as("ws"), col("freq")))
     var rules: DataFrame = null
     for (round <- 1 to rounds) {
-      val rule = cut(vocab
+      val rule = Iterate.leaf(vocab
         .select(col("freq"),
           expr("filter(split(ws, '~'), s -> s != '')").as("symbols"))
         // fully-merged (1-symbol) words have no pairs; without the
@@ -635,21 +630,18 @@ object Corpus {
         .orderBy(col("f").desc, col("l"), col("r")).limit(1)
         .select(lit(round).as("round"), col("l"), col("r"), col("f")))
       rules = if (rules == null) rule else rules.unionByName(rule)
-      val prev = vocab
       // LEFT join on true, not a cross join: when the corpus exhausts
       // learnable pairs before `rounds` (rule relation EMPTY), a cross
       // join would annihilate the vocab state; the left join keeps it
       // unchanged (null rule → identity apply), so later rounds see
       // the real vocab and the loop is a no-op instead of a wipe.
-      vocab = cut(vocab.join(broadcast(rule), lit(true), "left")
+      vocab = Iterate.leaf(vocab.join(broadcast(rule), lit(true), "left")
         .select(when(col("l").isNull, col("ws"))
             .otherwise(replace(col("ws"),
               concat(lit("~"), col("l"), lit("~"), col("r")),
               concat(lit("~"), col("l"), col("r")))).as("ws"),
           col("freq")))
-      prev.unpersist()
     }
-    vocab.unpersist()
     rules
       .select(col("round"), col("l").as("merge_left"),
         col("r").as("merge_right"), col("f").as("pair_freq"))
@@ -676,11 +668,10 @@ object Corpus {
     // tokenize ONCE: the per-source rollup re-aggregates into the
     // corpus-wide training frequencies (identical integers), so the
     // raw text is exploded a single time for train AND apply
-    val words = org.apache.spark.sql.GraftColumnBridge.freshLeaf(docs
+    val words = Iterate.leaf(docs
       .select(col("source"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint())
+      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt")))
     val rules = bpeMergesFromFreq( // 1 row per round, checkpoint-backed
       words.groupBy(col("word")).agg(sum(col("cnt")).as("freq")), rounds)
     var vocab = words.select(col("word")).distinct()

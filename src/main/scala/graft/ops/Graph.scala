@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -80,18 +80,6 @@ object Graph {
   def coEdges(s: SparkSession, d: String): DataFrame =
     weightedCoEdges(s, d).select(col("u"), col("v"))
 
-  /** Triangle broadcast ceiling: below it the (deg, id)-oriented
-    * out-adjacency arrays (m longs total — out-degrees are ≤ √(2m)
-    * under the orientation) ship to every task and each oriented edge
-    * closes its triangles by one in-row array intersection — nothing
-    * O(m^1.5)-sized ever materializes or shuffles (the old broadcast
-    * regime still BUILT the 34×-edge-count wedge relation and probed
-    * a hash per wedge; see triRelation). Past the gate the plan
-    * degrades to the shuffled wedge stream + closing equi-join — at
-    * web scale the adjacency outgrows any broadcast ceiling and
-    * wedges must move. Same gate class as PageRank.BroadcastMaxNodes. */
-  val BroadcastMaxEdges = 4000000L
-
   /** The (x, y, z) triangle relation over a MATERIALIZED edge
     * relation — each triangle appears exactly once, keyed at its
     * (deg, id)-minimum vertex x.
@@ -139,7 +127,7 @@ object Graph {
     // exchange), so its three consumers (the stream and both adjacency
     // builds) recompute only a map-side pass over the checkpoint leaf.
     val broadcastDeg = edgeCount <= maxBroadcastEdges
-    def gateB(df: DataFrame) = if (broadcastDeg) broadcast(df) else df
+    val gateB = Iterate.broadcastIf(broadcastDeg)
     val du = gateB(deg.select(col("n").as("u"), col("deg").as("du")))
     val dv = gateB(deg.select(col("n").as("v"), col("deg").as("dv")))
     val toV = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
@@ -178,7 +166,7 @@ object Graph {
     * asserted — GraphSpec pins both regimes produce identical
     * counts. */
   def triangleCounts(edges: DataFrame,
-      maxBroadcastEdges: Long = BroadcastMaxEdges): DataFrame = {
+      maxBroadcastEdges: Long = Iterate.BroadcastMaxRows): DataFrame = {
     // materialize once for triRelation's multiple references + count
     // job — unless already leaf-backed (see leafOr); the closing
     // join's broadcast stays EXPLICIT (size-gated in triRelation)
@@ -251,9 +239,9 @@ object Graph {
       mod: Long = TriSampleMod, residue: Long = TriSampleResidue): DataFrame = {
     val e = leafOr(edges)
     val nEdges = e.agg(count(lit(1)).as("n_edges"))
-    val sampled = checkpointLeaf(e.filter(triSampleKeep(col("u"), col("v"), mod, residue)))
+    val sampled = Iterate.leaf(e.filter(triSampleKeep(col("u"), col("v"), mod, residue)))
     val nSampled = sampled.agg(count(lit(1)).as("n_sampled"))
-    val triS = triRelation(sampled, BroadcastMaxEdges)
+    val triS = triRelation(sampled, Iterate.BroadcastMaxRows)
       .agg(count(lit(1)).as("tri_sampled"))
     nEdges.crossJoin(broadcast(nSampled)).crossJoin(broadcast(triS))
       .select(col("n_edges"), col("n_sampled"), col("tri_sampled"),
@@ -302,7 +290,7 @@ object Graph {
   private[graft] def triExecutions = triMemo.executions
 
   private def triCountsShared(s: SparkSession, d: String): DataFrame =
-    triMemo.get(s, d)(checkpointLeaf(triangleCounts(coEdges(s, d))))
+    triMemo.get(s, d)(Iterate.leaf(triangleCounts(coEdges(s, d))))
 
   def triangles(s: SparkSession, d: String): DataFrame =
     triCountsShared(s, d).orderBy(col("node"))
@@ -325,7 +313,7 @@ object Graph {
     * edges (GraphSpec's hand-solved graphs don't route through the
     * session memo — the [[modularityCore]] convention). */
   private[graft] def clusteringCoeffCore(edges: DataFrame): DataFrame = {
-    val e = checkpointLeaf(edges)
+    val e = Iterate.leaf(edges)
     clusteringFrom(e, triangleCounts(e))
   }
 
@@ -352,50 +340,31 @@ object Graph {
     * profile graph jobs read before picking algorithms, and the
     * classic community-detection / spam-filter primitive.
     *
-    * Loop mechanics are the [[Components]] idiom: the surviving edge
-    * count is observe()d on each round's own localCheckpoint job (no
-    * second action per round), lineage is cut every round so the plan
-    * stays O(1)-deep, `freshLeaf` resets the stats estimate the
-    * self-joins would otherwise compound, and non-convergence fails
-    * loudly. One up-front count seeds the convergence compare (the
-    * PageRank one-count-per-query precedent). */
+    * The loop runs on [[Iterate.untilStable]]: the surviving edge
+    * count rides each round's own checkpoint job, a round that deletes
+    * nothing is the fixed point, and non-convergence fails loudly. One
+    * up-front count seeds the convergence compare (the PageRank
+    * one-count-per-query precedent). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // leafOr (r12 second pass): the declared query feeds the session
     // memo's leaf — an unconditional checkpoint re-copied all m rows
     // before the first peel round for nothing (round 1 scans the leaf
-    // either way; prev.unpersist() is CacheManager-only and never
-    // frees checkpoint blocks, so the shared leaf is safe)
-    var cur = leafOr(edges)
-    var before = cur.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
+    // either way)
+    val e = leafOr(edges)
+    val core = Iterate.untilStable("graft.kcore.edges", e, maxRounds,
+        _ => count(lit(1)).as("n_edges"), start = e.count(),
+        stable = (before, after) => after == before,
+        refuse = Some(s"kCore(k=$k)")) { (cur, _, _) =>
       val deg = cur.select(col("u").as("n"))
         .unionByName(cur.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k)
-      val obs = Observation(s"graft.kcore.edges.$round")
-      val prev = cur
-      cur = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        cur.join(keep.select(col("n").as("ku")), col("u") === col("ku"))
-          .join(keep.select(col("n").as("kv")), col("v") === col("kv"))
-          .select(col("u"), col("v"))
-          .observe(obs, count(lit(1)).as("n_edges"))
-          .localCheckpoint())
-      prev.unpersist()
-      val after = Option(obs.get("n_edges")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      converged = after == before
-      before = after
+      cur.join(keep.select(col("n").as("ku")), col("u") === col("ku"))
+        .join(keep.select(col("n").as("kv")), col("v") === col("kv"))
+        .select(col("u"), col("v"))
     }
-    if (!converged) {
-      cur.unpersist()
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not converge within $maxRounds peel rounds — " +
-          "refusing to return a non-fixed-point core")
-    }
-    cur.select(col("u").as("n")).unionByName(cur.select(col("v").as("n")))
+    core.select(col("u").as("n")).unionByName(core.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .select(col("n").as("node"), col("deg"))
       .orderBy(col("node"))
@@ -417,9 +386,8 @@ object Graph {
     * per-round shuffle volume is O(frontier adjacency), the property
     * that makes level-synchronous BFS the standard at cluster scale
     * (Pregel's canonical example). Convergence = empty frontier,
-    * observe()d on each round's own checkpoint job; loop mechanics are
-    * the [[Components]] idiom (lineage cut + `freshLeaf` stats reset
-    * per round, loud failure past `maxRounds`).
+    * observe()d on each round's own checkpoint job by
+    * [[Iterate.untilStable]], which fails loudly past `maxRounds`.
     *
     * Unreached nodes are absent from the output (no sentinel
     * distances), matching the oracle's min-propagation fixed point. */
@@ -430,57 +398,37 @@ object Graph {
     // a job to replace two leaf scans with one
     val sym = leafOr(edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
-    var visited = edges.sparkSession.range(1)
+    val init = edges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0).cast("int").as("dist"))
       .localCheckpoint()
-    var frontier = visited.select(col("node"))
-    var frontierSize = 1L
-    var round = 0
-    while (frontierSize > 0 && round < maxRounds) {
-      round += 1
+    Iterate.untilStable("graft.bfs.frontier", init, maxRounds,
+        round => count(when(col("dist") === round, 1)).as("n_new"),
+        refuse = Some(s"bfs(src=$src)")) { (visited, round, frontierSize) =>
+      val frontier =
+        if (round == 1) visited.select(col("node"))
+        else visited.filter(col("dist") === round - 1).select(col("node"))
       // the frontier's EXACT size is free (last round's observe), so
       // the broadcast decision needs no extra job: under the gate the
       // frontier ships to the adjacency's partitions and the 2|E|-row
       // sym relation never reshuffles — without this, the checkpoint's
       // conservative stats make every round sort-merge the full
       // adjacency. Past the gate (web-scale frontiers) the plan
-      // degrades to the shuffled equi-join, same class as
-      // PageRank.BroadcastMaxNodes.
-      val fr = if (frontierSize <= BfsBroadcastMaxFrontier) broadcast(frontier)
-               else frontier
-      val next = sym.join(fr, col("a") === col("node"))
+      // degrades to the shuffled equi-join.
+      val next = sym
+        .join(Iterate.broadcastIf(frontierSize <= Iterate.BroadcastMaxRows)(frontier),
+          col("a") === col("node"))
         .select(col("b").as("node")).distinct()
         .join(visited.select(col("node").as("vn")),
           col("node") === col("vn"), "left_anti")
         .select(col("node"), lit(round).cast("int").as("dist"))
-      val obs = Observation(s"graft.bfs.frontier.$round")
-      val prev = visited
-      visited = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        visited.unionByName(next)
-          .observe(obs, count(when(col("dist") === round, 1)).as("n_new"))
-          .localCheckpoint())
-      prev.unpersist()
-      frontierSize =
-        Option(obs.get("n_new")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      frontier = visited.filter(col("dist") === round).select(col("node"))
-    }
-    if (frontierSize > 0) {
-      visited.unpersist()
-      throw new IllegalStateException(
-        s"bfs(src=$src) still expanding after $maxRounds rounds — " +
-          "refusing to return truncated distances")
-    }
-    visited.orderBy(col("node"))
+      visited.unionByName(next)
+    }.orderBy(col("node"))
   }
 
   /** BFS source: node 0 co-occurs at every harness SF (part keys start
     * at 0) and reaches the whole graph within eccentricity 2–3 —
     * GraphSpec pins convergence within the oracle's 8-round unroll. */
   val BfsSource = 0L
-
-  /** Frontier-broadcast ceiling for [[bfs]] — same gate class as
-    * [[BroadcastMaxEdges]] and PageRank's node gate. */
-  val BfsBroadcastMaxFrontier = 4000000L
 
   /** Session-scoped memo of the BFS distance relation from
     * [[BfsSource]] (r6 verdict task 4): q_bfs and q_centrality consume
@@ -515,7 +463,7 @@ object Graph {
       val raw = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey"))
       val li = FanOut.when(raw)(raw.distinct(), col("ok"))
-      checkpointLeaf(li.select(col("ok"), col("l_partkey").as("u"))
+      Iterate.leaf(li.select(col("ok"), col("l_partkey").as("u"))
         .join(li.select(col("ok"), col("l_partkey").as("v")), Seq("ok"))
         .where(col("u") < col("v"))
         .groupBy(col("u"), col("v"))
@@ -532,46 +480,36 @@ object Graph {
     * not a heuristic: the oracle's r-round unrolled min-plus CTE
     * computes the identical relation by construction, converged or
     * not — so unlike [[bfs]] there is no truncation error to refuse
-    * on. Loop mechanics are the [[bfs]] idiom: per-round shuffle
-    * volume is O(frontier adjacency), improvement count observe()d on
-    * the round's own checkpoint job (no extra action), size-gated
-    * frontier broadcast, lineage cut + freshLeaf per round. At
-    * web scale the frontier outgrows the gate and the plan degrades
-    * to the shuffled equi-join — same class as BFS. */
+    * on, so [[Iterate.untilStable]] runs it without a refusal. Loop
+    * mechanics are the [[bfs]] idiom: per-round shuffle volume is
+    * O(frontier adjacency), improvement count observe()d on the round's
+    * own checkpoint job (no extra action), size-gated frontier
+    * broadcast. At web scale the frontier outgrows the gate and the
+    * plan degrades to the shuffled equi-join — same class as BFS. */
   def sssp(wedges: DataFrame, src: Long, rounds: Int = SsspRounds): DataFrame = {
     val sym = leafOr(wedges.select(col("u").as("a"), col("v").as("b"), col("w"))
       .unionByName(wedges.select(col("v").as("a"), col("u").as("b"), col("w"))))
-    var dist = wedges.sparkSession.range(1)
+    val init = wedges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0L).as("dist"))
       .localCheckpoint()
-    var frontier = dist
-    var frontierSize = 1L
-    var round = 0
-    while (frontierSize > 0 && round < rounds) {
-      round += 1
-      val fr = if (frontierSize <= BfsBroadcastMaxFrontier) broadcast(frontier)
-               else frontier
-      val cand = sym.join(fr, col("a") === col("node"))
+    Iterate.untilStable("graft.sssp.improved", init, rounds,
+        _ => count(when(col("improved"), 1)).as("n_impr")) { (dist, round, frontierSize) =>
+      val frontier =
+        if (round == 1) dist
+        else dist.filter(col("improved")).select(col("node"), col("dist"))
+      val cand = sym
+        .join(Iterate.broadcastIf(frontierSize <= Iterate.BroadcastMaxRows)(frontier),
+          col("a") === col("node"))
         .groupBy(col("b"))
         .agg(min(col("dist") + col("w")).as("cand"))
         .select(col("b").as("cn"), col("cand"))
       val better = col("dist").isNull ||
         (col("cand").isNotNull && col("cand") < col("dist"))
-      val obs = Observation(s"graft.sssp.improved.$round")
-      val prev = dist
-      dist = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        dist.join(cand, col("node") === col("cn"), "full_outer")
-          .select(coalesce(col("node"), col("cn")).as("node"),
-            when(better, col("cand")).otherwise(col("dist")).as("dist"),
-            better.as("improved"))
-          .observe(obs, count(when(col("improved"), 1)).as("n_impr"))
-          .localCheckpoint())
-      prev.unpersist()
-      frontierSize =
-        Option(obs.get("n_impr")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      frontier = dist.filter(col("improved")).select(col("node"), col("dist"))
-    }
-    dist.select(col("node"), col("dist")).orderBy(col("node"))
+      dist.join(cand, col("node") === col("cn"), "full_outer")
+        .select(coalesce(col("node"), col("cn")).as("node"),
+          when(better, col("cand")).otherwise(col("dist")).as("dist"),
+          better.as("improved"))
+    }.select(col("node"), col("dist")).orderBy(col("node"))
   }
 
   /** Round bound shared by [[sssp]] and its oracle unroll: ≤ 8-edge
@@ -733,7 +671,7 @@ object Graph {
     // task-time stages each re-reading the 21.7 MiB exchange). The
     // leaf is a narrow (a, b, rk, deg) projection of the edge
     // relation — the §5 cut-lineage-when-reused rule.
-    val adj = checkpointLeaf(sym
+    val adj = Iterate.leaf(sym
       .withColumn("rk", row_number().over(Window.partitionBy(col("a")).orderBy(col("b"))))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("a")))))
     // the walk frontier is |focal|·W rows (a 1% node sample × 2) and
@@ -742,8 +680,7 @@ object Graph {
     // exchange of either side); past the gate the steps degrade to
     // shuffled equi-joins, the triRelation gate class
     val focal = sym.select(col("a")).distinct().filter(col("a") % 100 === 7)
-    val doB = adj.count() <= BroadcastMaxEdges
-    def gate(df: DataFrame) = if (doB) broadcast(df) else df
+    val gate = Iterate.broadcastIf(adj.count() <= Iterate.BroadcastMaxRows)
     val walks0 = focal.select(col("a").as("start"),
         explode(sequence(lit(0), lit(WalksPerNode - 1))).as("walk"))
       .select(col("start"), col("walk"), col("start").as("cur"),
@@ -817,8 +754,8 @@ object Graph {
     // wedge expansion is one narrow codegen pass over the edge leaf;
     // past the gate the plan degrades to the shuffled joins exactly
     // as before (the triRelation/modularityFrom gate class).
-    val doB = broadcastGate.getOrElse(edges.count() <= BroadcastMaxEdges)
-    def gate(df: DataFrame) = if (doB) broadcast(df) else df
+    val gate = Iterate.broadcastIf(
+      broadcastGate.getOrElse(edges.count() <= Iterate.BroadcastMaxRows))
     val wz = sym.groupBy(col("z")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 2 && col("deg") <= maxDegree)
       .select(col("z"),
@@ -836,17 +773,17 @@ object Graph {
     * existing-edge exclusion, and the hub cap on hand-built graphs. */
   def linkPredictionCore(edges: DataFrame, topPerNode: Int,
       maxDegree: Long = MaxAaDegree): DataFrame = {
-    val e = checkpointLeaf(edges) // consumers: sym (×2 sides), anti-join; stats reset (see checkpointLeaf)
+    val e = Iterate.leaf(edges) // consumers: sym (×2 sides), anti-join
     // one leaf count drives every broadcast decision below (the
     // PageRank one-count-per-query precedent)
-    val doB = e.count() <= BroadcastMaxEdges
+    val doB = e.count() <= Iterate.BroadcastMaxRows
     val scored = aaWedges(e, maxDegree, Some(doB))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("common_neighbors"), sum(col("w")).as("aa_micros"))
     // under the gate the existing-edge exclusion builds the m-row edge
     // set once instead of sort-merging the scored relation against it
     // (77 MiB + 27 MiB exchanged at sf0.1); past it, SMJ as before
-    val fresh = scored.join(if (doB) broadcast(e) else e,
+    val fresh = scored.join(Iterate.broadcastIf(doB)(e),
       least(scored("a"), scored("b")) === e("u") &&
         greatest(scored("a"), scored("b")) === e("v"), "left_anti")
     val rn = row_number().over(
@@ -868,17 +805,16 @@ object Graph {
     * per-iteration division whose rounding could compound
     * cross-engine). Same scale mechanics as the PageRank family:
     * flat edges persisted once, size-gated score-vector broadcast
-    * (zero per-iteration shuffles under the gate), lineage cut +
-    * stats reset per half-step, totals as 1-row broadcasts. */
+    * (zero per-iteration shuffles under the gate), totals as 1-row
+    * broadcasts. Hand-written on [[Iterate.leaf]]: h is cut every
+    * iteration, a only after the last (see the loop). */
   def hits(s: SparkSession, d: String): DataFrame =
     hitsCore(PageRank.starEdgesDirected(s, d), 8)
 
   def hitsCore(edges: DataFrame, iterations: Int): DataFrame = {
     val e = edges.persist()
     val doBroadcast = PageRank.chooseBroadcast(e)
-    def gate(df: DataFrame) = if (doBroadcast) broadcast(df) else df
-    def cut(df: DataFrame) =
-      org.apache.spark.sql.GraftColumnBridge.freshLeaf(df.localCheckpoint())
+    val gate = Iterate.broadcastIf(doBroadcast)
     // dual loop-invariant layouts (r12 second pass, §2.4): the a-step
     // aggregates by dst and the h-step by src, so each half-step paid
     // one exchange of the edge relation per iteration — 2·iterations
@@ -904,12 +840,12 @@ object Graph {
       // cut like the final h.
       val aRaw = eByDst.join(gate(h), col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-      a = if (i == iterations) cut(aRaw) else aRaw
+      a = if (i == iterations) Iterate.leaf(aRaw) else aRaw
       // `ad`, not a("dst"): the lazy mid-loop a shares e's attribute
       // ids with eBySrc, so the df("dst") disambiguation would be an
       // ambiguous self-join — the rename makes the key unambiguous
       val aj = a.select(col("dst").as("ad"), col("a"))
-      h = cut(eBySrc.join(gate(aj), col("dst") === col("ad"))
+      h = Iterate.leaf(eBySrc.join(gate(aj), col("dst") === col("ad"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
         .select(col("src").as("node"), col("h")))
     }
@@ -954,25 +890,18 @@ object Graph {
     // front spent a job to replace them (the bfs/sssp sym rationale)
     val sym = leafOr(edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
-    val doBroadcast = sym.select(col("a")).distinct().count() <=
-      PageRank.BroadcastMaxNodes
-    def gate(df: DataFrame) = if (doBroadcast) broadcast(df) else df
-    def cut(df: DataFrame) =
-      org.apache.spark.sql.GraftColumnBridge.freshLeaf(df.localCheckpoint())
-    var labels = sym.select(col("a").as("node")).distinct()
+    val gate = Iterate.broadcastIf(
+      sym.select(col("a")).distinct().count() <= Iterate.BroadcastMaxRows)
+    val init = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
-      val prev = labels
-      labels = cut(
-        sym.join(gate(labels.withColumnRenamed("node", "ln")),
-            col("b") === col("ln"))
-          .groupBy(col("a"), col("label")).agg(count(lit(1)).as("n"))
-          .groupBy(col("a"))
-          .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("top"))
-          .select(col("a").as("node"), (-col("top.neg")).as("label")))
-      prev.unpersist()
+    Iterate.rounds(init, rounds) { labels =>
+      sym.join(gate(labels.withColumnRenamed("node", "ln")),
+          col("b") === col("ln"))
+        .groupBy(col("a"), col("label")).agg(count(lit(1)).as("n"))
+        .groupBy(col("a"))
+        .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("top"))
+        .select(col("a").as("node"), (-col("top.neg")).as("label"))
     }
-    labels
   }
 
   /** Session-scoped memo of the repeat co-purchase edge relation
@@ -1000,7 +929,7 @@ object Graph {
         .select(col("l_orderkey").as("ok"), col("l_partkey"))
       // same parallelism floor as weightedCoEdges' basket self-join
       val li = FanOut.when(raw)(raw, col("ok"))
-      checkpointLeaf(li.select(col("ok"), col("l_partkey").as("u"))
+      Iterate.leaf(li.select(col("ok"), col("l_partkey").as("u"))
         .join(li.select(col("ok"), col("l_partkey").as("v")), Seq("ok"))
         .where(col("u") < col("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
@@ -1072,44 +1001,29 @@ object Graph {
   /** Fixture face: runs its own LPA over the given edges (GraphSpec's
     * hand-solved graphs don't route through the session memo). */
   private[graft] def modularityCore(edges: DataFrame): DataFrame = {
-    val e = checkpointLeaf(edges)
+    val e = Iterate.leaf(edges)
     modularityFrom(e, labelPropagation(e))
   }
 
-  /** Materialize-and-reset: localCheckpoint for the re-use, freshLeaf
-    * for DETERMINISTIC stats. A bare localCheckpoint leaf carries a
-    * size estimate derived from its in-memory block layout — a number
-    * that varies run-to-run with JVM object overhead and spill state,
-    * which flipped one of q_modularity's label joins between
-    * broadcast and shuffled across otherwise identical executions
-    * (caught by PlanBudgetSpec's exact-equality gate). freshLeaf's
-    * default (conservative) estimate makes the INITIAL plan a pure
-    * function of the query; AQE still upgrades joins at runtime from
-    * exact shuffle byte counts, which are deterministic for fixed
-    * data. Applied to every bare checkpoint leaf that feeds a
-    * declared query's final plan. */
-  private def checkpointLeaf(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(df.localCheckpoint())
-
-  /** [[checkpointLeaf]] unless the relation is ALREADY leaf-backed
+  /** [[Iterate.leaf]] unless the relation is ALREADY leaf-backed
     * (every leaf a LogicalRDD — e.g. a projection of the session
     * memo's checkpoint): re-checkpointing such a relation copies O(m)
     * rows into fresh blocks and spends a whole job to buy nothing —
     * each consumer re-reads in-memory blocks either way, and the
-    * leaf's stats are already the conservative freshLeaf default
+    * leaf's stats are already the conservative [[Iterate.leaf]] default
     * (r12 profiling: the unconditional form re-copied the edge
     * relation once per triangle-family query). */
   private def leafOr(df: DataFrame): DataFrame = {
     val leafBacked = df.queryExecution.analyzed.collectLeaves()
       .forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    if (leafBacked) df else checkpointLeaf(df)
+    if (leafBacked) df else Iterate.leaf(df)
   }
 
   /** Moment assembly over an already-materialized edge relation and
     * its label partition (three consumers of `e`: m, intra, deg).
     *
     * The |V|-row label side joins under the SAME size-gated explicit
-    * broadcast the LPA loop uses (PageRank.BroadcastMaxNodes). Leaving
+    * broadcast the LPA loop uses ([[Iterate.BroadcastMaxRows]]). Leaving
     * the choice to AQE here was correct in outcome but NONDETERMINISTIC
     * in the recorded plan: the intra branch stacks two label joins, and
     * whether the second join's streamed-side shuffle materialized
@@ -1120,8 +1034,7 @@ object Graph {
     * shuffle is never submitted; past the gate it degrades to the
     * shuffled join exactly like the loop itself. */
   private def modularityFrom(e: DataFrame, labels: DataFrame): DataFrame = {
-    val gate: DataFrame => DataFrame =
-      if (labels.count() <= PageRank.BroadcastMaxNodes) broadcast else identity
+    val gate = Iterate.broadcastIf(labels.count() <= Iterate.BroadcastMaxRows)
     val m = e.agg(count(lit(1)).as("m"))
     val intra = e
       .join(gate(labels.select(col("node").as("u"), col("label").as("lu"))), Seq("u"))

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * is O(1) regardless of a node's fan-out (the 100 TB-safe shape; the
   * reference's `groupByKey` would OOM on a celebrity node). Loop
   * invariants (`edges`, `degrees`) are cached (C2, `task3/task3.py:37`)
-  * and each iteration ends in `localCheckpoint` to truncate the
-  * 10-deep lineage (C3, the task4 fault-tolerance experiment).
+  * and the loop is cut by [[Iterate.leaf]] to truncate the 10-deep
+  * lineage (C3, the task4 fault-tolerance experiment).
   */
 object PageRank {
 
@@ -37,6 +37,15 @@ object PageRank {
         split(col("value"), "\t").getItem(0).as("src"),
         split(col("value"), "\t").getItem(1).as("dst"))
 
+  /** The broadcast decision: one count of distinct endpoints over the
+    * (persisted) edge relation — an upper bound on every iteration's
+    * rank-vector size (the init vector is src-keyed, later ones
+    * dst-keyed). localCheckpoint leaves ranks with an unknown size
+    * estimate, so Catalyst/AQE can't make this call on its own. */
+  private[graft] def chooseBroadcast(e: DataFrame): Boolean =
+    e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
+      .distinct().count() <= Iterate.BroadcastMaxRows
+
   /** The iterative core. `edges(src, dst)` of any key type.
     *
     * `numPartitions > 0` reproduces the reference's partition-sweep
@@ -46,30 +55,13 @@ object PageRank {
     * per-iteration `edges ⋈ ranks` probe. Results are partition-count
     * invariant (PageRankSpec pins this) — only shuffle layout changes.
     *
-    * Lineage is truncated every 3rd iteration rather than every one:
-    * each eager `localCheckpoint` is a full materialization job, and
-    * a 3-deep join/agg lineage replans cheaply — same recompute-bound
-    * idea as C3, a third of the checkpoint cost. */
-  /** Broadcast ceiling for the per-iteration rank vector. A rank row
-    * is a key + a double (~24 B serialized): 4M nodes ≈ 100 MB
-    * broadcast — a safe per-executor footprint. Under the ceiling,
-    * shipping the vector beats shuffling the (much larger) edge
-    * relation into a sort-merge join ×10 iterations; past it (the
-    * billion-node graphs a 100 TB corpus implies) the broadcast would
-    * be a 10×-repeated driver round-trip that eventually fails
-    * outright, so the loop falls back to the shuffle join. */
-  val BroadcastMaxNodes = 4000000L
-
-  /** The broadcast decision: one count of distinct endpoints over the
-    * (persisted) edge relation — an upper bound on every iteration's
-    * rank-vector size (the init vector is src-keyed, later ones
-    * dst-keyed). localCheckpoint leaves ranks with an unknown size
-    * estimate, so Catalyst/AQE can't make this call on its own. */
-  private[graft] def chooseBroadcast(e: DataFrame): Boolean =
-    e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
-      .distinct().count() <= BroadcastMaxNodes
-
-  /** `broadcastRanks`: None (default) size-gates per [[chooseBroadcast]];
+    * Lineage is truncated every 3rd iteration (and after the last)
+    * rather than every one: each eager `localCheckpoint` is a full
+    * materialization job, and a 3-deep join/agg lineage replans
+    * cheaply — same recompute-bound idea as C3, a third of the
+    * checkpoint cost.
+    *
+    * `broadcastRanks`: None (default) size-gates per [[chooseBroadcast]];
     * Some(b) forces the choice (spec bracketing). */
   def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0,
       broadcastRanks: Option[Boolean] = None): DataFrame = {
@@ -78,6 +70,7 @@ object PageRank {
       else edges
     val e = laidOut.persist()
     val doBroadcast = broadcastRanks.getOrElse(chooseBroadcast(e))
+    val gate = Iterate.broadcastIf(doBroadcast)
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // the edges ⋈ degrees join is loop-invariant: materialize it once
     // instead of recomputing it in all 10 iterations. In the broadcast
@@ -97,21 +90,15 @@ object PageRank {
       if (numPartitions > 0) withDegRaw.repartition(numPartitions, col("dst"))
       else withDegRaw.repartition(col("dst"))
     } else withDegRaw).persist()
-    var ranks = withDeg.select(col("src").as("node")).distinct()
+    val init = withDeg.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("pr"))
-    for (i <- 1 to iterations) {
-      val rankSide = if (doBroadcast) broadcast(ranks) else ranks
-      val contribs = withDeg
-        .join(rankSide, col("src") === col("node"))
+    val ranks = Iterate.rounds(init, iterations, cutEvery = 3) { ranks =>
+      withDeg
+        .join(gate(ranks), col("src") === col("node"))
         .select(col("dst"), (col("pr") / col("deg")).as("contrib"))
-      ranks = contribs.groupBy(col("dst"))
+        .groupBy(col("dst"))
         .agg((lit(0.15) + lit(0.85) * sum(col("contrib"))).as("pr"))
         .select(col("dst").as("node"), col("pr"))
-      // freshLeaf: localCheckpoint preserves the source plan's stats
-      // estimate into the LogicalRDD; resetting it keeps iteration
-      // plans' estimates O(1)-sized (see GraftColumnBridge.freshLeaf)
-      if (i % 3 == 0 || i == iterations)
-        ranks = org.apache.spark.sql.GraftColumnBridge.freshLeaf(ranks.localCheckpoint())
     }
     // ranks is checkpointed (no lineage back to the invariants) —
     // release them instead of leaking cache entries per run
@@ -127,9 +114,15 @@ object PageRank {
     * dangling (no-out-edge) mass is redistributed uniformly:
     * pr' = 0.15/N + 0.85·(Σ contribs + danglingMass/N), so total mass
     * is conserved at 1.0 per iteration. Same scale shape as [[run]]:
-    * flat edges, O(1) rows, invariants persisted, lineage cut every
-    * 3rd iteration; the dangling mass flows back as a 1-row broadcast,
-    * never a collect. */
+    * flat edges, O(1) rows, invariants persisted; the dangling mass
+    * flows back as a 1-row broadcast, never a collect.
+    *
+    * Unlike [[run]] (one consumer of ranks per iteration, so a cut
+    * every 3rd), ranks here feeds TWO consumers next iteration
+    * (contribs and the dangling-mass aggregate): left lazy, the
+    * shared subplan re-executes per consumer and the plan fans out
+    * ~2^k between cuts (measured 18 s vs ~7 s at sf0.1), so the loop
+    * cuts every iteration. */
   def runTextbook(edges: DataFrame, iterations: Int = 10): DataFrame = {
     val e = edges.persist()
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -138,7 +131,8 @@ object PageRank {
     // the 1/N init needs |nodes| anyway, and it equals chooseBroadcast's
     // endpoint bound — one count serves both (no second distinct job)
     val n = nodes.count().toDouble
-    val doBroadcast = n <= BroadcastMaxNodes
+    val doBroadcast = n <= Iterate.BroadcastMaxRows
+    val gate = Iterate.broadcastIf(doBroadcast)
     // same dst-layout rule as [[run]]: under broadcast the streamed
     // edge side carries its partitioning through the join, so the
     // per-iteration contribs agg shuffles nothing
@@ -150,9 +144,9 @@ object PageRank {
     // leak (the quirk variant deliberately loses it)
     val dangling = nodes.join(
       degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("pr"))
-    for (i <- 1 to iterations) {
-      val rankSide = if (doBroadcast) broadcast(ranks) else ranks
+    val ranks = Iterate.rounds(nodes.select(col("node"), lit(1.0 / n).as("pr")),
+        iterations) { ranks =>
+      val rankSide = gate(ranks)
       val contribs = withDeg
         .join(rankSide, col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
@@ -162,22 +156,12 @@ object PageRank {
       // so Catalyst can't choose broadcast on its own)
       val dm = dangling.join(rankSide, "node")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      val contribSide = if (doBroadcast) broadcast(contribs) else contribs
-      ranks = nodes
-        .join(contribSide, col("node") === col("dst"), "left")
+      nodes
+        .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
           (lit(0.15 / n) + lit(0.85) *
             (coalesce(col("c"), lit(0.0)) + col("dm") / lit(n))).as("pr"))
-      // unlike the quirk loop (one consumer per iteration → checkpoint
-      // every 3rd), ranks here feeds TWO consumers next iteration
-      // (contribs and the dangling-mass aggregate): left lazy, the
-      // shared subplan re-executes per consumer and the plan fans out
-      // ~2^k between checkpoints (measured 18 s vs ~7 s at sf0.1), so
-      // materialize every iteration. freshLeaf because the 2-consumer
-      // shape also DOUBLES the checkpoint-inherited stats estimate per
-      // iteration (see GraftColumnBridge.freshLeaf).
-      ranks = org.apache.spark.sql.GraftColumnBridge.freshLeaf(ranks.localCheckpoint())
     }
     e.unpersist(); withDeg.unpersist(); nodes.unpersist(); dangling.unpersist()
     ranks
@@ -190,17 +174,17 @@ object PageRank {
     * so the stationary distribution ranks the graph BY PROXIMITY TO
     * THE SEED (on the directed customer→supplier star this is the
     * seed customer's supplier-affinity profile). Same scale mechanics
-    * as [[runTextbook]]: invariants persisted, size-gated rank
-    * broadcast, per-iteration lineage cut with stats reset; the seed
-    * indicator is a pure column expression — no extra join, no
-    * collect. */
+    * as [[runTextbook]], including its cut every iteration: invariants
+    * persisted, size-gated rank broadcast; the seed indicator is a
+    * pure column expression — no extra join, no collect. */
   def runPersonalized(edges: DataFrame, seed: Long, iterations: Int = 10): DataFrame = {
     val e = edges.persist()
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct().persist()
-    val doBroadcast = nodes.count() <= BroadcastMaxNodes
+    val doBroadcast = nodes.count() <= Iterate.BroadcastMaxRows
+    val gate = Iterate.broadcastIf(doBroadcast)
     val withDegRaw = e.join(degrees, "src")
       .select(col("src"), col("dst"), col("deg"))
     val withDeg =
@@ -209,24 +193,20 @@ object PageRank {
       degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
     def seedInd(c: org.apache.spark.sql.Column) =
       when(c === seed, lit(1.0)).otherwise(lit(0.0))
-    var ranks = nodes.select(col("node"), seedInd(col("node")).as("pr"))
-    for (_ <- 1 to iterations) {
-      val rankSide = if (doBroadcast) broadcast(ranks) else ranks
+    val ranks = Iterate.rounds(nodes.select(col("node"), seedInd(col("node")).as("pr")),
+        iterations) { ranks =>
+      val rankSide = gate(ranks)
       val contribs = withDeg
         .join(rankSide, col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
       val dm = dangling.join(rankSide, "node")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      val contribSide = if (doBroadcast) broadcast(contribs) else contribs
-      // same two-consumer materialize-every-iteration rule as
-      // runTextbook (contribs + dangling both read ranks)
-      ranks = org.apache.spark.sql.GraftColumnBridge.freshLeaf(nodes
-        .join(contribSide, col("node") === col("dst"), "left")
+      nodes
+        .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
           (lit(0.15) * seedInd(col("node")) + lit(0.85) *
             (coalesce(col("c"), lit(0.0)) + col("dm") * seedInd(col("node")))).as("pr"))
-        .localCheckpoint())
     }
     e.unpersist(); withDeg.unpersist(); nodes.unpersist(); dangling.unpersist()
     ranks
@@ -304,19 +284,17 @@ object PageRank {
     val header = s.range(1).select(lit("# FromNodeId\tToNodeId").as("value"))
     // two consumers below (dict build + encode): materialize the
     // parse once
-    val parsed = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-      parseEdgeLines(header.unionByName(lines)).localCheckpoint())
-    val dict = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
+    val parsed = Iterate.leaf(parseEdgeLines(header.unionByName(lines)))
+    val dict = Iterate.leaf(
       parsed.select(col("src").as("name"))
         .unionByName(parsed.select(col("dst").as("name")))
         .distinct()
-        .select(col("name"), monotonically_increasing_id().as("nid"))
-        .localCheckpoint())
+        .select(col("name"), monotonically_increasing_id().as("nid")))
     // the dict row count IS chooseBroadcast's endpoint bound — one
     // count serves the encode joins, the decode join AND the loop
     // (whose own distinct-count job it replaces)
-    val doBroadcast = dict.count() <= BroadcastMaxNodes
-    def gate(df: DataFrame) = if (doBroadcast) broadcast(df) else df
+    val doBroadcast = dict.count() <= Iterate.BroadcastMaxRows
+    val gate = Iterate.broadcastIf(doBroadcast)
     val enc = parsed
       .join(gate(dict.select(col("name").as("src"), col("nid").as("nsrc"))), Seq("src"))
       .join(gate(dict.select(col("name").as("dst"), col("nid").as("ndst"))), Seq("dst"))

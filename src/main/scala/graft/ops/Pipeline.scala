@@ -155,8 +155,7 @@ object Pipeline {
     // every decision stage below reads the 15 MB-per-30k-chunks leaf,
     // and chunk TEXT is recomputed only by the packing branch that
     // actually needs it
-    val vecs = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-      vecsOf(chunks).localCheckpoint())
+    val vecs = Iterate.leaf(vecsOf(chunks))
     // transitive closure: a chunk keys to the min cid of its cluster
     val edges = edgesOf(vecs, narrowSrc)
     val comps = Components.connectedComponents(edges)

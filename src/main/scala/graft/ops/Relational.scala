@@ -1544,9 +1544,8 @@ object Relational {
     // back. The χ² total sums the same ≤dozens of doubles in a
     // different order — ULP noise ~1e-12 against round(4)'s 5e-5,
     // the documented tolerance.
-    val obs = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-      pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("n"))
-        .localCheckpoint())
+    val obs = Iterate.leaf(
+      pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("n")))
     // densify: a zero-observed cell still contributes (0−E)²/E = E, so
     // the grid is the distinct-a × distinct-b cross (bounded by level
     // cardinalities, not data volume)
@@ -2009,8 +2008,7 @@ object Relational {
       .agg((sum(col("rev")) * 10000).cast("long").as("rev_e4"))
 
   def tpchTopSupplier(s: SparkSession, d: String): DataFrame = {
-    val perSupp = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-      topSupplierRollup(s, d).localCheckpoint())
+    val perSupp = Iterate.leaf(topSupplierRollup(s, d))
     perSupp
       .crossJoin(broadcast(perSupp.agg(max(col("rev_e4")).as("max_rev_e4"))))
       .filter(col("rev_e4") === col("max_rev_e4"))

@@ -380,8 +380,7 @@ object Text {
     // documents scan, and the presentation sort's range-bounds sample
     // re-ran the agg+jaccard segment (profiled as twin stages) — the
     // dedupPrefix treatment
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        ngramVerified(s, d).localCheckpoint())
+    Iterate.leaf(ngramVerified(s, d))
       .orderBy(col("da"), col("db"))
 
   /** IDF-filtered n-gram Jaccard (the at-scale variant of
@@ -409,8 +408,7 @@ object Text {
 
   def dedupNgramIdf(s: SparkSession, d: String): DataFrame =
     // same FanOut + materialize-before-sort rationale as [[dedupNgram]]
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(
-        ngramIdfVerified(s, d).localCheckpoint())
+    Iterate.leaf(ngramIdfVerified(s, d))
       .orderBy(col("da"), col("db"))
 
   /** Prefix-filtered exact Jaccard (the LOSSLESS at-scale rendering of
@@ -459,7 +457,7 @@ object Text {
     // presentation sort's range-bounds sample otherwise re-runs the
     // candidate + intersect segment — profiled as twin ~3.5 s-task
     // stages
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(verified.localCheckpoint())
+    Iterate.leaf(verified)
       .orderBy(col("da"), col("db"))
   }
 
@@ -627,7 +625,7 @@ object Text {
     // materialize the tiny scored relation once (r12): the
     // presentation sort's range-bounds sample otherwise re-runs the
     // whole DP segment — profiled as twin ~1 s stages
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(scored.localCheckpoint())
+    Iterate.leaf(scored)
       .orderBy(col("da"), col("db"))
   }
 
@@ -1714,15 +1712,14 @@ object Text {
         .join(sh.select(col("doc_id").as("db"), col("g"), col("n").as("nb")), Seq("g"))
         .filter(col("da") < col("db")),
       col("da"), col("db"))
-    val verified = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
+    val verified = Iterate.leaf(
       paired
         .groupBy(col("da"), col("db"))
         .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
           count(lit(1)).as("inter"))
         .withColumn("cont_a", round(col("inter") / col("na").cast("double"), 6))
         .withColumn("cont_b", round(col("inter") / col("nb").cast("double"), 6))
-        .filter(col("cont_a") >= 0.8 || col("cont_b") >= 0.8)
-        .localCheckpoint())
+        .filter(col("cont_a") >= 0.8 || col("cont_b") >= 0.8))
     verified
       .select(col("da"), col("db"), col("na"), col("nb"), col("inter"),
         col("cont_a"), col("cont_b"))

@@ -642,7 +642,7 @@ object Vectors {
     }
     // eager checkpoint cuts the lineage back to cand, so the cache
     // can be released before the caller's action re-executes the plan
-    val fin = org.apache.spark.sql.GraftColumnBridge.freshLeaf(selected.localCheckpoint())
+    val fin = Iterate.leaf(selected)
     cand.unpersist()
     fin.select(col("pick"), col("vec_id"),
         round(col("cos_q"), 6).as("cos_q"), round(col("mmr"), 6).as("mmr"))

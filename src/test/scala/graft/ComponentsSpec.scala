@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Components, Text}
+import graft.ops.{Components, Graph, Text}
 
 /** Connected components + the transitive-closure MinHash clustering
   * built on it. */
@@ -26,6 +26,15 @@ class ComponentsSpec extends SparkSpec {
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
       Components.connectedComponents(edges, maxIterations = 2)
+    }
+    // the other fixed-point loops refuse the same way: a 2-core peels a
+    // chain one node per end per round, BFS reaches one hop per round
+    val chain = edges.select($"src".as("u"), $"dst".as("v"))
+    intercept[IllegalStateException] {
+      Graph.kCore(chain, k = 2, maxRounds = 2)
+    }
+    intercept[IllegalStateException] {
+      Graph.bfs(chain, src = 1L, maxRounds = 2)
     }
   }
 
