@@ -310,16 +310,7 @@ object InvariantGates {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val bigDir = args.lift(1).getOrElse("/root/repo/scale_data/sf10")
     val factor = args.lift(2).map(_.toLong).getOrElse(100L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(partitions = 32)
     val results = allGates(spark, baseDir, bigDir, factor)
     val failed = results.filterNot(_.ok)
     println(s"INVARIANTS ${results.count(_.ok)}/${results.size} OK" +

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** The physical-plan features that matter at scale, extracted from an
-  * EXECUTED query's final adaptive plan — shared by the [[PlanAudit]]
-  * dev tool and the PlanBudgetSpec regression gate (r5 verdict task
+  * EXECUTED query's final adaptive plan — shared by `graft.Dev
+  * counters` and the PlanBudgetSpec regression gate (r5 verdict task
   * 1: ~45 queries had bespoke PlanSpec pins; the other ~177 could
   * silently lose a ReusedExchange or flip a broadcast to SMJ and
   * still pass every oracle).
@@ -28,6 +28,10 @@ object PlanCounters {
   val header: String =
     "query\tshuffles\trangeX\treused\tscans\tmemscans\texplodes\tbcast\tcodegen"
 
+  /** One query's `plan_budgets.tsv` line — the format PlanBudgetSpec
+    * records and `graft.Dev counters` prints, so the two diff directly. */
+  def budgetLine(query: String, c: Counters): String = s"$query\t${c.tsv}"
+
   def parse(fields: Array[String]): Counters = Counters(
     fields(0).toInt, fields(1).toInt, fields(2).toInt, fields(3).toInt,
     fields(4).toInt, fields(5).toInt, fields(6).toInt, fields(7).toInt)
@@ -36,16 +40,8 @@ object PlanCounters {
     * the audited AdaptiveSparkPlan is the one that actually ran) and
     * counts the features on the final plan. */
   def measure(df: DataFrame): Counters = {
-    val qe = df.queryExecution
-    qe.toRdd.foreach(_ => ())
-    // AdaptiveSparkPlan.toString appends the pre-adaptive plan under
-    // "== Initial Plan ==" — keep only the final plan or every
-    // feature double-counts
-    val full = qe.executedPlan.toString
-    val p = full.indexOf("== Initial Plan ==") match {
-      case -1 => full
-      case i => full.substring(0, i)
-    }
+    df.queryExecution.toRdd.foreach(_ => ())
+    val p = finalPlan(df)
     def n(pat: String) = pat.r.findAllIn(p).length
     Counters(
       shuffles = n("Exchange hashpartitioning"),
@@ -56,5 +52,16 @@ object PlanCounters {
       explodes = n("Generate explode"),
       bcast = n("BroadcastExchange"),
       codegen = n("\\*\\("))
+  }
+
+  /** The executed plan's text without the pre-adaptive plan that
+    * AdaptiveSparkPlan.toString appends under "== Initial Plan =="
+    * (counting over both would double-count every feature). */
+  def finalPlan(df: DataFrame): String = {
+    val full = df.queryExecution.executedPlan.toString
+    full.indexOf("== Initial Plan ==") match {
+      case -1 => full
+      case i => full.substring(0, i)
+    }
   }
 }

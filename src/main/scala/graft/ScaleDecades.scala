@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-decade timing gate (r7 verdict task 4): every scale slope in
   * the record through r7 spans ONE decade (sf0.1 -> sf1). A plan can
   * look linear over one decade and still hide a superlinear term that
@@ -87,34 +85,9 @@ object ScaleDecades {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
       sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/repo/scale_data/sf1"),
       sys.env.getOrElse("SPARK_GRAFT_SF_BIG2", "/root/repo/scale_data/sf10"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadAvg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-
-    def timedOnce(name: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      ops.Graph.clearMemos()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[decades] $name @ $dir failed: ${e.getMessage}"); false }
-      spark.catalog.clearCache()
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
+    val spark = Harness.session(partitions = 32)
+    def timedOnce(name: String, dir: String): Double =
+      Harness.timedOnce(spark, "decades", name, SparkEntry.queries(name), dir)
     def timed(name: String, dir: String): Double = {
       timedOnce(name, dir) // untimed warm-up: JIT/codegen/scan-index
       // A -1 (crash/OOM) sample must not poison a successful twin
@@ -148,9 +121,8 @@ object ScaleDecades {
       if (decade <= 0) d1 else d2
     }
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(qs: Seq[String]) = only.fold(qs)(names => qs.filter(names))
+    val chosen = Harness.select().keySet
+    def selected(qs: Seq[String]) = qs.filter(chosen)
 
     // the pair-listing dedup family runs its big tiers on the MUTATED
     // clone corpus (see MutatedBothDecades); absent dirs are a loud
@@ -168,9 +140,9 @@ object ScaleDecades {
         selected(FirstDecadeOnly).map(q => (q, dirs, 2)) ++
         (if (mutReady) selected(MutatedBothDecades).map(q => (q, mutDirs, 3))
          else Seq.empty)).map { case (q, qDirs, nTiers) =>
-      val l0 = loadAvg
+      val l0 = Harness.loadAvg
       val ts = qDirs.take(nTiers).map(d => timed(q, d))
-      val l1 = loadAvg
+      val l1 = Harness.loadAvg
       val slopes = ts.sliding(2).map {
         case Seq(a, b) if a > 0 && b > 0 => b / a
         case _ => -1.0

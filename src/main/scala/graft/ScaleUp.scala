@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× scale-up of a harness SF (r5 verdict task 3):
@@ -123,15 +123,7 @@ object ScaleUp {
     val outDir = args.lift(1).getOrElse("/root/repo/scale_data/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val mutateDocs = args.lift(3).contains("--mutate-docs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     keyCols.foreach { case (t, keys) =>
       val src = spark.read.parquet(s"$srcDir/$t.parquet")
       val scaled =

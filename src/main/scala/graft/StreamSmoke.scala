@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,13 +64,7 @@ import org.apache.spark.sql.functions._
   * STATE_BOUND lines; exits nonzero on any mismatch. */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("local[4]", partitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     var failed = false

@@ -546,7 +546,7 @@ object Corpus {
     * and token mass. The curriculum is PER SOURCE on purpose: the
     * ordering window partitions by source, so at 100 TB each shard
     * sorts independently — a single global curriculum would be one
-    * unpartitioned window (the exact shape the PlanAudit gate
+    * unpartitioned window (the exact shape the plan-counter audit
     * exists to forbid). Batch difficulty must be monotone within a
     * source by construction — CorpusSpec pins it. */
   def curriculum(docs: DataFrame, batchSize: Int = 32): DataFrame = {

@@ -31,7 +31,7 @@ object Graph {
   /** Session-scoped memo of an expensive checkpoint-backed relation —
     * the machinery behind the graph family's shared cores (LPA fixed
     * point, wedge counts, co-occurrence edges, BFS distances). One
-    * build per (session, key); Bench/PlanAudit/PlanBudgetSpec call
+    * build per (session, key); Harness.reset and PlanBudgetSpec call
     * [[clearMemos]] between queries so per-query timings and recorded
     * plans stay one-shot honest.
     *
@@ -280,7 +280,7 @@ object Graph {
     * is the whole cost of each; re-running it per declared query
     * would double the price for a user composing both. The memo holds
     * the count relation's localCheckpoint (|V|-row, GC-owned blocks —
-    * nothing in the SQL CacheManager); Bench/PlanAudit/PlanBudgetSpec
+    * nothing in the SQL CacheManager); Harness.reset and PlanBudgetSpec
     * clear it between queries via [[clearMemos]] so per-query
     * timings and recorded plans stay one-shot honest. */
   private val triMemo = new SessionMemo[String]
@@ -947,7 +947,7 @@ object Graph {
     * the final round's localCheckpoint (a |V|-row relation of
     * GC-owned blocks; nothing enters the SQL CacheManager, so the
     * cache-hygiene contract is untouched) keyed by (session, dir,
-    * rounds). Bench and PlanAudit call [[clearMemos]] between
+    * rounds). Harness.reset calls [[clearMemos]] between
     * queries so per-query timings and recorded plan shapes stay
     * one-shot honest; within a user session / Verify run the pair
     * pays ONE loop (GraphSpec pins the single execution). */
@@ -962,7 +962,7 @@ object Graph {
     lpaMemo.get(s, (d, rounds))(labelPropagation(repeatCoEdges(s, d), rounds))
 
   /** Drops every memoized graph core (LPA labels, triangle counts,
-    * co-occurrence edges, BFS distances) — Bench/PlanAudit/
+    * co-occurrence edges, BFS distances) — Harness.reset and
     * PlanBudgetSpec call it between queries. Dropping the reference
     * IS the release: the relations' localCheckpoint blocks are
     * GC-owned (nothing sits in the SQL CacheManager, so there is

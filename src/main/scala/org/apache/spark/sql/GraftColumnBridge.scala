@@ -71,4 +71,10 @@ object GraftColumnBridge {
     * explicit settings map. */
   def isConfExplicitlySet(spark: SparkSession, key: String): Boolean =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.contains(key)
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`): a
+    * listener's records are complete only after this returns. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -36,7 +36,7 @@ class PlanBudgetSpec extends SparkSpec {
   test("every declared query's executed plan matches its checked-in budget line") {
     val measured = measureAll()
     if (sys.env.get("SPARK_GRAFT_REGEN_BUDGETS").contains("1")) {
-      val lines = PlanCounters.header +: measured.map { case (n, c) => s"$n\t${c.tsv}" }
+      val lines = PlanCounters.header +: measured.map { case (n, c) => PlanCounters.budgetLine(n, c) }
       Files.write(budgetPath, lines.asJava)
       info(s"rewrote ${budgetPath} with ${measured.size} budget lines — review the diff")
     } else {
@@ -64,5 +64,11 @@ class PlanBudgetSpec extends SparkSpec {
         s"${diffs.size} plan(s) drifted from their recorded shape — if intentional, " +
           s"regenerate the TSV in this commit:\n${diffs.mkString("\n")}")
     }
+  }
+
+  test("Dev counters measures q_pagerank's exact budget line under the spec session") {
+    val budget = Files.readAllLines(budgetPath).asScala.find(_.startsWith("q_pagerank\t"))
+    assert(budget.nonEmpty, "q_pagerank has no budget line")
+    assert(Dev.counters(spark, "q_pagerank", sf0001) == budget.toSeq)
   }
 }

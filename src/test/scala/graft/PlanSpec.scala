@@ -431,7 +431,7 @@ class PlanSpec extends SparkSpec {
       qe.toRdd.foreach(_ => ())
       // AdaptiveSparkPlan.toString appends the pre-adaptive plan under
       // "== Initial Plan ==" — keep only the final plan or the
-      // exchange count double-counts (same caveat as PlanAudit)
+      // exchange count double-counts (same caveat as PlanCounters)
       val full = qe.executedPlan.toString
       val p = full.indexOf("== Initial Plan ==") match {
         case -1 => full

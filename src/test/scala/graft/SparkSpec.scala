@@ -6,17 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared per-suite SparkSession (one JVM-wide session under sbt's
   * forked test JVM; getOrCreate dedups across suites). */
 trait SparkSpec extends AnyFunSuite {
-  // local[4,2]: up to 2 attempts per task, so FaultToleranceSpec can
-  // inject a first-attempt failure and watch lineage recovery — with
-  // the default local[4] (maxFailures=1) any injected failure would be
-  // fatal instead of retried. Harmless to every other suite.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4,2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // the factory's session with the suite's fixed settings (see
+  // Harness.specSession): plan_budgets.tsv is recorded under it
+  lazy val spark: SparkSession = Harness.specSession()
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 }
