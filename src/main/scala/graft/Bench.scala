@@ -106,15 +106,13 @@ object Bench {
         }
       }
       // sf0.1 holds ~10x the rows of sf0.01 (per-table growth varies
-      // 4-10x); a ratio beyond 12 means cost grew faster than any
-      // input did — the shape to fix before a 100 TB run
-      val SlopeMax = 12.0
+      // 4-10x), so the default decade gate applies
       // noise gate: a query that finishes the BIG suite under a second
       // is dominated by fixed job overhead and scheduler jitter — a
       // slope computed from two sub-second samples says nothing about
       // its asymptotics (every r3 false flag was in this band)
       val MinFlagSecs = 1.0
-      val over = ratios.collect { case (k, r) if r > SlopeMax => k }
+      val over = ratios.collect { case (k, r) if r > Harness.SlopeMax => k }
       val candidates = over.filter(k => results.toMap.getOrElse(k, 0.0) >= MinFlagSecs)
       // paired re-measurement: small then big back-to-back, one load
       // window per query — only a slope that REPRODUCES flags. Both
@@ -127,7 +125,7 @@ object Bench {
         val slope2 = if (s2 > 0 && b2 > 0) b2 / s2 else -1.0
         (k, s2, b2, slope2)
       }
-      val confirmed = rechecks.collect { case (k, _, _, r2) if r2 > SlopeMax => "\"" + k + "\"" }
+      val confirmed = rechecks.collect { case (k, _, _, r2) if r2 > Harness.SlopeMax => "\"" + k + "\"" }
       summarySmallTotal = smallTotal
       summaryOver = over.map("\"" + _ + "\"")
       summarySuperlinear = confirmed
@@ -192,18 +190,6 @@ object Bench {
     var summaryBig = "null"
     val scaleUpJson = if (!scaleUpOn) "" else {
       val HeavySecs = 2.0
-      val SlopeMax = 12.0 // default gate: 10× the data; >12 means cost outgrew input
-      // per-query budgets for families whose documented cost model is
-      // legitimately superlinear under 10× cloning (see header comment)
-      val slopeBudgets: Map[String, Double] = {
-        val in = getClass.getResourceAsStream("/scale_budgets.tsv")
-        if (in == null) Map.empty
-        else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
-          .filter(l => l.nonEmpty && !l.startsWith("#"))
-          .map { l => val f = l.split("\t"); f(0) -> f(1).toDouble }.toMap
-        finally in.close()
-      }
-      def budget(k: String): Double = slopeBudgets.getOrElse(k, SlopeMax)
       val heavies = results.filter { case (_, t) => t >= HeavySecs }.map(_._1)
       // The pair-LISTING dedup family measures against the MUTATED
       // clone sibling (r10 verdict task 2): on the verbatim-clone sf1
@@ -227,7 +213,7 @@ object Bench {
       val slopes = big.flatMap { case (k, t) =>
         results.toMap.get(k).collect { case s if s > 0 && t > 0 => k -> t / s }
       }
-      val overRaw = slopes.collect { case (k, r) if r > budget(k) => k }
+      val overRaw = slopes.collect { case (k, r) if r > Harness.slopeBudget(k, 0) => k }
       // paired recheck — main then big back to back, one load window
       // per query; only a slope that REPRODUCES over its budget flags
       val rechecks = overRaw.map { k =>
@@ -235,7 +221,7 @@ object Bench {
         val b2 = Harness.timedOnce(spark, "bench", k, selected(k), bigDirOf(k))
         (k, m2, b2, if (m2 > 0 && b2 > 0) b2 / m2 else -1.0)
       }
-      val confirmed = rechecks.collect { case (k, _, _, r2) if r2 > budget(k) => "\"" + k + "\"" }
+      val confirmed = rechecks.collect { case (k, _, _, r2) if r2 > Harness.slopeBudget(k, 0) => "\"" + k + "\"" }
       val bigTotal = big.map(_._2).filter(_ >= 0).sum
       summaryBig = s"""{"total_big":$bigTotal,"n_heavy":${big.size},""" +
         s""""over":[${overRaw.map("\"" + _ + "\"").mkString(",")}],""" +
@@ -243,7 +229,7 @@ object Bench {
       val slopeJson = slopes.map { case (k, r) =>
         "\"" + k + "\":" + math.round(r * 100) / 100.0 }.mkString("{", ",", "}")
       val budgetJson = slopes.map { case (k, _) =>
-        "\"" + k + "\":" + budget(k) }.mkString("{", ",", "}")
+        "\"" + k + "\":" + Harness.slopeBudget(k, 0) }.mkString("{", ",", "}")
       val recheckJson = rechecks.map { case (k, m2, b2, r2) =>
         "\"" + k + "\":{\"main\":" + m2 + ",\"big\":" + b2 + ",\"slope\":" +
           math.round(r2 * 100) / 100.0 + ",\"load_avg\":" + Harness.loadAvg + "}"

@@ -96,6 +96,29 @@ object Harness {
     if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
   }
 
+  /** Default slope gate per decade of scale: 10× the data, so a cost
+    * ratio beyond 12 means cost grew faster than any input did. */
+  val SlopeMax = 12.0
+
+  /** `scale_budgets.tsv`: query → (its sf0.1→sf1 budget, its budget at
+    * later decades); ContractSpec pins the file's four columns. */
+  lazy val slopeBudgets: Map[String, (Double, Double)] = {
+    val in = getClass.getResourceAsStream("/scale_budgets.tsv")
+    if (in == null) Map.empty
+    else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
+      .filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map { l =>
+        val f = l.split("\t")
+        f(0) -> (f(1).toDouble, f(2).toDouble)
+      }.toMap
+    finally in.close()
+  }
+
+  /** A query's slope budget at `decade` (0 = sf0.1→sf1), [[SlopeMax]]
+    * for a query without a row. */
+  def slopeBudget(query: String, decade: Int): Double =
+    slopeBudgets.get(query).fold(SlopeMax)(b => if (decade <= 0) b._1 else b._2)
+
   /** The host's 1-minute load average, recorded next to timings. */
   def loadAvg: Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage

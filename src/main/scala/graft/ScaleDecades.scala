@@ -97,30 +97,6 @@ object ScaleDecades {
       if (samples.isEmpty) -1.0 else samples.min
     }
 
-    // Per-DECADE budgets (r8 ADVICE): column 2 gates sf0.1->sf1,
-    // column 3 gates sf1->sf10 — a family whose quadratic term only
-    // dominates at the second decade (q_ann_pq) keeps a tight
-    // regression-catching decade-1 gate instead of inheriting the
-    // loose decade-2 number.
-    val budgets: Map[String, (Double, Double)] = {
-      val in = getClass.getResourceAsStream("/scale_budgets.tsv")
-      if (in == null) Map.empty
-      else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { l =>
-          val f = l.split("\t")
-          val d1 = f(1).toDouble
-          val d2 = scala.util.Try(f(2).toDouble).getOrElse(d1)
-          f(0) -> (d1, d2)
-        }.toMap
-      finally in.close()
-    }
-    val SlopeMax = 12.0
-    def budget(k: String, decade: Int): Double = {
-      val (d1, d2) = budgets.getOrElse(k, (SlopeMax, SlopeMax))
-      if (decade <= 0) d1 else d2
-    }
-
     val chosen = Harness.select().keySet
     def selected(qs: Seq[String]) = qs.filter(chosen)
 
@@ -147,7 +123,11 @@ object ScaleDecades {
         case Seq(a, b) if a > 0 && b > 0 => b / a
         case _ => -1.0
       }.toSeq
-      val bgts = slopes.indices.map(i => budget(q, i))
+      // per-DECADE budgets (r8 ADVICE): a family whose quadratic term
+      // only dominates at the second decade (q_ann_pq) keeps a tight
+      // regression-catching decade-1 gate instead of inheriting the
+      // loose decade-2 number
+      val bgts = slopes.indices.map(i => Harness.slopeBudget(q, i))
       val flagged = slopes.zip(bgts).exists { case (s, b) => s > 0 && s > b }
       // A crash/OOM at any tier is a first-class failure, not a
       // silently-dropped slope pair (r8 ADVICE).

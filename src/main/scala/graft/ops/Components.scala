@@ -25,38 +25,26 @@ object Components {
   /** `edges(src, dst)` of any orderable key type → `(node, comp)`
     * where comp = min node id reachable. */
   def connectedComponents(edges: DataFrame, maxIterations: Int = 25): DataFrame = {
-    // localCheckpoint, not persist: the caller's edge list can be an
-    // arbitrarily deep pipeline (LSH banding is a DAG of self-joins),
-    // and every round's plan would re-embed that DAG several times
-    // (und feeds one side of each round's joins). Catalyst multiplies
-    // size estimates across every embedded join, so keeping the deep
-    // plan around makes both the optimizer work and the estimates grow
-    // with the producer pipeline. Truncating the lineage here makes
-    // every round's logical plan O(1) deep regardless of how the
-    // edges were produced.
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
+    // a leaf, not persist: the caller's edge list can be an arbitrarily
+    // deep pipeline (LSH banding is a DAG of self-joins) that every
+    // round's plan would re-embed several times, growing Catalyst's
+    // optimizer work and size estimates with the producer pipeline;
+    // the cut keeps every round's logical plan O(1) deep.
+    val und = Iterate.leaf(edges.select(col("src").as("a"), col("dst").as("b"))
       .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .distinct()
-      .localCheckpoint()
-    // the und row count bounds every per-round relation below (the
-    // label table is keyed by und's endpoints, received/jumpSrc are
-    // its projections), so ONE count over the just-materialized leaf
-    // decides every round's join strategy. Without it (r12 second
-    // pass), the leaf's conservative stats made every round
-    // sort-merge: the edge-sized und relation re-shuffled EVERY round
-    // — exchange reuse never spans the per-round checkpoint queries —
-    // for a loop whose mutable state is |V|-sized. Under the gate the
-    // label side ships and und never moves (the BFS-frontier /
-    // LPA-label gate class); past it the rounds degrade to the
-    // shuffled joins exactly as before.
-    val gate = Iterate.broadcastIf(und.count() <= Iterate.BroadcastMaxRows)
-    val init = und.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint()
+      .distinct())
+    // und's row count bounds every per-round relation below (labels
+    // are keyed by its endpoints, received/jumpSrc are its projections).
+    // Under the gate the label side ships and und never moves; without
+    // it und re-shuffles EVERY round (exchange reuse never spans the
+    // per-round checkpoint queries).
+    val gate = Iterate.broadcastIf(Iterate.fits(und))
+    val init = Iterate.leaf(und.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("comp")))
     // `changed` is null when a node has no inbound neighbor (null OR
     // false folds to null) — that means unchanged, and when() skips it
     Iterate.untilStable("graft.cc.changed", init, maxIterations,
-        _ => sum(when(col("changed"), 1L)).as("n_changed"),
+        _ => sum(when(col("changed"), 1L)),
         refuse = Some("connectedComponents")) { (state, _, _) =>
       // the state carries last round's `changed` flag; a no-op
       // projection on the initial labels

@@ -107,11 +107,9 @@ object Graph {
     *    shuffled wedge stream + shuffled closing equi-join — which
     *    never holds a node's neighborhood in one row.
     */
-  private def triRelation(e: DataFrame, maxBroadcastEdges: Long): DataFrame = {
-    // one job on materialized blocks (the PageRank one-count-per-query
-    // precedent): localCheckpoint hides e's size from Catalyst, so the
-    // broadcast decision needs an explicit measurement
-    val edgeCount = e.count()
+  private def triRelation(e: DataFrame): DataFrame = {
+    // the leaf's own row count bounds the degree dim and the adjacency
+    val broadcastDeg = Iterate.fits(e)
     val deg = e.select(col("u").as("n"))
       .unionByName(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
@@ -126,7 +124,6 @@ object Graph {
     // the orientation NARROW (leaf scan + two broadcast probes, no
     // exchange), so its three consumers (the stream and both adjacency
     // builds) recompute only a map-side pass over the checkpoint leaf.
-    val broadcastDeg = edgeCount <= maxBroadcastEdges
     val gateB = Iterate.broadcastIf(broadcastDeg)
     val du = gateB(deg.select(col("n").as("u"), col("deg").as("du")))
     val dv = gateB(deg.select(col("n").as("v"), col("deg").as("dv")))
@@ -135,7 +132,7 @@ object Graph {
       .select(
         when(toV, col("u")).otherwise(col("v")).as("src"),
         when(toV, col("v")).otherwise(col("u")).as("dst"))
-    if (edgeCount <= maxBroadcastEdges) {
+    if (broadcastDeg) {
       // forward algorithm: for triangle a<b<c (deg, id order) the
       // oriented edges are a→b, a→c, b→c, so ONLY edge (a, b) finds
       // z = c in N⁺(a) ∩ N⁺(b) — exactly-once enumeration. An edge
@@ -161,17 +158,13 @@ object Graph {
   }
 
   /** Per-node triangle counts (node, n_tri), nodes in ≥1 triangle.
-    * `maxBroadcastEdges` is a parameter so the above-gate degraded
-    * path (shuffled closing join) is executable in spec, not just
-    * asserted — GraphSpec pins both regimes produce identical
-    * counts. */
-  def triangleCounts(edges: DataFrame,
-      maxBroadcastEdges: Long = Iterate.BroadcastMaxRows): DataFrame = {
-    // materialize once for triRelation's multiple references + count
-    // job — unless already leaf-backed (see leafOr); the closing
+    * GraphSpec pins that the above-gate path (shuffled closing join,
+    * forced by autoBroadcastJoinThreshold -1) gives identical counts. */
+  def triangleCounts(edges: DataFrame): DataFrame = {
+    // one leaf for triRelation's multiple references; the closing
     // join's broadcast stays EXPLICIT (size-gated in triRelation)
-    val e = leafOr(edges)
-    triRelation(e, maxBroadcastEdges)
+    val e = Iterate.leafOr(edges)
+    triRelation(e)
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
       .orderBy(col("node"))
@@ -237,11 +230,11 @@ object Graph {
     * q_triangles_est rows in bench/SCALE_DECADES. */
   private[graft] def triangleEstimateCore(edges: DataFrame,
       mod: Long = TriSampleMod, residue: Long = TriSampleResidue): DataFrame = {
-    val e = leafOr(edges)
+    val e = Iterate.leafOr(edges)
     val nEdges = e.agg(count(lit(1)).as("n_edges"))
     val sampled = Iterate.leaf(e.filter(triSampleKeep(col("u"), col("v"), mod, residue)))
     val nSampled = sampled.agg(count(lit(1)).as("n_sampled"))
-    val triS = triRelation(sampled, Iterate.BroadcastMaxRows)
+    val triS = triRelation(sampled)
       .agg(count(lit(1)).as("tri_sampled"))
     nEdges.crossJoin(broadcast(nSampled)).crossJoin(broadcast(triS))
       .select(col("n_edges"), col("n_sampled"), col("tri_sampled"),
@@ -307,7 +300,7 @@ object Graph {
     * double op over exact integers (the assortativity convention),
     * rounded at 6. */
   def clusteringCoeff(s: SparkSession, d: String): DataFrame =
-    clusteringFrom(leafOr(coEdges(s, d)), triCountsShared(s, d))
+    clusteringFrom(Iterate.leafOr(coEdges(s, d)), triCountsShared(s, d))
 
   /** Fixture face: runs its own triangle enumeration over the given
     * edges (GraphSpec's hand-solved graphs don't route through the
@@ -342,18 +335,13 @@ object Graph {
     *
     * The loop runs on [[Iterate.untilStable]]: the surviving edge
     * count rides each round's own checkpoint job, a round that deletes
-    * nothing is the fixed point, and non-convergence fails loudly. One
-    * up-front count seeds the convergence compare (the PageRank
-    * one-count-per-query precedent). */
+    * nothing is the fixed point, and non-convergence fails loudly. The
+    * input leaf's row count seeds the convergence compare. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // leafOr (r12 second pass): the declared query feeds the session
-    // memo's leaf — an unconditional checkpoint re-copied all m rows
-    // before the first peel round for nothing (round 1 scans the leaf
-    // either way)
-    val e = leafOr(edges)
+    val e = Iterate.leafOr(edges)
     val core = Iterate.untilStable("graft.kcore.edges", e, maxRounds,
-        _ => count(lit(1)).as("n_edges"), start = e.count(),
+        _ => count(lit(1)), start = Iterate.rows(e),
         stable = (before, after) => after == before,
         refuse = Some(s"kCore(k=$k)")) { (cur, _, _) =>
       val deg = cur.select(col("u").as("n"))
@@ -392,17 +380,13 @@ object Graph {
     * Unreached nodes are absent from the output (no sentinel
     * distances), matching the oracle's min-propagation fixed point. */
   def bfs(edges: DataFrame, src: Long, maxRounds: Int = 30): DataFrame = {
-    // leafOr, not an unconditional checkpoint (r12): when `edges` is
-    // the session memo's leaf, the symmetric union is two narrow
-    // block scans per round — re-materializing 2m rows up front spent
-    // a job to replace two leaf scans with one
-    val sym = leafOr(edges.select(col("u").as("a"), col("v").as("b"))
+    val sym = Iterate.leafOr(edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
     val init = edges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0).cast("int").as("dist"))
       .localCheckpoint()
     Iterate.untilStable("graft.bfs.frontier", init, maxRounds,
-        round => count(when(col("dist") === round, 1)).as("n_new"),
+        round => count(when(col("dist") === round, 1)),
         refuse = Some(s"bfs(src=$src)")) { (visited, round, frontierSize) =>
       val frontier =
         if (round == 1) visited.select(col("node"))
@@ -415,7 +399,7 @@ object Graph {
       // adjacency. Past the gate (web-scale frontiers) the plan
       // degrades to the shuffled equi-join.
       val next = sym
-        .join(Iterate.broadcastIf(frontierSize <= Iterate.BroadcastMaxRows)(frontier),
+        .join(Iterate.broadcastIf(Iterate.fits(sym.sparkSession, frontierSize))(frontier),
           col("a") === col("node"))
         .select(col("b").as("node")).distinct()
         .join(visited.select(col("node").as("vn")),
@@ -487,18 +471,18 @@ object Graph {
     * broadcast. At web scale the frontier outgrows the gate and the
     * plan degrades to the shuffled equi-join — same class as BFS. */
   def sssp(wedges: DataFrame, src: Long, rounds: Int = SsspRounds): DataFrame = {
-    val sym = leafOr(wedges.select(col("u").as("a"), col("v").as("b"), col("w"))
+    val sym = Iterate.leafOr(wedges.select(col("u").as("a"), col("v").as("b"), col("w"))
       .unionByName(wedges.select(col("v").as("a"), col("u").as("b"), col("w"))))
     val init = wedges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0L).as("dist"))
       .localCheckpoint()
     Iterate.untilStable("graft.sssp.improved", init, rounds,
-        _ => count(when(col("improved"), 1)).as("n_impr")) { (dist, round, frontierSize) =>
+        _ => count(when(col("improved"), 1))) { (dist, round, frontierSize) =>
       val frontier =
         if (round == 1) dist
         else dist.filter(col("improved")).select(col("node"), col("dist"))
       val cand = sym
-        .join(Iterate.broadcastIf(frontierSize <= Iterate.BroadcastMaxRows)(frontier),
+        .join(Iterate.broadcastIf(Iterate.fits(sym.sparkSession, frontierSize))(frontier),
           col("a") === col("node"))
         .groupBy(col("b"))
         .agg(min(col("dist") + col("w")).as("cand"))
@@ -680,7 +664,7 @@ object Graph {
     // exchange of either side); past the gate the steps degrade to
     // shuffled equi-joins, the triRelation gate class
     val focal = sym.select(col("a")).distinct().filter(col("a") % 100 === 7)
-    val gate = Iterate.broadcastIf(adj.count() <= Iterate.BroadcastMaxRows)
+    val gate = Iterate.broadcastIf(Iterate.fits(adj))
     val walks0 = focal.select(col("a").as("start"),
         explode(sequence(lit(0), lit(WalksPerNode - 1))).as("walk"))
       .select(col("start"), col("walk"), col("start").as("cur"),
@@ -741,10 +725,10 @@ object Graph {
     * (focal node a, candidate b, eligible common neighbor z). Exposed
     * package-private so GraphSpec can pin its cardinality against the
     * closed-form cost model — this relation IS the operator's cost. */
-  private[graft] def aaWedges(edges: DataFrame, maxDegree: Long,
-      broadcastGate: Option[Boolean] = None): DataFrame = {
-    val sym = edges.select(col("u").as("a"), col("v").as("z"))
-      .unionByName(edges.select(col("v").as("a"), col("u").as("z")))
+  private[graft] def aaWedges(edges: DataFrame, maxDegree: Long): DataFrame = {
+    val e = Iterate.leafOr(edges)
+    val sym = e.select(col("u").as("a"), col("v").as("z"))
+      .unionByName(e.select(col("v").as("a"), col("u").as("z")))
     // explicit size-gated broadcasts (r12 second pass, guide §3.1):
     // left to AQE, the INITIAL plan sort-merged both wedge joins, so
     // the full 2m-row sym relation was exchanged on z (54.7 MiB at
@@ -754,8 +738,7 @@ object Graph {
     // wedge expansion is one narrow codegen pass over the edge leaf;
     // past the gate the plan degrades to the shuffled joins exactly
     // as before (the triRelation/modularityFrom gate class).
-    val gate = Iterate.broadcastIf(
-      broadcastGate.getOrElse(edges.count() <= Iterate.BroadcastMaxRows))
+    val gate = Iterate.broadcastIf(Iterate.fits(e))
     val wz = sym.groupBy(col("z")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 2 && col("deg") <= maxDegree)
       .select(col("z"),
@@ -774,10 +757,9 @@ object Graph {
   def linkPredictionCore(edges: DataFrame, topPerNode: Int,
       maxDegree: Long = MaxAaDegree): DataFrame = {
     val e = Iterate.leaf(edges) // consumers: sym (×2 sides), anti-join
-    // one leaf count drives every broadcast decision below (the
-    // PageRank one-count-per-query precedent)
-    val doB = e.count() <= Iterate.BroadcastMaxRows
-    val scored = aaWedges(e, maxDegree, Some(doB))
+    // the leaf's row count drives every broadcast decision below
+    val doB = Iterate.fits(e)
+    val scored = aaWedges(e, maxDegree)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("common_neighbors"), sum(col("w")).as("aa_micros"))
     // under the gate the existing-edge exclusion builds the m-row edge
@@ -884,16 +866,13 @@ object Graph {
     * round (the relations are |V|-sized; the checkpoint is cheaper
     * than carrying 5 rounds of join plans). */
   def labelPropagation(edges: DataFrame, rounds: Int = LpaRounds): DataFrame = {
-    // leafOr, not an unconditional checkpoint (r12 second pass): when
-    // `edges` is the session memo's leaf the symmetric union is two
-    // narrow block scans per round — re-materializing 2m rows up
-    // front spent a job to replace them (the bfs/sssp sym rationale)
-    val sym = leafOr(edges.select(col("u").as("a"), col("v").as("b"))
+    val sym = Iterate.leafOr(edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
-    val gate = Iterate.broadcastIf(
-      sym.select(col("a")).distinct().count() <= Iterate.BroadcastMaxRows)
-    val init = sym.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
+    // the initial labels are a leaf: its row count (|V|) bounds every
+    // round's label relation, so it decides the gate
+    val init = Iterate.leaf(sym.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
+    val gate = Iterate.broadcastIf(Iterate.fits(init))
     Iterate.rounds(init, rounds) { labels =>
       sym.join(gate(labels.withColumnRenamed("node", "ln")),
           col("b") === col("ln"))
@@ -996,7 +975,7 @@ object Graph {
     * rather than silently wrong. Shares [[lpaLabels]]' fixed point
     * with [[communities]] — the pair costs one LPA loop. */
   def modularity(s: SparkSession, d: String): DataFrame =
-    modularityFrom(leafOr(repeatCoEdges(s, d)), lpaLabels(s, d))
+    modularityFrom(Iterate.leafOr(repeatCoEdges(s, d)), lpaLabels(s, d))
 
   /** Fixture face: runs its own LPA over the given edges (GraphSpec's
     * hand-solved graphs don't route through the session memo). */
@@ -1005,25 +984,12 @@ object Graph {
     modularityFrom(e, labelPropagation(e))
   }
 
-  /** [[Iterate.leaf]] unless the relation is ALREADY leaf-backed
-    * (every leaf a LogicalRDD — e.g. a projection of the session
-    * memo's checkpoint): re-checkpointing such a relation copies O(m)
-    * rows into fresh blocks and spends a whole job to buy nothing —
-    * each consumer re-reads in-memory blocks either way, and the
-    * leaf's stats are already the conservative [[Iterate.leaf]] default
-    * (r12 profiling: the unconditional form re-copied the edge
-    * relation once per triangle-family query). */
-  private def leafOr(df: DataFrame): DataFrame = {
-    val leafBacked = df.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    if (leafBacked) df else Iterate.leaf(df)
-  }
-
   /** Moment assembly over an already-materialized edge relation and
     * its label partition (three consumers of `e`: m, intra, deg).
     *
     * The |V|-row label side joins under the SAME size-gated explicit
-    * broadcast the LPA loop uses ([[Iterate.BroadcastMaxRows]]). Leaving
+    * broadcast the LPA loop uses, bounded by the label leaf's own row
+    * count ([[Iterate.fits]]). Leaving
     * the choice to AQE here was correct in outcome but NONDETERMINISTIC
     * in the recorded plan: the intra branch stacks two label joins, and
     * whether the second join's streamed-side shuffle materialized
@@ -1034,7 +1000,7 @@ object Graph {
     * shuffle is never submitted; past the gate it degrades to the
     * shuffled join exactly like the loop itself. */
   private def modularityFrom(e: DataFrame, labels: DataFrame): DataFrame = {
-    val gate = Iterate.broadcastIf(labels.count() <= Iterate.BroadcastMaxRows)
+    val gate = Iterate.broadcastIf(Iterate.fits(labels))
     val m = e.agg(count(lit(1)).as("m"))
     val intra = e
       .join(gate(labels.select(col("node").as("u"), col("label").as("lu"))), Seq("u"))

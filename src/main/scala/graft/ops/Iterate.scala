@@ -1,15 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
 
 /** The iterative operators' shared mechanics, written once: the
-  * materialization primitive [[leaf]], the two loop drivers
-  * [[rounds]] (fixed round count) and [[untilStable]] (fixed point),
-  * and the one ceiling behind the size-gated explicit broadcasts.
+  * materialization primitive [[leaf]] and its row count [[rows]], the
+  * two loop drivers [[rounds]] (fixed round count) and [[untilStable]]
+  * (fixed point), and the one size gate [[fits]] behind the explicit
+  * broadcasts.
   *
   * A driver owns the round counter, the lineage cut and, for fixed
-  * points, the per-round `Observation`, the stop test and the loud
+  * points, the per-round observation, the stop test and the loud
   * failure; a loop passes in only its initial relation and its step.
   * HITS and BPE stay hand-written on [[leaf]]: each carries a second
   * relation on its own cut schedule (HITS' authority vector is cut
@@ -25,29 +28,39 @@ object Iterate {
     * shuffling the much larger edge side every round; past it (the
     * billion-node graphs a 100 TB corpus implies) the broadcast would
     * be a repeated driver round-trip that eventually fails outright,
-    * so the plans fall back to the shuffled joins. Checkpoint leaves
-    * hide their size from Catalyst, so each operator measures its
-    * bound with one explicit count and compares it here with `<=`. */
-  val BroadcastMaxRows = 4000000L
+    * so the plans fall back to the shuffled joins. */
+  private val BroadcastMaxRows = 4000000L
+
+  /** The size gate: whether a relation of at most `bound` rows ships as
+    * an explicit broadcast — never in a session whose negative
+    * `spark.sql.autoBroadcastJoinThreshold` switches broadcast joins
+    * off (the at-scale regime the plan specs pin). */
+  def fits(s: SparkSession, bound: Long): Boolean =
+    bound <= BroadcastMaxRows &&
+      !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-")
+
+  /** [[fits]] bounded by a leaf's own [[rows]]. */
+  def fits(leafDf: DataFrame): Boolean = fits(leafDf.sparkSession, rows(leafDf))
 
   /** `broadcast` when the size gate passed, the identity past it. */
   def broadcastIf(b: Boolean): DataFrame => DataFrame =
     if (b) broadcast(_) else identity
 
   /** Materialize `df` and cut its lineage: one eager `localCheckpoint`
-    * job, then the blocks re-wrapped as a fresh leaf.
+    * job that also counts the rows it stores, the blocks wrapped as a
+    * fresh leaf that carries the count.
     *
     * The checkpoint makes every later plan over the relation O(1)
-    * deep however many rounds produced it. The re-wrap
-    * (`GraftColumnBridge.freshLeaf`) costs no job and resets the
-    * statistics the checkpoint would otherwise carry over: in a loop
-    * that self-joins its state the inherited estimate compounds each
-    * round (CC measured 611 → 728k bits by round 6, the driver
-    * grinding BigInteger stats math instead of running jobs), and a
-    * bare checkpoint leaf's estimate varies run to run with its
-    * in-memory block layout, which flipped q_modularity's label joins
-    * between broadcast and shuffled (PlanBudgetSpec's exact gate).
-    * The fresh leaf's conservative default makes each initial plan a
+    * deep however many rounds produced it. The leaf
+    * (`GraftColumnBridge.localCheckpoint`) replaces the statistics
+    * Spark's checkpoint would carry over: in a loop that self-joins
+    * its state the inherited estimate compounds each round (CC
+    * measured 611 → 728k bits by round 6, the driver grinding
+    * BigInteger stats math instead of running jobs), and a bare
+    * checkpoint leaf's estimate varies run to run with its in-memory
+    * block layout, which flipped q_modularity's label joins between
+    * broadcast and shuffled (PlanBudgetSpec's exact gate). The leaf's
+    * size stays the conservative default, so each initial plan is a
     * pure function of the query; AQE still re-plans from exact
     * shuffle sizes.
     *
@@ -55,7 +68,30 @@ object Iterate {
     * cannot release them: they are freed when the RDD is garbage
     * collected. */
   def leaf(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftColumnBridge.freshLeaf(df.localCheckpoint())
+    org.apache.spark.sql.GraftColumnBridge.localCheckpoint(df)
+
+  private def exactRows(p: LogicalPlan): Option[Long] = p match {
+    case l: LogicalRDD => l.computeStats().rowCount.map(_.toLong)
+    case Project(_, child) => exactRows(child)
+    case u: Union => u.children.foldLeft(Option(0L)) { (n, c) =>
+      for (a <- n; b <- exactRows(c)) yield a + b }
+    case _ => None
+  }
+
+  /** The exact row count of a [[leaf]] or a projection of one (or a
+    * union of those), read from its statistics without a job; throws
+    * `IllegalArgumentException` for any other relation. */
+  def rows(df: DataFrame): Long =
+    exactRows(df.queryExecution.analyzed).getOrElse(throw new IllegalArgumentException(
+      "row count unknown — not a leaf or a projection of one:\n" +
+        df.queryExecution.analyzed.treeString))
+
+  /** `df` itself when [[rows]] knows its count (e.g. the symmetric edge
+    * list over a session memo's leaf), otherwise [[leaf]]`(df)`:
+    * re-checkpointing such a relation copies its rows into fresh blocks
+    * and spends a job to buy nothing. */
+  def leafOr(df: DataFrame): DataFrame =
+    if (exactRows(df.queryExecution.analyzed).isDefined) df else leaf(df)
 
   /** `n` rounds of `step` from `init`, the state cut by [[leaf]] after
     * every `cutEvery`-th round and after the last. A lazy round costs
@@ -71,10 +107,11 @@ object Iterate {
   /** Rounds of `step` until `stable(previous, current)` holds for the
     * round metric, at most `maxRounds`. Every round is cut by [[leaf]],
     * and `metric(round)` (one aggregate, a null read as 0) is collected
-    * by an `Observation` named `name.round` on that same checkpoint job, so
-    * a round costs one job, not a checkpoint plus a scan. Observed
-    * metrics count once per execution, so a task retry cannot
-    * overcount.
+    * by an observation named `name.round` on that same checkpoint job
+    * and read from its executed plan when the job returns (no
+    * listener-bus wait), so a round costs one job, not a checkpoint
+    * plus a scan. Observed metrics count once per execution, so a task retry
+    * cannot overcount.
     *
     * `step` gets the state, the round number (from 1) and the previous
     * round's metric (`start` before round 1). When `refuse` names the
@@ -91,9 +128,10 @@ object Iterate {
     var round = 0
     while (!done && round < maxRounds) {
       round += 1
-      val obs = Observation(s"$name.$round")
-      state = leaf(step(state, round, last).observe(obs, metric(round)))
-      val m = Option(obs.get.valuesIterator.next()).fold(0L)(_.asInstanceOf[Long])
+      val observed = step(state, round, last).observe(s"$name.$round", metric(round).as("metric"))
+      state = leaf(observed)
+      val obs = observed.queryExecution.observedMetrics(s"$name.$round")
+      val m = if (obs.isNullAt(0)) 0L else obs.getLong(0)
       done = stable(last, m)
       last = m
     }

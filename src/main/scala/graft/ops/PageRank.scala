@@ -38,13 +38,14 @@ object PageRank {
         split(col("value"), "\t").getItem(1).as("dst"))
 
   /** The broadcast decision: one count of distinct endpoints over the
-    * (persisted) edge relation — an upper bound on every iteration's
-    * rank-vector size (the init vector is src-keyed, later ones
-    * dst-keyed). localCheckpoint leaves ranks with an unknown size
-    * estimate, so Catalyst/AQE can't make this call on its own. */
+    * (persisted, not leaf) edge relation — an upper bound on every
+    * iteration's rank-vector size (the init vector is src-keyed, later
+    * ones dst-keyed). The rank leaves carry their row count only at
+    * the default size, so Catalyst/AQE can't make this call itself. */
   private[graft] def chooseBroadcast(e: DataFrame): Boolean =
-    e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
-      .distinct().count() <= Iterate.BroadcastMaxRows
+    Iterate.fits(e.sparkSession,
+      e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
+        .distinct().count())
 
   /** The iterative core. `edges(src, dst)` of any key type.
     *
@@ -62,7 +63,8 @@ object PageRank {
     * checkpoint cost.
     *
     * `broadcastRanks`: None (default) size-gates per [[chooseBroadcast]];
-    * Some(b) forces the choice (spec bracketing). */
+    * Some(b) is a decision the caller already made from a bound it
+    * holds ([[pagerankSnap]]'s dictionary leaf). */
   def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0,
       broadcastRanks: Option[Boolean] = None): DataFrame = {
     val laidOut =
@@ -126,13 +128,16 @@ object PageRank {
   def runTextbook(edges: DataFrame, iterations: Int = 10): DataFrame = {
     val e = edges.persist()
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
+    val nodes = Iterate.leaf(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
     // the 1/N init needs |nodes| anyway, and it equals chooseBroadcast's
-    // endpoint bound — one count serves both (no second distinct job)
-    val n = nodes.count().toDouble
-    val doBroadcast = n <= Iterate.BroadcastMaxRows
+    // endpoint bound — the leaf's row count serves both
+    val n = Iterate.rows(nodes).toDouble
+    val doBroadcast = Iterate.fits(nodes)
     val gate = Iterate.broadcastIf(doBroadcast)
+    // past the gate every iteration sort-merges nodes on node: lay the
+    // leaf out by node once instead of exchanging it per iteration
+    val byNode = if (doBroadcast) nodes else nodes.repartition(col("node")).persist()
     // same dst-layout rule as [[run]]: under broadcast the streamed
     // edge side carries its partitioning through the join, so the
     // per-iteration contribs agg shuffles nothing
@@ -142,7 +147,7 @@ object PageRank {
       (if (doBroadcast) withDegRaw.repartition(col("dst")) else withDegRaw).persist()
     // sinks: nodes with no out-edges; their rank mass would otherwise
     // leak (the quirk variant deliberately loses it)
-    val dangling = nodes.join(
+    val dangling = byNode.join(
       degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
     val ranks = Iterate.rounds(nodes.select(col("node"), lit(1.0 / n).as("pr")),
         iterations) { ranks =>
@@ -152,18 +157,17 @@ object PageRank {
         .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
       // rankSide, not ranks: under broadcast the dangling-mass probe
       // would otherwise plan a fresh two-sided shuffle join on node
-      // every iteration (the checkpointed ranks has no size estimate,
-      // so Catalyst can't choose broadcast on its own)
+      // every iteration (Catalyst never broadcasts a default-size leaf)
       val dm = dangling.join(rankSide, "node")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      nodes
+      byNode
         .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
           (lit(0.15 / n) + lit(0.85) *
             (coalesce(col("c"), lit(0.0)) + col("dm") / lit(n))).as("pr"))
     }
-    e.unpersist(); withDeg.unpersist(); nodes.unpersist(); dangling.unpersist()
+    e.unpersist(); withDeg.unpersist(); byNode.unpersist(); dangling.unpersist()
     ranks
   }
 
@@ -180,16 +184,16 @@ object PageRank {
   def runPersonalized(edges: DataFrame, seed: Long, iterations: Int = 10): DataFrame = {
     val e = edges.persist()
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct().persist()
-    val doBroadcast = nodes.count() <= Iterate.BroadcastMaxRows
+    val nodes = Iterate.leaf(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val doBroadcast = Iterate.fits(nodes)
     val gate = Iterate.broadcastIf(doBroadcast)
+    val byNode = if (doBroadcast) nodes else nodes.repartition(col("node")).persist()
     val withDegRaw = e.join(degrees, "src")
       .select(col("src"), col("dst"), col("deg"))
     val withDeg =
       (if (doBroadcast) withDegRaw.repartition(col("dst")) else withDegRaw).persist()
-    val dangling = nodes.join(
+    val dangling = byNode.join(
       degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
     def seedInd(c: org.apache.spark.sql.Column) =
       when(c === seed, lit(1.0)).otherwise(lit(0.0))
@@ -201,14 +205,14 @@ object PageRank {
         .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
       val dm = dangling.join(rankSide, "node")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      nodes
+      byNode
         .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
           (lit(0.15) * seedInd(col("node")) + lit(0.85) *
             (coalesce(col("c"), lit(0.0)) + col("dm") * seedInd(col("node")))).as("pr"))
     }
-    e.unpersist(); withDeg.unpersist(); nodes.unpersist(); dangling.unpersist()
+    e.unpersist(); withDeg.unpersist(); byNode.unpersist(); dangling.unpersist()
     ranks
   }
 
@@ -290,10 +294,10 @@ object PageRank {
         .unionByName(parsed.select(col("dst").as("name")))
         .distinct()
         .select(col("name"), monotonically_increasing_id().as("nid")))
-    // the dict row count IS chooseBroadcast's endpoint bound — one
-    // count serves the encode joins, the decode join AND the loop
-    // (whose own distinct-count job it replaces)
-    val doBroadcast = dict.count() <= Iterate.BroadcastMaxRows
+    // the dict leaf's row count IS chooseBroadcast's endpoint bound —
+    // it serves the encode joins, the decode join AND the loop (whose
+    // own distinct-count job it replaces)
+    val doBroadcast = Iterate.fits(dict)
     val gate = Iterate.broadcastIf(doBroadcast)
     val enc = parsed
       .join(gate(dict.select(col("name").as("src"), col("nid").as("nsrc"))), Seq("src"))

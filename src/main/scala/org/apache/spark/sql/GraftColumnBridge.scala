@@ -2,7 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Spark 4 made the Column↔Expression converters `private[sql]`
   * (`classic.ExpressionUtils`); this is the minimal in-package bridge
@@ -16,25 +19,28 @@ object GraftColumnBridge {
   def wrap1(a: Column)(f: Expression => Expression): Column =
     ExpressionUtils.column(f(ExpressionUtils.expression(a)))
 
-  /** Rebuild a (typically just-checkpointed) DataFrame as a fresh leaf
-    * over the SAME execution RDD, discarding inherited statistics.
-    *
-    * Spark 4's `Dataset.localCheckpoint` truncates the lineage but
-    * PRESERVES the source plan's stats estimate in the new
-    * `LogicalRDD`. In an iterative algorithm that self-joins the
-    * loop-carried relation (pointer-jumping CC), each round's estimate
-    * is a product over the previous round's — the estimate compounds
-    * exponentially, and after ~7 rounds the driver spends its time in
-    * BigInteger math inside stats visitors (observed: minutes inside
-    * `InjectRuntimeFilter` before any job started). Re-wrapping through
-    * `internalCreateDataFrame` (private[sql], hence this bridge) keeps
-    * the materialized RDD — no recompute, no extra job — but resets
-    * stats to the conservative leaf default, making every round's
-    * estimate O(1)-sized. */
-  def freshLeaf(df: Dataset[Row]): Dataset[Row] = {
+  /** `df.localCheckpoint()` that keeps the row count
+    * (`graft.ops.Iterate.leaf` says why). One eager job materializes
+    * the blocks and counts them: Spark's own eager checkpoint runs the
+    * same per-partition iterator-size job and drops the sizes. The
+    * blocks come back as a fresh `LogicalRDD` whose statistics are
+    * exactly that many rows at the conservative default size, not the
+    * source plan's estimate that `Dataset.localCheckpoint` carries
+    * over (`originStats` is private[sql], hence this bridge). The SQL
+    * execution is named as Spark names it, so its call site still
+    * reads `localCheckpoint at <caller>`. */
+  def localCheckpoint(df: Dataset[Row]): Dataset[Row] = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
+    val qe = df.queryExecution
+    val (blocks, rows) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      (rdd, rdd.count())
+    }
+    val stats = Statistics(
+      sizeInBytes = spark.sessionState.conf.defaultSizeInBytes, rowCount = Some(rows))
+    classic.Dataset.ofRows(spark,
+      LogicalRDD(DataTypeUtils.toAttributes(df.schema), blocks)(spark, Some(stats)))
   }
 
   /** `bloom_filter_agg` as a Column: Spark ships the aggregate that

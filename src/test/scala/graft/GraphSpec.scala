@@ -1,8 +1,11 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Triangle counting: hand fixtures + an orientation-invariance check
   * against the naive id-ordered enumeration (the oracle's shape). */
@@ -136,12 +139,66 @@ class GraphSpec extends SparkSpec {
     assert(got(e) == naive(e))
   }
 
+  /** `q`'s rows in the default regime and with broadcast joins off
+    * (`autoBroadcastJoinThreshold=-1`, the at-scale regime every size
+    * gate then takes), after asserting that the second run planned its
+    * joins shuffled in every execution it ran — loop rounds and
+    * checkpoint jobs included — while the first broadcast somewhere. */
+  private def bothRegimes(what: String)(q: => DataFrame): (Set[Row], Set[Row]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def run(): (Set[Row], Seq[String]) = {
+      GraftColumnBridge.drainListeners(spark.sparkContext)
+      plans.clear()
+      val rows = q.collect().toSet
+      GraftColumnBridge.drainListeners(spark.sparkContext)
+      (rows, plans.asScala.toSeq)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.listenerManager.register(listener)
+    try {
+      val (default, defaultPlans) = run()
+      assert(defaultPlans.exists(_.contains("BroadcastHashJoin")),
+        s"$what: the default regime broadcasts nothing, so the check below proves nothing")
+      spark.conf.set(key, "-1")
+      val (shuffled, shuffledPlans) = run()
+      assert(shuffledPlans.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")),
+        s"$what: no shuffled join planned:\n${shuffledPlans.mkString("\n")}")
+      shuffledPlans.foreach(p =>
+        assert(!p.contains("BroadcastHashJoin"), s"$what: a gate still broadcasts:\n$p"))
+      (default, shuffled)
+    } finally {
+      spark.conf.set(key, saved)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
   test("above the broadcast gate the shuffled closing join gives identical counts") {
-    // gate = 0 forces the degraded (web-scale) path; same triangles
+    // broadcast joins off force the degraded (web-scale) path; same triangles
     val e = Graph.coEdges(spark, sf0001)
-    val shuffled = Graph.triangleCounts(e, maxBroadcastEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(shuffled == got(e))
+    val (default, shuffled) = bothRegimes("triangles")(Graph.triangleCounts(e))
+    assert(shuffled == default)
+    assert(shuffled.map(r => r.getLong(0) -> r.getLong(1)).toMap == got(e))
+  }
+
+  test("past every size gate the graph loops plan shuffled joins and give the same answers") {
+    val e = Graph.coEdges(spark, sf0001)
+    val cases = Seq[(String, () => DataFrame)](
+      "connected components" -> (() => ops.Components.connectedComponents(
+        e.select(col("u").as("src"), col("v").as("dst")))),
+      "label propagation" -> (() => Graph.labelPropagation(e)),
+      "k-core" -> (() => Graph.kCore(e, Graph.KCoreK)),
+      "link prediction" -> (() => Graph.linkPredictionCore(e, topPerNode = 5)),
+      "graph walks" -> (() => Graph.graphWalksCore(e)))
+    for ((what, q) <- cases) {
+      val (default, shuffled) = bothRegimes(what)(q())
+      assert(default.nonEmpty && shuffled == default, s"$what: the regimes disagree")
+    }
   }
 
   test("sampled estimator: p = 1 degenerate case equals the exact count on the real graph") {

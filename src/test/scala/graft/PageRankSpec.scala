@@ -95,12 +95,36 @@ class PageRankSpec extends SparkSpec {
     val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
     val edges = PageRank.parseEdgeLines(raw)
     assert(PageRank.chooseBroadcast(edges))
-    val bc = PageRank.run(edges, 5, broadcastRanks = Some(true)).collect()
+    val bc = PageRank.run(edges, 5).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val sh = PageRank.run(edges, 5, broadcastRanks = Some(false)).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // broadcast joins off: the at-scale regime, which the gate takes too
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    val sh = try {
+      spark.conf.set(key, "-1")
+      assert(!PageRank.chooseBroadcast(edges))
+      PageRank.run(edges, 5).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    } finally spark.conf.set(key, saved)
     assert(bc.keySet == sh.keySet)
     bc.foreach { case (k, v) => assert(math.abs(sh(k) - v) < 1e-12, s"node=$k") }
+  }
+
+  test("textbook and personalized: the shuffled regime gives the same ranks") {
+    def both(f: () => Map[Long, Double]): (Map[Long, Double], Map[Long, Double]) = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.get(key)
+      val bc = f()
+      try { spark.conf.set(key, "-1"); (bc, f()) } finally spark.conf.set(key, saved)
+    }
+    val e = PageRank.starEdgesDirected(spark, sf0001)
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for ((bc, sh) <- Seq(both(() => ranks(PageRank.runTextbook(e, 5))),
+        both(() => ranks(PageRank.runPersonalized(e, seed = 1L, 5))))) {
+      assert(bc.nonEmpty && bc.keySet == sh.keySet)
+      bc.foreach { case (k, v) => assert(math.abs(sh(k) - v) < 1e-12, s"node=$k") }
+    }
   }
 
   test("SNAP-text end-to-end matches the star-schema pagerank") {

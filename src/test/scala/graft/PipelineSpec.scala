@@ -80,10 +80,9 @@ class PipelineSpec extends SparkSpec {
       val nbrMin = und
         .join(lbl.select($"cid".as("nb"), $"lbl".as("nlbl")), $"b" === $"nb")
         .groupBy($"a").agg(min($"nlbl").as("nmin"))
-      lbl = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
+      lbl = graft.ops.Iterate.leaf(
         lbl.join(nbrMin, $"cid" === $"a", "left")
-          .select($"cid", least($"lbl", coalesce($"nmin", $"lbl")).as("lbl"))
-          .localCheckpoint())
+          .select($"cid", least($"lbl", coalesce($"nmin", $"lbl")).as("lbl")))
     }
     val unrolled = lbl.as[(Long, Long)].collect().toMap
     val engine = graft.ops.Components.connectedComponents(

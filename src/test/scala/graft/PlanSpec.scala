@@ -26,13 +26,9 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val qe = SparkEntry.queries("q_ewma")(spark, sf0001).queryExecution
-      qe.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
-      val full = qe.executedPlan.toString
-      val p = full.indexOf("== Initial Plan ==") match {
-        case -1 => full
-        case i => full.substring(0, i)
-      }
+      val df = SparkEntry.queries("q_ewma")(spark, sf0001)
+      df.queryExecution.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
+      val p = PlanCounters.finalPlan(df)
       assert(p.contains("ReusedExchange"),
         s"band self-join sides no longer reuse one exchange:\n$p")
       assert("Scan parquet".r.findAllIn(p).length == 1,
@@ -290,14 +286,9 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1") // the at-scale regime, the SRP-LSH precedent
-      val qe = ops.Vectors.semanticDupEdges(
-        ops.Vectors.semanticAssigned(spark, sf0001)).queryExecution
-      qe.toRdd.foreach(_ => ())
-      val full = qe.executedPlan.toString
-      val p = full.indexOf("== Initial Plan ==") match {
-        case -1 => full
-        case i => full.substring(0, i)
-      }
+      val df = ops.Vectors.semanticDupEdges(ops.Vectors.semanticAssigned(spark, sf0001))
+      df.queryExecution.toRdd.foreach(_ => ())
+      val p = PlanCounters.finalPlan(df)
       assert(p.contains("ReusedExchange"),
         s"banded self-join sides must collapse into one computed exchange:\n$p")
       assert(!p.contains("InMemoryTableScan"), "no cached intermediates")
@@ -406,9 +397,9 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val qe = ops.Vectors.srpPairs(Tables.embeddings(spark, sf0001), 0.25).queryExecution
-      qe.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
-      val p = qe.executedPlan.toString
+      val df = ops.Vectors.srpPairs(Tables.embeddings(spark, sf0001), 0.25)
+      df.queryExecution.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
+      val p = PlanCounters.finalPlan(df)
       assert("ReusedExchange".r.findAllIn(p).length >= 2,
         s"expected the banded self-join AND the vector join-backs to reuse exchanges:\n$p")
       assert(!p.contains("InMemoryTableScan"), "srpPairs must not cache anything")
@@ -427,16 +418,11 @@ class PlanSpec extends SparkSpec {
     try {
       spark.conf.set(key, "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val qe = SparkEntry.queries("q_join_inner_bucketed")(spark, sf0001).queryExecution
-      qe.toRdd.foreach(_ => ())
-      // AdaptiveSparkPlan.toString appends the pre-adaptive plan under
-      // "== Initial Plan ==" — keep only the final plan or the
-      // exchange count double-counts (same caveat as PlanCounters)
-      val full = qe.executedPlan.toString
-      val p = full.indexOf("== Initial Plan ==") match {
-        case -1 => full
-        case i => full.substring(0, i)
-      }
+      val df = SparkEntry.queries("q_join_inner_bucketed")(spark, sf0001)
+      df.queryExecution.toRdd.foreach(_ => ())
+      // the final plan only, or the exchange count double-counts the
+      // pre-adaptive plan AdaptiveSparkPlan.toString appends
+      val p = PlanCounters.finalPlan(df)
       assert(p.contains("SortMergeJoin [o_orderkey") || p.contains("SortMergeJoin [l_orderkey"),
         s"fact-fact join is not the SMJ the bucketing targets:\n$p")
       assert(p.contains("Bucketed: true"), s"scan ignored the bucketed layout:\n$p")
@@ -505,9 +491,9 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val qe = ops.Pipeline.nearDupEdges(Tables.documents(spark, sf0001)).queryExecution
-      qe.toRdd.foreach(_ => ())
-      val p = qe.executedPlan.toString
+      val df = ops.Pipeline.nearDupEdges(Tables.documents(spark, sf0001))
+      df.queryExecution.toRdd.foreach(_ => ())
+      val p = PlanCounters.finalPlan(df)
       assert("ReusedExchange".r.findAllIn(p).length >= 2,
         s"expected the banded self-join AND the vector join-backs to reuse exchanges:\n$p")
       assert(!p.contains("InMemoryTableScan"), "LSH stage must not cache anything")
@@ -595,13 +581,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("tpch partvalue: the global total reuses the per-part rollup exchange — one scan set") {
-    val qe = SparkEntry.queries("q_tpch_partvalue")(spark, sf0001).queryExecution
-    qe.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
-    val full = qe.executedPlan.toString
-    val p = full.indexOf("== Initial Plan ==") match {
-      case -1 => full
-      case i => full.substring(0, i)
-    }
+    val df = SparkEntry.queries("q_tpch_partvalue")(spark, sf0001)
+    df.queryExecution.toRdd.foreach(_ => ()) // execute so AQE's final plan shows reuse
+    val p = PlanCounters.finalPlan(df)
     assert(p.contains("ReusedExchange"),
       s"the total must be an agg-over-agg of the SAME rollup subplan:\n$p")
     // lineitem + supplier + nation scanned once each; without reuse the

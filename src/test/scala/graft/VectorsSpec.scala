@@ -259,10 +259,10 @@ class VectorsSpec extends SparkSpec {
       val nbrMin = und
         .join(lbl.select($"vec_id".as("nb"), $"lbl".as("nlbl")), $"b" === $"nb")
         .groupBy($"a").agg(min($"nlbl").as("nmin"))
-      lbl = org.apache.spark.sql.GraftColumnBridge.freshLeaf(
+      // shallow plan AND reset inherited stats
+      lbl = graft.ops.Iterate.leaf(
         lbl.join(nbrMin, $"vec_id" === $"a", "left")
-          .select($"vec_id", least($"lbl", coalesce($"nmin", $"lbl")).as("lbl"))
-          .localCheckpoint()) // shallow plan AND reset inherited stats
+          .select($"vec_id", least($"lbl", coalesce($"nmin", $"lbl")).as("lbl")))
     }
     val unrolled = lbl.as[(Long, Long)].collect().toMap
     val engine = ops.Vectors.dedupEmbed(spark, sf0001)
