@@ -7,54 +7,33 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst rendering of the engine-portable polynomial string
-  * hash (fold of `31·acc + codePoint mod m`, init 0) — the hash every
-  * oracle-crossing operator keys on (feature-hash embeddings, portable
-  * MinHash, the deterministic sample).
+/** A string hash computed natively as one left fold of `step` over
+  * the string's code points from 0, codegen'd at top level and a single
+  * native eval when nested inside a higher-order lambda. The fold lives
+  * in a plain JVM method that generated code calls on a captured
+  * reference (keeps the generated class small and avoids Janino
+  * re-compiling the fold per call site).
   *
-  * The HOF rendering — `aggregate(split(s, ""), 0L, (a,c) => (a*31 +
-  * ascii(c)) % m)` — is CodegenFallback and walks an interpreted
-  * expression tree per CHARACTER; this expression is one fused loop,
-  * codegen'd at top level and a single native eval when nested inside
-  * a higher-order lambda. Semantics are bit-identical to the HOF fold
-  * (and to DuckDB's init-less `list_reduce`, whose first step
-  * `(0·31 + c₁) mod m ≡ c₁` matches the 0-init): Spark's `split(s,"")`
-  * advances by code point and `ascii` returns the leading code point,
-  * so the loop iterates code points — pinned by PortableStringHashSpec
-  * on ASCII, multi-byte, and empty inputs.
-  */
-case class PortableStringHash(child: Expression, mod: Long)
-    extends UnaryExpression {
+  * Code points are decoded straight off the UTF-8 bytes — no transient
+  * java.lang.String per value (a UTF-8→UTF-16 decode + char[] copy per
+  * hashed word/shingle would hand back part of the win). 4-byte
+  * sequences decode to the supplementary code point directly, which is
+  * what `String.codePointAt` yields over its surrogate pair and what
+  * DuckDB's `string_split(s, '')` yields — parity is spec-pinned on
+  * ASCII, multi-byte, supplementary and empty inputs.
+  *
+  * CONTRACT: parity holds for VALID UTF-8 only. On malformed bytes
+  * this fold consumes the raw sequence (truncated tails consume what
+  * remains), while a java.lang.String path turns malformed input into
+  * U+FFFD — the renderings diverge there by design. Spark string
+  * columns are valid UTF-8 by construction (parquet/CSV readers
+  * validate or replace at ingest), so the divergence is unreachable
+  * from any declared query; feeding raw binary through these
+  * expressions is out of contract. */
+abstract class CodePointHash extends UnaryExpression {
+  protected def step(acc: Long, cp: Int): Long
 
-  require(mod > 0, s"mod must be positive, got $mod")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"portable_hash expects a string argument, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "portable_hash"
-
-  /** Folds code points decoded straight off the UTF-8 bytes — no
-    * transient java.lang.String per value (this expression exists as a
-    * hot-path optimization; a UTF-8→UTF-16 decode + char[] copy per
-    * hashed word/shingle would hand back part of the win). 4-byte
-    * sequences decode to the supplementary code point directly, which
-    * is exactly what `String.codePointAt` yields over its surrogate
-    * pair — parity with the HOF fold is spec-pinned on ASCII,
-    * multi-byte, and empty inputs.
-    *
-    * CONTRACT: parity holds for VALID UTF-8 only. On malformed bytes
-    * this fold consumes the raw sequence (truncated tails consume what
-    * remains), while the HOF path goes through java.lang.String where
-    * malformed input becomes U+FFFD — the two renderings diverge
-    * there by design. Spark string columns are valid UTF-8 by
-    * construction (parquet/CSV readers validate or replace at ingest),
-    * so the divergence is unreachable from any declared query; feeding
-    * raw binary through this expression is out of contract. */
-  def hash(s: UTF8String): Long = {
+  final def fold(s: UTF8String): Long = {
     val nb = s.numBytes()
     var acc = 0L
     var i = 0
@@ -70,22 +49,48 @@ case class PortableStringHash(child: Expression, mod: Long)
         cp = (cp << 6) | (s.getByte(i + j) & 0x3F)
         j += 1
       }
-      acc = (acc * 31L + cp) % mod
+      acc = step(acc, cp)
       i += len
     }
     acc
   }
 
+  def hash(s: UTF8String): Long = fold(s)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects a string argument, got ${child.dataType.catalogString}")
+
+  override def dataType: DataType = LongType
+
   override protected def nullSafeEval(input: Any): Any =
     hash(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the loop lives in a plain JVM method; generated code calls it on
-    // a captured reference (keeps the generated class small and avoids
-    // Janino re-compiling the fold per call site)
-    val ref = ctx.addReferenceObj("portableHash", this, classOf[PortableStringHash].getName)
+    val ref = ctx.addReferenceObj("hashExpr", this, getClass.getName)
     defineCodeGen(ctx, ev, c => s"$ref.hash($c)")
   }
+}
+
+/** Native rendering of the engine-portable polynomial string hash
+  * (fold of `31·acc + codePoint mod m`, init 0) — the small-range hash
+  * the oracle-crossing operators key on (CMS cells, feature-hash
+  * embeddings, the deterministic samples).
+  *
+  * The HOF rendering — `aggregate(split(s, ""), 0L, (a,c) => (a*31 +
+  * ascii(c)) % m)` — is CodegenFallback and walks an interpreted
+  * expression tree per CHARACTER; this is one fused loop. Semantics are
+  * bit-identical to the HOF fold (and to DuckDB's init-less
+  * `list_reduce`, whose first step `(0·31 + c₁) mod m ≡ c₁` matches the
+  * 0-init) — pinned by PortableStringHashSpec. */
+case class PortableStringHash(child: Expression, mod: Long) extends CodePointHash {
+
+  require(mod > 0, s"mod must be positive, got $mod")
+
+  override def prettyName: String = "portable_hash"
+
+  protected def step(acc: Long, cp: Int): Long = (acc * 31L + cp) % mod
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -96,4 +101,10 @@ object PortableStringHash {
     * are private[sql] in Spark 4). */
   def portableHash(c: Column, mod: Long): Column =
     org.apache.spark.sql.GraftColumnBridge.wrap1(c)(PortableStringHash(_, mod))
+
+  /** The same hash as a DuckDB expression over the non-empty VARCHAR
+    * expression `s` — the oracles' one rendering of it. */
+  def duckdbSql(s: String, mod: Long): String =
+    s"list_reduce(list_transform(string_split($s, ''), ch -> CAST(ascii(ch) AS BIGINT)), " +
+      s"(a, v) -> (a * 31 + v) % $mod)"
 }

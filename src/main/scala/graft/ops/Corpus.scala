@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.PortableStringHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -287,17 +288,16 @@ object Corpus {
     *    never shuffles full document texts (the oracle joins on raw
     *    text: same verdicts, collision-free either way).
     *  - near: the delta's MinHash band signatures probed against the
-    *    DISTINCT history band set ([[Text.portableBands]] — the
-    *    oracle-portable twin pipeline). At scale the history bands
-    *    are a precomputed index maintained once per ingest, so
-    *    per-batch cost is O(delta), never O(corpus).
+    *    DISTINCT history band set ([[Text.minhashBands]]). At scale
+    *    the history bands are a precomputed index maintained once per
+    *    ingest, so per-batch cost is O(delta), never O(corpus).
     *
     * Both probes are equi-joins on (band, sig)/hash keys; the band
     * relation is checkpointed once for its two consumers. */
   def dedupIncremental(docs: DataFrame): DataFrame = {
     // a leaf, not a bare checkpoint: deterministic stats keep the
     // probe joins' plan fixed across runs (see Iterate.leaf)
-    val bands = Iterate.leaf(Text.portableBands(docs))
+    val bands = Iterate.leaf(Text.minhashBands(docs))
     val hist = bands.filter(HistPred(col("doc_id")))
       .select(col("band").as("hb"), col("band_sig").as("hs")).distinct()
     val hits = bands.filter(!HistPred(col("doc_id")))
@@ -385,7 +385,7 @@ object Corpus {
     * pairs that CROSS split boundaries make eval scores lies, because
     * random document-level splits put clones of the same page on both
     * sides. Splits are [[splitAssign]]'s own hash buckets (the same
-    * draw the user ships), near-dup candidates are the portable
+    * draw the user ships), near-dup candidates are the
     * MinHash-LSH band buckets (T3's declared at-scale mechanics) —
     * two docs leak if they share any band bucket and sit in different
     * splits. Output: one row per ordered split pair (train→val,
@@ -410,7 +410,7 @@ object Corpus {
       .withColumn("rk", rank)
     val sizes = assigned.groupBy(col("split"), col("rk"))
       .agg(count(lit(1)).as("n_docs"))
-    val b = Text.portableBands(docs)
+    val b = Text.minhashBands(docs)
       .join(assigned, Seq("doc_id"))
     val l = b.select(col("band"), col("band_sig"),
       col("doc_id").as("da"), col("split").as("split_a"), col("rk").as("ra"))
@@ -519,8 +519,7 @@ object Corpus {
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
-      .withColumn("b", graft.functions.PortableStringHash
-        .portableHash(col("w"), Text.HashMod) % DsirBuckets)
+      .withColumn("b", Text.charHash(col("w")) % DsirBuckets)
     val buckets = toks.groupBy(col("b"))
       .agg(count(lit(1)).as("raw_c"),
         count(when(col("source") === "src0", 1)).as("tgt_c"))
@@ -892,7 +891,7 @@ object Corpus {
     * noise is a per-row scalar on the tiny output relation. */
   def dpCounts(docs: DataFrame): DataFrame = {
     val key = concat(lit("dp#"), col("lang"), lit("#"), col("source"))
-    val u = (graft.functions.PortableStringHash.portableHash(key, Text.HashMod) + lit(1L))
+    val u = (Text.charHash(key) + lit(1L))
       .cast("double") / (Text.HashMod + 1L).toDouble
     val noise = when(u < 0.5, log(lit(2.0) * u))
       .otherwise(-log(lit(2.0) * (lit(1.0) - u)))
@@ -963,7 +962,7 @@ object Corpus {
     val raw = docs.groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_raw"))
     val key = concat(lit("rel#"), col("lang"), lit("#"), col("source"))
-    val u = (graft.functions.PortableStringHash.portableHash(key, Text.HashMod) + lit(1L))
+    val u = (Text.charHash(key) + lit(1L))
       .cast("double") / (Text.HashMod + 1L).toDouble
     val noise = when(u < 0.5, log(lit(2.0) * u))
       .otherwise(-log(lit(2.0) * (lit(1.0) - u)))
@@ -1002,9 +1001,8 @@ object Corpus {
     val words = docs.select(col("doc_id"),
       posexplode(filter(split(col("text"), " "), w => w =!= "")).as(Seq("pos", "w")))
     val masked = words.withColumn("m",
-      graft.functions.PortableStringHash.portableHash(
-        concat(lit("span#"), col("doc_id").cast("string"), lit("#"), col("pos").cast("string")),
-        Text.HashMod) % SpanMaskMod < SpanMaskKeep)
+      Text.charHash(concat(lit("span#"), col("doc_id").cast("string"), lit("#"),
+        col("pos").cast("string"))) % SpanMaskMod < SpanMaskKeep)
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val withSpans = masked
       .withColumn("start", col("m") &&
@@ -1133,7 +1131,7 @@ object Corpus {
     // the same split hash buckets and the same portable band buckets;
     // leak counting is pure integer arithmetic on the distinct pairs
     "q_split_leakage" -> {
-      s"""WITH ${Text.portableBandsCte},
+      s"""WITH ${Text.minhashBandsCte},
          s AS (SELECT doc_id,
                  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
                       ELSE 'test' END AS split,
@@ -1214,10 +1212,7 @@ object Corpus {
       s"""WITH g AS (SELECT lang, source, count(*) AS n_docs
                     FROM documents GROUP BY 1, 2),
          u AS (SELECT lang, source, n_docs,
-                 (list_reduce(list_transform(
-                    string_split('dp#' || lang || '#' || source, ''),
-                    c -> CAST(ascii(c) AS BIGINT)),
-                  (a, v) -> (a * 31 + v) % ${Text.HashMod}) + 1)
+                 (${PortableStringHash.duckdbSql("'dp#' || lang || '#' || source", Text.HashMod)} + 1)
                  / CAST(${Text.HashMod + 1} AS DOUBLE) AS u
                FROM g)
          SELECT lang, source, n_docs,
@@ -1255,10 +1250,7 @@ object Corpus {
                  FROM documents GROUP BY 1, 2),
          u AS (SELECT raw.lang, raw.source, n_raw,
                  CAST(coalesce(nr, 0) AS BIGINT) AS n_released,
-                 (list_reduce(list_transform(
-                    string_split('rel#' || raw.lang || '#' || raw.source, ''),
-                    c -> CAST(ascii(c) AS BIGINT)),
-                  (a, v) -> (a * 31 + v) % ${Text.HashMod}) + 1)
+                 (${PortableStringHash.duckdbSql("'rel#' || raw.lang || '#' || raw.source", Text.HashMod)} + 1)
                  / CAST(${Text.HashMod + 1} AS DOUBLE) AS u
                FROM raw LEFT JOIN rc
                  ON rc.lang = raw.lang AND rc.source = raw.source)
@@ -1277,10 +1269,7 @@ object Corpus {
                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
                FROM documents) s0) s1),
          m AS (SELECT doc_id, pos, w,
-             list_reduce(list_transform(
-                 string_split('span#' || CAST(doc_id AS VARCHAR) || '#' || CAST(pos AS VARCHAR), ''),
-                 ch -> CAST(ascii(ch) AS BIGINT)),
-               (a, b) -> (a * 31 + b) % ${Text.HashMod}) % $SpanMaskMod < $SpanMaskKeep AS m
+             ${PortableStringHash.duckdbSql("'span#' || CAST(doc_id AS VARCHAR) || '#' || CAST(pos AS VARCHAR)", Text.HashMod)} % $SpanMaskMod < $SpanMaskKeep AS m
              FROM w),
          sp AS (SELECT *, m AND NOT coalesce(
                lag(m) OVER (PARTITION BY doc_id ORDER BY pos), FALSE) AS start
@@ -1361,9 +1350,8 @@ object Corpus {
          FROM b GROUP BY source, batch ORDER BY source, batch""",
     // +1-smoothed bucket ratios; every ln operand is integer-valued
     "q_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, source,
-           list_reduce(list_transform(string_split(w, ''), c -> CAST(ascii(c) AS BIGINT)),
-             (a, v) -> (a * 31 + v) % 1000003) % 256 AS b
+      s"""WITH t AS (SELECT doc_id, source,
+           ${PortableStringHash.duckdbSql("w", 1000003L)} % 256 AS b
            FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS w
                  FROM documents)
            WHERE w != ''),
@@ -1426,7 +1414,7 @@ object Corpus {
            CAST(floor(cum_before / 128.0) AS INT) AS bin
          FROM c ORDER BY doc_id""",
     "q_dedup_incremental" ->
-      s"""WITH ${Text.portableBandsCte},
+      s"""WITH ${Text.minhashBandsCte},
          hist AS (SELECT DISTINCT band, band_sig FROM bands WHERE doc_id % 10 < 8),
          delta AS (SELECT doc_id, band, band_sig FROM bands WHERE doc_id % 10 >= 8),
          hits AS (SELECT delta.doc_id, CAST(count(hist.band) AS INT) AS n_band_hits

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.PortableStringHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -230,15 +231,13 @@ object Graph {
     * q_triangles_est rows in bench/SCALE_DECADES. */
   private[graft] def triangleEstimateCore(edges: DataFrame,
       mod: Long = TriSampleMod, residue: Long = TriSampleResidue): DataFrame = {
+    // both counts are the leaves' own, read without a job
     val e = Iterate.leafOr(edges)
-    val nEdges = e.agg(count(lit(1)).as("n_edges"))
     val sampled = Iterate.leaf(e.filter(triSampleKeep(col("u"), col("v"), mod, residue)))
-    val nSampled = sampled.agg(count(lit(1)).as("n_sampled"))
-    val triS = triRelation(sampled)
+    triRelation(sampled)
       .agg(count(lit(1)).as("tri_sampled"))
-    nEdges.crossJoin(broadcast(nSampled)).crossJoin(broadcast(triS))
-      .select(col("n_edges"), col("n_sampled"), col("tri_sampled"),
-        (col("tri_sampled") * lit(mod * mod * mod)).as("estimate"))
+      .select(lit(Iterate.rows(e)).as("n_edges"), lit(Iterate.rows(sampled)).as("n_sampled"),
+        col("tri_sampled"), (col("tri_sampled") * lit(mod * mod * mod)).as("estimate"))
   }
 
   /** Estimator-only face (the deployment serving shape, measured both
@@ -671,10 +670,8 @@ object Graph {
         col("start").cast("string").as("path"))
     val stepped = (1 to WalkSteps).foldLeft(walks0) { (fr, step) =>
       val pick = pmod(
-        graft.functions.PortableStringHash.portableHash(
-          concat(lit("walk#"), col("start").cast("string"),
-            lit("#"), col("walk").cast("string"), lit(s"#$step")),
-          Text.HashMod),
+        Text.charHash(concat(lit("walk#"), col("start").cast("string"),
+          lit("#"), col("walk").cast("string"), lit(s"#$step"))),
         col("deg")) + 1
       adj.join(gate(fr), fr("cur") === adj("a"))
         .filter(col("rk") === pick)
@@ -1203,8 +1200,7 @@ object Graph {
   /** The walk recurrence unrolled: the same ranked adjacency, the same
     * walk#-prefixed portable-hash picks, [[WalkSteps]] chained joins. */
   private val graphWalksOracle: String = {
-    def hash(expr: String) =
-      s"list_reduce(list_transform(string_split($expr, ''), ch -> CAST(ascii(ch) AS BIGINT)), (x, y) -> (x * 31 + y) % ${Text.HashMod})"
+    def hash(expr: String) = PortableStringHash.duckdbSql(expr, Text.HashMod)
     val steps = (1 to WalkSteps).map { k =>
       s""",
          w$k AS (SELECT start, walk, b AS cur, path || ' ' || CAST(b AS VARCHAR) AS path

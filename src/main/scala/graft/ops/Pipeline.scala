@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.PortableStringHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -221,7 +222,7 @@ object Pipeline {
            SELECT cid, list_transform(range(0, 64), i ->
              CAST(len(list_filter(
                list_transform(list_filter(string_split(chunk, ' '), w -> w != ''), w ->
-                 list_reduce(list_transform(string_split(w, ''), ch -> CAST(ascii(ch) AS BIGINT)), (a, x) -> (a * 31 + x) % 1000003)
+                 ${PortableStringHash.duckdbSql("w", 1000003L)}
                    % 64),
                b -> b = i)) AS DOUBLE)) AS v
            FROM c

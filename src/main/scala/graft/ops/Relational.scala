@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.PortableStringHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -767,8 +768,7 @@ object Relational {
     * hash (register-from-raw-h correlates with rank and read 62%
     * low). */
   private def hllRegRank(ids: DataFrame, keep: Seq[String]): DataFrame = {
-    val h = graft.functions.PortableStringHash.portableHash(
-      concat(lit("hll#"), col("key").cast("string")), 1000003L)
+    val h = Text.charHash(concat(lit("hll#"), col("key").cast("string")))
     ids.select(keep.map(col) :+ h.as("h"): _*)
       .withColumn("x", expr("h ^ shiftright(h, 15)"))
       .withColumn("x", expr("(x * 1664525) % 2147483648"))
@@ -3007,10 +3007,7 @@ object Relational {
     // same portable hash + xorshift-multiply finalizer, same exact
     // integer Σ2^(26−M_j)
     "q_hll_distinct" ->
-      """WITH h1 AS (SELECT list_reduce(list_transform(
-             string_split('hll#' || CAST(event_id AS VARCHAR), ''),
-             ch -> CAST(ascii(ch) AS BIGINT)),
-           (a, v) -> (a * 31 + v) % 1000003) AS h FROM events),
+      s"""WITH h1 AS (SELECT ${PortableStringHash.duckdbSql("'hll#' || CAST(event_id AS VARCHAR)", 1000003L)} AS h FROM events),
          m1 AS (SELECT xor(h, h >> 15) AS x FROM h1),
          m2 AS (SELECT xor((x * 1664525) % 2147483648,
              ((x * 1664525) % 2147483648) >> 13) AS x FROM m1),
@@ -3039,10 +3036,7 @@ object Relational {
     // registers; both integer harmonic sums and both single divisions
     // are asserted equal in the output itself
     "q_hll_merge" ->
-      """WITH h1 AS (SELECT event_id % 2 AS half, list_reduce(list_transform(
-             string_split('hll#' || CAST(event_id AS VARCHAR), ''),
-             ch -> CAST(ascii(ch) AS BIGINT)),
-           (a, v) -> (a * 31 + v) % 1000003) AS h FROM events),
+      s"""WITH h1 AS (SELECT event_id % 2 AS half, ${PortableStringHash.duckdbSql("'hll#' || CAST(event_id AS VARCHAR)", 1000003L)} AS h FROM events),
          m1 AS (SELECT half, xor(h, h >> 15) AS x FROM h1),
          m2 AS (SELECT half, xor((x * 1664525) % 2147483648,
              ((x * 1664525) % 2147483648) >> 13) AS x FROM m1),
@@ -3079,10 +3073,7 @@ object Relational {
     // state: same hash, finalizer, and exact integer harmonic sum,
     // evaluated independently per group
     "q_hll_groups" ->
-      """WITH h1 AS (SELECT event_type AS grp, list_reduce(list_transform(
-             string_split('hll#' || CAST(event_id AS VARCHAR), ''),
-             ch -> CAST(ascii(ch) AS BIGINT)),
-           (a, v) -> (a * 31 + v) % 1000003) AS h FROM events),
+      s"""WITH h1 AS (SELECT event_type AS grp, ${PortableStringHash.duckdbSql("'hll#' || CAST(event_id AS VARCHAR)", 1000003L)} AS h FROM events),
          m1 AS (SELECT grp, xor(h, h >> 15) AS x FROM h1),
          m2 AS (SELECT grp, xor((x * 1664525) % 2147483648,
              ((x * 1664525) % 2147483648) >> 13) AS x FROM m1),

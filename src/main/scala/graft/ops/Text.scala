@@ -1,18 +1,18 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{PortableHash64, PortableStringHash}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text analysis + document deduplication (SURVEY.md §2.9 and the
   * north-star LLM-training-data operators): wordcount, TF-IDF, exact
-  * and near dedup (n-gram Jaccard with a SQL oracle; MinHash-LSH and
-  * SimHash as the scale path — xxhash64 production variants are
-  * golden-tested, and `_portable` twins re-key the identical
-  * mechanics on the cross-engine polynomial hash so banding, bucket
-  * reps, transitive-closure CC, and the vote→sign→bit simhash are
-  * each DuckDB-oracle-checked), language ID heuristic, quality
+  * and near dedup (n-gram Jaccard; MinHash-LSH and SimHash as the
+  * scale path, keyed on the portable 64-bit hash
+  * [[graft.functions.PortableHash64]], so banding, bucket reps,
+  * transitive-closure CC, and the vote→sign→bit simhash are each
+  * DuckDB-oracle-checked), language ID heuristic, quality
   * scoring, token counting, length-bucket histograms, and
   * rolling-hash fingerprinting.
   *
@@ -36,14 +36,15 @@ object Text {
     * 31·acc + ascii(char) mod [[HashMod]]. Expressible identically in
     * DuckDB (`list_reduce` over `string_split`) because the 0-init
     * first step `(0·31 + c₁) mod M ≡ c₁` matches an init-less fold.
-    * Used wherever a hash must cross the oracle boundary; the
-    * production hash stays xxhash64 (stronger mixing). Rendered by the
+    * Keys the small-range hashes that cross the oracle boundary (CMS
+    * cells, feature buckets, samples); the near-dup family needs all
+    * 64 bits mixed and keys on [[PortableHash64]]. Rendered by the
     * native [[graft.functions.PortableStringHash]] expression — the
     * equivalent HOF fold ([[charHashHof]]) walks an interpreted tree
     * per character and dominated q_hash_embed's profile. */
   private[ops] val HashMod = 1000003L
   private[ops] def charHash(c: Column): Column =
-    graft.functions.PortableStringHash.portableHash(c, HashMod)
+    PortableStringHash.portableHash(c, HashMod)
 
   /** The HOF rendering charHash replaced; kept as the semantic
     * specification the native expression is spec-pinned against. */
@@ -517,9 +518,9 @@ object Text {
     * occurrence via min≠max over doc_id (a window pair sharing one
     * WindowExec — cheaper than count(distinct)), and one groupBy
     * rolls up per doc. ~8× token volume through the gram shuffle; a
-    * production run would key on xxhash64(window) to shrink shuffle
-    * bytes to 8/window (the minhash-vs-portable precedent) — the
-    * string key here keeps the query oracle-comparable. */
+    * hashed window key ([[PortableHash64]], still oracle-comparable)
+    * would shrink shuffle bytes to 8/window; the string key here is
+    * collision-free. */
   def dedupSubstring(s: SparkSession, d: String): DataFrame =
     dedupSubstringCore(Tables.documents(s, d), gram = 8, floor = 0.2)
 
@@ -914,40 +915,53 @@ object Text {
       .orderBy(col("doc_id"))
 
   // ---------------------------------------------------------------
-  // MinHash-LSH and SimHash: the at-scale near-dup path. Hash choices
-  // (xxhash64) are engine-specific, so these are golden-tested in
-  // ScalaTest rather than oracle-compared; the harness records a
-  // rows-only check.
+  // MinHash-LSH and SimHash: the at-scale near-dup path. Every hash
+  // here is the portable 64-bit [[PortableHash64]], which DuckDB
+  // reproduces bit for bit, so each query is oracle-compared.
   // ---------------------------------------------------------------
 
   val MinhashPerms = 16
   val MinhashBands = 8
 
-  /** Per-doc MinHash signature over 3-word shingles, banded for LSH:
-    * 16 permutations simulated as xxhash64(seed, shingle), 8 bands of
-    * 2 rows → LSH similarity threshold s* = (1/b)^(1/r) ≈ 0.35.
-    * Cluster representative = min doc_id over each band bucket
-    * (single-pass LSH clustering; transitive closure would iterate
-    * this, like the PageRank loop). */
-  def dedupMinhash(s: SparkSession, d: String): DataFrame =
-    minhashClusters(Tables.documents(s, d))
+  /** MinHash slot modulus, the Mersenne prime 2³¹−1. */
+  private val SlotP = 2147483647L
+
+  /** Slot i's permutation x ↦ (aᵢ·x + bᵢ) mod [[SlotP]] of a shingle's
+    * 31 low hash bits: the 2-universal family, with every product
+    * below 2⁶² so neither engine overflows. Coefficients come from
+    * the splitmix64 finalizer of 2i+1 and 2i+2. */
+  private val slotCoefs: Seq[(Long, Long)] = (0 until MinhashPerms).map { i =>
+    (1 + Math.floorMod(PortableHash64.mix(2L * i + 1), SlotP - 1),
+      Math.floorMod(PortableHash64.mix(2L * i + 2), SlotP))
+  }
+
+  /** Per-doc MinHash signature over `(doc_id, g)` shingle rows: one
+    * hash per shingle, 16 slot permutations of it as 16 aggregate
+    * columns `mh0..mh15` (one shuffle keyed on doc_id, no slot
+    * explosion — the naive shape is |shingles|×16 exploded rows + a
+    * (doc,slot) shuffle). */
+  private def minhashSignatures(sh: DataFrame): DataFrame = {
+    val slots = slotCoefs.zipWithIndex.map { case ((a, b), i) =>
+      min((col("x") * a + b) % SlotP).as(s"mh$i")
+    }
+    sh.select(col("doc_id"), PortableHash64.hash64(col("g")).bitwiseAND(SlotP).as("x"))
+      .groupBy("doc_id").agg(slots.head, slots.tail: _*)
+  }
 
   /** Per-doc LSH band signatures: distinct 3-word shingles → 16
-    * min-hash slots as 16 aggregate columns (one shuffle keyed on
-    * doc_id, no slot explosion — the naive shape is |shingles|×16
-    * exploded rows + a (doc,slot) shuffle) → 8 band signatures.
-    * Documents too short to shingle (<3 words) are absent. */
+    * min-hash slots → 8 bands of 2 rows, threshold s* = (1/b)^(1/r)
+    * ≈ 0.35 (the banding of "Implementing Distributed Similarity Joins
+    * using LSH", EDBT 2022). A band signature is the exact pair
+    * encoding mh₂ᵦ·P + mh₂ᵦ₊₁ (no hash, no collisions). Documents too
+    * short to shingle (<3 words) are absent. */
   private[graft] def minhashBands(docs: DataFrame): DataFrame = {
-    val sh = docShingles(docs)
-    val rowsPerBand = MinhashPerms / MinhashBands
-    val minhash = sh.groupBy("doc_id").agg(
-      min(xxhash64(lit(0), col("g"))).as("mh0"),
-      (1 until MinhashPerms).map(i => min(xxhash64(lit(i), col("g"))).as(s"mh$i")): _*)
+    require(MinhashPerms / MinhashBands == 2, "pair encoding below assumes 2 rows per band")
     val bandCols = (0 until MinhashBands).map { b =>
-      val slots = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
-      struct(lit(b).as("band"), xxhash64(slots: _*).as("band_sig")).as(s"bs$b")
+      struct(lit(b).as("band"),
+        (col(s"mh${2 * b}") * SlotP + col(s"mh${2 * b + 1}")).as("band_sig")).as(s"bs$b")
     }
-    minhash.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
+    minhashSignatures(docShingles(docs))
+      .select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
   }
 
@@ -957,12 +971,9 @@ object Text {
     * band subplan (shingle explode + 16-way minhash agg), where the
     * r3 agg+join-back shape needed a persist (leaked) or re-derived
     * that subplan per consumer. */
-  private def withBucketReps(bandsRaw: DataFrame): DataFrame =
-    bandsRaw.withColumn("band_rep",
-      min(col("doc_id")).over(Window.partitionBy("band", "band_sig")))
-
   private def bandsWithReps(docs: DataFrame): DataFrame =
-    withBucketReps(minhashBands(docs))
+    minhashBands(docs).withColumn("band_rep",
+      min(col("doc_id")).over(Window.partitionBy("band", "band_sig")))
 
   /** Shared clustering tail: left-join every doc (unshingleable ones
     * included) to its `(doc_id, rep)` assignment; unmatched docs
@@ -974,59 +985,17 @@ object Text {
       .withColumn("is_dup", col("doc_id") =!= col("cluster_rep"))
       .orderBy(col("doc_id"))
 
+  /** MinHash-LSH dedup (T3): cluster representative = min doc_id over
+    * each band bucket (single-pass LSH clustering; the transitive
+    * closure is [[minhashClustersClosure]]). */
+  def dedupMinhash(s: SparkSession, d: String): DataFrame =
+    minhashClusters(Tables.documents(s, d))
+
   /** Core MinHash-LSH over any `(doc_id, text)` relation — one-pass
     * clustering (rep = min doc over each band bucket; not transitive). */
   def minhashClusters(docs: DataFrame): DataFrame =
     toClusters(docs,
       bandsWithReps(docs).groupBy("doc_id").agg(min(col("band_rep")).as("rep")))
-
-  /** Band relation of the oracle-comparable MinHash twin: the xxhash64
-    * permutations are replaced by affine transforms of ONE portable
-    * [[charHash]] — hᵢ(g) = (h(g)·(2i+1) + i) mod M — and the band
-    * signature is the exact pair encoding mh₂ᵦ·M + mh₂ᵦ₊₁ (no hash,
-    * no collisions). Same plan shape as [[minhashBands]]. */
-  private[ops] def portableBands(docs: DataFrame): DataFrame = {
-    val sh = docShingles(docs).withColumn("h", charHash(col("g")))
-    val minhash = sh.groupBy("doc_id").agg(
-      min((col("h") * 1L + 0L) % HashMod).as("mh0"),
-      (1 until MinhashPerms).map(i =>
-        min((col("h") * (2 * i + 1).toLong + i.toLong) % HashMod).as(s"mh$i")): _*)
-    val rowsPerBand = MinhashPerms / MinhashBands
-    require(rowsPerBand == 2, "pair encoding below assumes 2 rows per band")
-    val bandCols = (0 until MinhashBands).map { b =>
-      struct(lit(b).as("band"),
-        (col(s"mh${2 * b}") * HashMod + col(s"mh${2 * b + 1}")).as("band_sig")).as(s"bs$b")
-    }
-    minhash.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
-  }
-
-  /** Oracle-comparable twin of [[minhashClusters]]: [[portableBands]]
-    * plus the same one-pass bucket-rep assignment, so the complete LSH
-    * mechanics (banding, bucket reps, min-rep assignment) are checked
-    * against DuckDB row-for-row. The xxhash64 path stays the
-    * production default. */
-  def minhashClustersPortable(docs: DataFrame): DataFrame =
-    toClusters(docs,
-      withBucketReps(portableBands(docs))
-        .groupBy("doc_id").agg(min(col("band_rep")).as("rep")))
-
-  /** Oracle-comparable twin of [[minhashClustersClosure]]: portable
-    * bands → star edges → [[Components]] fixed-point closure. The
-    * DuckDB oracle unrolls min-label propagation over the SAME
-    * doc↔bucket incidence (identical connectivity classes, so the
-    * fixed points agree); the engine side still iterates to
-    * convergence — this checks the CC semantics cross-engine, which
-    * the xxhash64 production path can't. */
-  def minhashClustersClosurePortable(docs: DataFrame): DataFrame = {
-    val edges = withBucketReps(portableBands(docs))
-      .filter(col("doc_id") =!= col("band_rep"))
-      .select(col("band_rep").as("src"), col("doc_id").as("dst"))
-      .distinct()
-    val comps = Components.connectedComponents(edges)
-      .select(col("node").as("doc_id"), col("comp").as("rep"))
-    toClusters(docs, comps)
-  }
 
   /** MinHash calibration curve (T53, r6): the measurement loop a
     * production dedup deployment runs before trusting its LSH
@@ -1034,7 +1003,7 @@ object Text {
     * near-dup family. Over the df-capped shared-shingle candidate
     * universe (the declared at-scale universe of [[dedupNgramIdf]]),
     * every candidate pair contributes its EXACT Jaccard and its
-    * 16-permutation portable-MinHash estimate (slot-agreement
+    * 16-slot MinHash estimate ([[minhashSignatures]]; slot-agreement
     * fraction — the estimator whose expectation IS Jaccard), plus
     * whether the 8×2 banding would have caught it; pairs roll up by
     * exact-Jaccard decile into the empirical calibration table:
@@ -1061,11 +1030,7 @@ object Text {
       .filter(col("df") <= NgramMaxDf)
       .select("doc_id", "g")
     val pairs = jaccardPairs(sh, 0.0) // da, db, na, nb, inter (+jac, unused)
-    val sigs = sh.withColumn("h", charHash(col("g")))
-      .groupBy("doc_id")
-      .agg(min((col("h") * 1L + 0L) % HashMod).as("mh0"),
-        (1 until MinhashPerms).map(i =>
-          min((col("h") * (2 * i + 1).toLong + i.toLong) % HashMod).as(s"mh$i")): _*)
+    val sigs = minhashSignatures(sh)
     val a = sigs.select(col("doc_id").as("da") +:
       (0 until MinhashPerms).map(i => col(s"mh$i").as(s"a$i")): _*)
     val b = sigs.select(col("doc_id").as("db") +:
@@ -1103,8 +1068,7 @@ object Text {
     * corpus dedup actually WRITES — the detection families (T3, J7,
     * V4…) say which docs are duplicates of each other; this decides
     * which copy survives. Clusters come from the transitive-closure
-    * portable MinHash path ([[minhashClustersClosurePortable]] — the
-    * oracle-checkable twin of the production xxhash64 route), then
+    * MinHash path ([[minhashClustersClosure]]), then
     * each cluster keeps its LONGEST member (n_chars desc, doc_id as
     * the deterministic tie-break) — the "keep the most complete copy"
     * convention of pretraining dedup, where near-dup clusters mix
@@ -1120,7 +1084,7 @@ object Text {
     * DataFrame-parameterized so TextSpec can pin the longest-wins /
     * tie-break / singleton-keeps contract on a planted cluster. */
   def dedupSurvivorsCore(docs: DataFrame): DataFrame = {
-    val clusters = minhashClustersClosurePortable(docs)
+    val clusters = minhashClustersClosure(docs)
       .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
     val part = Window.partitionBy(col("cluster_rep"))
     val rk = row_number().over(part.orderBy(col("n_chars").desc, col("doc_id")))
@@ -1136,6 +1100,9 @@ object Text {
     * labels to a fixed point, so chains A~B~C collapse into one
     * cluster even when A and C never share a bucket — the semantics a
     * real corpus dedup wants. */
+  def dedupMinhashClosure(s: SparkSession, d: String): DataFrame =
+    minhashClustersClosure(Tables.documents(s, d))
+
   def minhashClustersClosure(docs: DataFrame): DataFrame = {
     val edges = bandsWithReps(docs)
       .filter(col("doc_id") =!= col("band_rep"))
@@ -1146,10 +1113,10 @@ object Text {
     toClusters(docs, comps)
   }
 
-  /** 64-bit SimHash over the word bag: per-word xxhash64, each bit
-    * votes ±term-frequency, sign → bit. Emits 4×16-bit band keys for
-    * Hamming-LSH bucketing. Work = |tokens|×64 narrow rows, two
-    * shuffles (doc×bit, then doc). */
+  /** 64-bit SimHash over the word bag: per-word [[PortableHash64]],
+    * each bit votes ±term-frequency, sign → bit. Emits 4×16-bit band
+    * keys for Hamming-LSH bucketing. Work = |tokens|×64 narrow rows,
+    * two shuffles (doc×bit, then doc). */
   def dedupSimhash(s: SparkSession, d: String): DataFrame =
     simhash(Tables.documents(s, d))
 
@@ -1157,18 +1124,21 @@ object Text {
     * votes are 64 codegen'd aggregate columns over the flat token
     * rows — one shuffle keyed on doc_id; the naive rendering
     * (posexplode of a 64-slot vote array) multiplies the token stream
-    * ×64 before it ever reaches the aggregate. */
+    * ×64 before it ever reaches the aggregate. Empty tokens are
+    * filtered (DuckDB's `list_reduce` cannot hash the empty list `''`
+    * splits to). */
   def simhash(docs: DataFrame): DataFrame = {
     val tf = docs
       .select(col("doc_id"), explode(words(col("text"))).as("w"))
+      .filter(col("w") =!= "")
       .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
-      .withColumn("h", xxhash64(col("w")))
+      .withColumn("h", PortableHash64.hash64(col("w")))
     val voteCols = (0 until 64).map { b =>
       sum(when(expr(s"((h >> $b) & 1) = 1"), col("cnt")).otherwise(-col("cnt"))).as(s"v$b")
     }
     val fingerprint = (0 until 64)
-      .map(b => when(col(s"v$b") > 0, expr(s"shiftleft(CAST(1 AS BIGINT), $b)")).otherwise(0L))
-      .reduce(_ + _)
+      .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L))
+      .reduce(_ bitwiseOR _)
     tf.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
       .select(col("doc_id"), fingerprint.as("simhash"))
       .select(col("doc_id"), col("simhash"),
@@ -1176,34 +1146,6 @@ object Text {
         expr("(simhash >> 32) & 65535").as("band1"),
         expr("(simhash >> 16) & 65535").as("band2"),
         expr("simhash & 65535").as("band3"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Oracle-comparable 16-bit twin of [[simhash]]: per-word votes come
-    * from the portable [[charHash]] (< 2²⁰, so 16 meaningful low bits)
-    * instead of xxhash64, with the same vote→sign→bit mechanics and
-    * 2×8-bit Hamming band keys. The polynomial hash's low bits mix far
-    * worse than xxhash64's — this variant exists to drive the full
-    * simhash pipeline through the DuckDB oracle, not to replace the
-    * 64-bit production path. Empty tokens are filtered on both sides
-    * (DuckDB's `list_reduce` errors on the empty list `''` splits to). */
-  def simhashPortable(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(words(col("text"))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
-      .withColumn("h", charHash(col("w")))
-    val voteCols = (0 until 16).map { b =>
-      sum(when(expr(s"((h >> $b) & 1) = 1"), col("cnt")).otherwise(-col("cnt"))).as(s"v$b")
-    }
-    val fingerprint = (0 until 16)
-      .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L))
-      .reduce(_ + _)
-    tf.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-      .select(col("doc_id"), fingerprint.as("simhash16"))
-      .select(col("doc_id"), col("simhash16"),
-        expr("(simhash16 >> 8) & 255").as("band0"),
-        expr("simhash16 & 255").as("band1"))
       .orderBy(col("doc_id"))
   }
 
@@ -1802,17 +1744,15 @@ object Text {
     "q_ngram_novelty" -> ngramNovelty,
     "q_length_buckets" -> lengthBuckets,
     "q_fingerprint"   -> fingerprint,
+    // the `_portable` names stay declared (dropping a query counts as
+    // a regression) and run the same path as their production names
     "q_dedup_minhash" -> dedupMinhash,
-    "q_dedup_minhash_portable" -> ((s: SparkSession, d: String) =>
-      minhashClustersPortable(Tables.documents(s, d))),
-    "q_dedup_minhash_cc" -> ((s: SparkSession, d: String) =>
-      minhashClustersClosure(Tables.documents(s, d))),
-    "q_dedup_minhash_cc_portable" -> ((s: SparkSession, d: String) =>
-      minhashClustersClosurePortable(Tables.documents(s, d))),
+    "q_dedup_minhash_portable" -> dedupMinhash,
+    "q_dedup_minhash_cc" -> dedupMinhashClosure,
+    "q_dedup_minhash_cc_portable" -> dedupMinhashClosure,
     "q_dedup_survivors" -> dedupSurvivors,
     "q_dedup_simhash" -> dedupSimhash,
-    "q_dedup_simhash_portable" -> ((s: SparkSession, d: String) =>
-      simhashPortable(Tables.documents(s, d))),
+    "q_dedup_simhash_portable" -> dedupSimhash,
     "q_minhash_calibrate" -> minhashCalibrate,
   )
 
@@ -1841,37 +1781,42 @@ object Text {
        sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g FROM idx)"""
 
   private val hashedVecCte =
-    """v AS (SELECT doc_id,
+    s"""v AS (SELECT doc_id,
          list_transform(range(0, 64), i ->
            CAST(len(list_filter(
              list_transform(list_filter(string_split(text, ' '), w -> w != ''), w ->
-               list_reduce(list_transform(string_split(w, ''), c -> CAST(ascii(c) AS BIGINT)), (a, v) -> (a * 31 + v) % 1000003)
+               ${PortableStringHash.duckdbSql("w", 1000003L)}
                  % 64),
              b -> b = i)) AS DOUBLE)) AS vec
          FROM documents)"""
 
-  /** Shared portable-band CTE chain (through `bands`), generated to
-    * stay in lockstep with [[portableBands]]'s constants (perm count,
-    * band count, affine coefficients). `bands` is MATERIALIZED: the
-    * closure oracle references it inside every unrolled propagation
-    * round, and DuckDB would otherwise re-inline the whole shingle
-    * pipeline per reference (the PageRank-oracle lesson). */
-  private[ops] val portableBandsCte: String = {
-    val mhCols = (0 until MinhashPerms)
-      .map(i => s"min((h * ${2 * i + 1} + $i) % $HashMod) AS mh$i").mkString(", ")
+  /** The `mh` CTE of [[minhashSignatures]] over the `(doc_id, g)`
+    * relation `src`: the same hash, low-bit mask and slot
+    * coefficients, interpolated from the same vals. */
+  private def minhashSigCte(src: String): String = {
+    val slots = slotCoefs.zipWithIndex
+      .map { case ((a, b), i) => s"min((x * $a + $b) % $SlotP) AS mh$i" }.mkString(", ")
+    s"""mh AS (SELECT doc_id, $slots
+             FROM (SELECT doc_id, ${PortableHash64.duckdbSql("g")} & $SlotP AS x FROM $src)
+             GROUP BY doc_id)"""
+  }
+
+  /** Shared band CTE chain (through `bands`), generated in lockstep
+    * with [[minhashBands]]. `bands` is MATERIALIZED: the closure oracle
+    * references it inside every unrolled propagation round, and DuckDB
+    * would otherwise re-inline the whole shingle pipeline per
+    * reference (the PageRank-oracle lesson). */
+  private[ops] val minhashBandsCte: String = {
     val bandSelects = (0 until MinhashBands)
-      .map(b => s"SELECT doc_id, $b AS band, mh${2 * b} * $HashMod + mh${2 * b + 1} AS band_sig FROM mh")
+      .map(b => s"SELECT doc_id, $b AS band, mh${2 * b} * $SlotP + mh${2 * b + 1} AS band_sig FROM mh")
       .mkString(" UNION ALL ")
     s"""$shinglesCte,
-       h AS (SELECT doc_id, list_reduce(list_transform(string_split(g, ''),
-               c -> CAST(ascii(c) AS BIGINT)), (a, v) -> (a * 31 + v) % $HashMod) AS h
-             FROM sh),
-       mh AS (SELECT doc_id, $mhCols FROM h GROUP BY doc_id),
+       ${minhashSigCte("sh")},
        bands AS MATERIALIZED ($bandSelects)"""
   }
 
-  private val portableMinhashOracle: String =
-    s"""WITH $portableBandsCte,
+  private val minhashOracle: String =
+    s"""WITH $minhashBandsCte,
        reps AS (SELECT band, band_sig, min(doc_id) AS band_rep FROM bands GROUP BY band, band_sig),
        assign AS (SELECT b.doc_id, min(r.band_rep) AS rep
                   FROM bands b JOIN reps r USING (band, band_sig) GROUP BY b.doc_id)
@@ -1880,12 +1825,10 @@ object Text {
        FROM documents d LEFT JOIN assign a USING (doc_id)
        ORDER BY d.doc_id"""
 
-  /** Calibration oracle: same capped shingle universe, same affine
-    * signatures as [[portableBandsCte]], per-pair values quantized to
+  /** Calibration oracle: same capped shingle universe, same
+    * signatures ([[minhashSigCte]]), per-pair values quantized to
     * exact integers, one division per decile mean. */
   private val minhashCalibrateOracle: String = {
-    val mhCols = (0 until MinhashPerms)
-      .map(i => s"min((h * ${2 * i + 1} + $i) % $HashMod) AS mh$i").mkString(", ")
     val nMatch = (0 until MinhashPerms)
       .map(i => s"CASE WHEN ma.mh$i = mb.mh$i THEN 1 ELSE 0 END").mkString(" + ")
     val bandOr = (0 until MinhashBands)
@@ -1899,10 +1842,7 @@ object Text {
        pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
                  FROM fsh a JOIN fsh b ON a.g = b.g AND a.doc_id < b.doc_id
                  GROUP BY 1, 2),
-       hh AS (SELECT doc_id, list_reduce(list_transform(string_split(g, ''),
-                c -> CAST(ascii(c) AS BIGINT)), (acc, v) -> (acc * 31 + v) % $HashMod) AS h
-              FROM fsh),
-       mh AS (SELECT doc_id, $mhCols FROM hh GROUP BY doc_id),
+       ${minhashSigCte("fsh")},
        pp AS (SELECT p.inter, sa.n + sb.n - p.inter AS uni,
                 $nMatch AS n_match,
                 CASE WHEN $bandOr THEN 1 ELSE 0 END AS hit
@@ -1933,7 +1873,7 @@ object Text {
   /** The shared 8-round min-label closure CTE (fixed point `l8`
     * carries (doc_id, lbl)) — the oracle body behind both the cluster
     * assignment and the survivor selection. */
-  private val portableClosureCte: String = {
+  private val closureCte: String = {
     val rounds = 8
     val steps = (1 to rounds).map { k =>
       s""", b$k AS (SELECT i.band, i.band_sig, min(l.lbl) AS bl
@@ -1944,18 +1884,18 @@ object Text {
              LEFT JOIN b$k b ON i.band = b.band AND i.band_sig = b.band_sig
              GROUP BY l.doc_id, l.lbl)"""
     }.mkString
-    s"""WITH $portableBandsCte,
+    s"""WITH $minhashBandsCte,
        l0 AS (SELECT doc_id, doc_id AS lbl FROM documents)$steps"""
   }
 
-  private val portableClosureOracle: String =
-    s"""$portableClosureCte
+  private val closureOracle: String =
+    s"""$closureCte
        SELECT doc_id, lbl AS cluster_rep, lbl != doc_id AS is_dup
        FROM l8 ORDER BY doc_id"""
 
   // same l8 fixed point, same (n_chars DESC, doc_id) longest-wins rank
   private val survivorsOracle: String =
-    s"""$portableClosureCte,
+    s"""$closureCte,
        sized AS (SELECT l.doc_id, l.lbl AS cluster_rep, d.n_chars
                  FROM l8 l JOIN documents d ON d.doc_id = l.doc_id),
        rk AS (SELECT doc_id, cluster_rep,
@@ -1967,26 +1907,27 @@ object Text {
        SELECT doc_id, cluster_rep, cluster_size, rn = 1 AS keep
        FROM rk ORDER BY doc_id"""
 
-  /** Generated in lockstep with [[simhashPortable]] (16 bits, 2 band
-    * keys). Sums are cast back to BIGINT (DuckDB sums into HUGEINT). */
-  private val portableSimhashOracle: String = {
-    val voteCols = (0 until 16)
+  /** Generated in lockstep with [[simhash]]. Sums are cast back to
+    * BIGINT (DuckDB sums into HUGEINT); the fingerprint is built in
+    * HUGEINT and wrapped, because DuckDB raises on `1::BIGINT << 63`. */
+  private val simhashOracle: String = {
+    val voteCols = (0 until 64)
       .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN cnt ELSE -cnt END) AS v$b")
       .mkString(", ")
-    val fp = (0 until 16)
-      .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
+    val fp = (0 until 64)
+      .map(b => s"CASE WHEN v$b > 0 THEN CAST(${BigInt(1) << b} AS HUGEINT) ELSE 0 END")
       .mkString(" + ")
     s"""WITH tf AS (SELECT doc_id, w, count(*) AS cnt
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
            WHERE w != '' GROUP BY doc_id, w),
-       h AS (SELECT doc_id, cnt,
-           list_reduce(list_transform(string_split(w, ''),
-             c -> CAST(ascii(c) AS BIGINT)), (a, v) -> (a * 31 + v) % $HashMod) AS h
-           FROM tf),
+       h AS (SELECT doc_id, cnt, ${PortableHash64.duckdbSql("w")} AS h FROM tf),
        v AS (SELECT doc_id, $voteCols FROM h GROUP BY doc_id),
-       fp AS (SELECT doc_id, $fp AS simhash16 FROM v)
-       SELECT doc_id, simhash16,
-              (simhash16 >> 8) & 255 AS band0, simhash16 & 255 AS band1
+       u AS (SELECT doc_id, $fp AS u FROM v),
+       fp AS (SELECT doc_id, CAST(CASE WHEN u >= ${BigInt(1) << 63} THEN u - ${BigInt(1) << 64}
+                ELSE u END AS BIGINT) AS simhash FROM u)
+       SELECT doc_id, simhash,
+              (simhash >> 48) & 65535 AS band0, (simhash >> 32) & 65535 AS band1,
+              (simhash >> 16) & 65535 AS band2, simhash & 65535 AS band3
        FROM fp ORDER BY doc_id"""
   }
 
@@ -2068,11 +2009,14 @@ object Text {
                 substr(text, CAST(start AS INT) + 1, 256) AS chunk,
                 CAST(length(substr(text, CAST(start AS INT) + 1, 256)) AS INT) AS chunk_chars
          FROM starts ORDER BY doc_id, chunk_idx""",
-    "q_dedup_minhash_portable" -> portableMinhashOracle,
+    "q_dedup_minhash" -> minhashOracle,
+    "q_dedup_minhash_portable" -> minhashOracle,
     "q_minhash_calibrate" -> minhashCalibrateOracle,
-    "q_dedup_minhash_cc_portable" -> portableClosureOracle,
+    "q_dedup_minhash_cc" -> closureOracle,
+    "q_dedup_minhash_cc_portable" -> closureOracle,
     "q_dedup_survivors" -> survivorsOracle,
-    "q_dedup_simhash_portable" -> portableSimhashOracle,
+    "q_dedup_simhash" -> simhashOracle,
+    "q_dedup_simhash_portable" -> simhashOracle,
     "q_pipeline_prep" ->
       """WITH survivors AS (
            SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
@@ -2237,14 +2181,11 @@ object Text {
          ORDER BY doc_id, pos""",
     // same salted portable hash per row, same word-rollup cell sums
     "q_cms_topk" ->
-      """WITH wc AS (SELECT w AS word, count(*) AS n_exact
+      s"""WITH wc AS (SELECT w AS word, count(*) AS n_exact
            FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
            GROUP BY w),
          hc AS (SELECT word, n_exact, r,
-           CAST(list_reduce(list_transform(
-               string_split('cms' || CAST(r AS VARCHAR) || '#' || word, ''),
-               ch -> CAST(ascii(ch) AS BIGINT)),
-             (a, v) -> (a * 31 + v) % 1000003) % 256 AS INT) AS c
+           CAST(${PortableStringHash.duckdbSql("'cms' || CAST(r AS VARCHAR) || '#' || word", 1000003L)} % 256 AS INT) AS c
            FROM wc CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) rs),
          cells AS (SELECT r, c, CAST(sum(n_exact) AS BIGINT) AS cell_n
            FROM hc GROUP BY r, c),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.PortableStringHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -659,7 +660,7 @@ object Vectors {
     * re-implementation (drift-proof; PortableStringHashSpec pins the
     * expression against its HOF reference). */
   private def jlHash(str: String): Long =
-    graft.functions.PortableStringHash(
+    PortableStringHash(
       org.apache.spark.sql.catalyst.expressions.Literal(str), 1000003L)
       .hash(org.apache.spark.unsafe.types.UTF8String.fromString(str))
 
@@ -1843,10 +1844,7 @@ object Vectors {
          y AS (SELECT vec_id,
            list_transform(range(0, $JlK), j ->
              list_reduce(list_prepend(0.0, list_transform(range(0, 64), i ->
-               (1.0 - 2.0 * (list_reduce(list_transform(
-                   string_split('jl#' || CAST(j AS VARCHAR) || '#' || CAST(i AS VARCHAR), ''),
-                   ch -> CAST(ascii(ch) AS BIGINT)),
-                 (a, b) -> (a * 31 + b) % 1000003) % 2)) * v[i + 1])),
+               (1.0 - 2.0 * (${PortableStringHash.duckdbSql("'jl#' || CAST(j AS VARCHAR) || '#' || CAST(i AS VARCHAR)", 1000003L)} % 2)) * v[i + 1])),
                (a, b) -> a + b)) AS ys,
            list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)),
              (a, b) -> a + b) AS nx

@@ -59,12 +59,5 @@ class ComponentsSpec extends SparkSpec {
     assert(closure(1L) == 1L && closure(2L) == 1L && closure(3L) == 1L,
       s"chain must collapse to one cluster: $closure")
     assert(closure(9L) == 9L)
-
-    // the oracle-comparable portable-hash twin must close the same chain
-    val portable = Text.minhashClustersClosurePortable(docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(portable(1L) == 1L && portable(2L) == 1L && portable(3L) == 1L,
-      s"portable closure must collapse the chain too: $portable")
-    assert(portable(9L) == 9L)
   }
 }

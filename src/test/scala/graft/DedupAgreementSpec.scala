@@ -3,23 +3,22 @@ package graft
 import graft.ops.Text
 import org.apache.spark.sql.functions.col
 
-/** Prod↔portable dedup agreement (r3 verdict task #6): the xxhash64
-  * production paths have no DuckDB oracle (the hash is
-  * engine-specific), so until now they were bounded only by golden
-  * fixtures plus the construction-identical mechanics of their green
-  * `_portable` twins. This spec bounds them against GROUND TRUTH on
-  * the harness corpus itself — exact shingle-set Jaccard computed
-  * independently in plain Scala (the tokenization is `split(" ")` +
-  * 3-word sliding windows, mirrored verbatim from docShingles).
+/** Near-dup agreement with GROUND TRUTH (r3 verdict task #6): the
+  * DuckDB oracle proves the MinHash and SimHash queries compute what
+  * their SQL says, not that what they say finds duplicates. This spec
+  * bounds them against exact shingle-set Jaccard computed
+  * independently in plain Scala on the harness corpus itself (the
+  * tokenization is `split(" ")` + 3-word sliding windows, mirrored
+  * verbatim from docShingles).
   *
   * What agreement can honestly mean here: the corpus is bimodal
   * (planted pairs at jac ≈ 0.99, background below 0.2 from a tiny
-  * vocabulary), and at s* ≈ 0.35 an LSH family's verdict on a
-  * background pair is a legitimate per-family coin flip — the two
-  * hash families MUST agree on the planted pairs (miss probability
-  * (1-0.99²)⁸ ≈ 10⁻¹⁴ each) and must never hallucinate a cluster
-  * edge with zero shared evidence, but they may legitimately differ
-  * on borderline pairs. The assertions encode exactly that. */
+  * vocabulary), and at s* ≈ 0.35 the LSH verdict on a background pair
+  * is a legitimate coin flip of the hash family — so the path MUST
+  * catch every planted pair (miss probability (1-0.99²)⁸ ≈ 10⁻¹⁴ each)
+  * and must never hallucinate a cluster edge with zero shared
+  * evidence, but may go either way on borderline pairs. The
+  * assertions encode exactly that. */
 class DedupAgreementSpec extends SparkSpec {
   import spark.implicits._
 
@@ -52,36 +51,30 @@ class DedupAgreementSpec extends SparkSpec {
   private def clustersOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.select(col("doc_id"), col("cluster_rep")).as[(Long, Long)].collect().toMap
 
-  test("one-pass MinHash: both hash families catch every planted pair; prod edges always share a shingle") {
+  test("one-pass MinHash catches every planted pair; every edge shares a shingle") {
     assert(planted.size >= 20, s"expected the corpus's planted pairs, got ${planted.size}")
-    val prod = clustersOf(Text.minhashClusters(docs))
-    val port = clustersOf(Text.minhashClustersPortable(docs))
+    val got = clustersOf(Text.minhashClusters(docs))
     planted.foreach { case (a, b) =>
-      assert(prod(a) == prod(b), s"xxhash64 one-pass missed planted pair ($a,$b) jac=${jac(a, b)}")
-      assert(port(a) == port(b), s"portable one-pass missed planted pair ($a,$b) jac=${jac(a, b)}")
+      assert(got(a) == got(b), s"one-pass missed planted pair ($a,$b) jac=${jac(a, b)}")
     }
-    // precision (prod only — the 20-bit portable hash space admits
-    // coincidental min collisions by design, its oracle covers it):
-    // a 64-bit band collision forces a genuinely shared argmin
-    // shingle, and one-pass reps share a bucket with every member,
-    // so every (doc, rep) edge must have nonzero exact Jaccard
-    prod.collect { case (d, r) if d != r => (d, r) }.foreach { case (d, r) =>
-      assert(jac(d, r) > 0.0,
-        s"xxhash64 one-pass clustered ($d under $r) with zero shared shingles")
+    // precision: a band collision of two 31-bit slots forces a
+    // genuinely shared argmin shingle (a coincidental double collision
+    // is ~2⁻⁶² per pair), and one-pass reps share a bucket with every
+    // member, so every (doc, rep) edge must have nonzero exact Jaccard
+    got.collect { case (d, r) if d != r => (d, r) }.foreach { case (d, r) =>
+      assert(jac(d, r) > 0.0, s"one-pass clustered ($d under $r) with zero shared shingles")
     }
   }
 
-  test("closure MinHash: both families agree on planted pairs; prod components are connected by real similarity") {
-    val prod = clustersOf(Text.minhashClustersClosure(docs))
-    val port = clustersOf(Text.minhashClustersClosurePortable(docs))
+  test("closure MinHash keeps planted pairs together; components are connected") {
+    val got = clustersOf(Text.minhashClustersClosure(docs))
     planted.foreach { case (a, b) =>
-      assert(prod(a) == prod(b), s"xxhash64 closure split planted pair ($a,$b)")
-      assert(port(a) == port(b), s"portable closure split planted pair ($a,$b)")
+      assert(got(a) == got(b), s"closure split planted pair ($a,$b)")
     }
     // precision for the transitive path: co-membership may chain, so
     // the requirement is connectivity in the shares-a-shingle graph
-    // WITHIN each prod cluster, not pairwise sharing
-    prod.groupBy(_._2).values.map(_.keys.toSeq.sorted).filter(_.length > 1).foreach { members =>
+    // WITHIN each cluster, not pairwise sharing
+    got.groupBy(_._2).values.map(_.keys.toSeq.sorted).filter(_.length > 1).foreach { members =>
       val reach = scala.collection.mutable.Set(members.head)
       var grew = true
       while (grew) {
@@ -91,12 +84,12 @@ class DedupAgreementSpec extends SparkSpec {
         }
       }
       assert(reach.size == members.size,
-        s"xxhash64 closure cluster $members is not connected in the shared-shingle graph")
+        s"closure cluster $members is not connected in the shared-shingle graph")
     }
   }
 
   test("MUTATION: a doc-salted band signature fails the planted-pair agreement check") {
-    // The inverse guard (r6 verdict task 8): the twin-bound above only
+    // The inverse guard (r6 verdict task 8): the planted-pair bound above only
     // has teeth if a plausible LSH bug actually trips it. The classic
     // bug class is a per-doc column leaking into the bucket key (salt,
     // id, partition tag) — buckets become singletons and every planted
@@ -119,47 +112,40 @@ class DedupAgreementSpec extends SparkSpec {
       "doc-salted band keys still co-clustered a planted pair — the agreement check has no teeth")
   }
 
-  test("SimHash: both fingerprint families separate planted pairs from background") {
+  test("SimHash separates planted pairs from background") {
     def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-    val prodSig = Text.dedupSimhash(spark, sf0001)
+    val sig = Text.dedupSimhash(spark, sf0001)
       .select(col("doc_id"), col("simhash")).as[(Long, Long)].collect().toMap
-    val portSig = Text.simhashPortable(docs)
-      .select(col("doc_id"), col("simhash16")).as[(Long, Long)].collect().toMap
     val plantedSet = planted.toSet
     // deterministic background sample: consecutive ids that are not
     // planted pairs (the corpus's background similarity tier)
     val background = shingles.keys.toSeq.sorted.sliding(2)
       .collect { case Seq(a, b) if !plantedSet((a, b)) => (a, b) }.toSeq
     // the tails legitimately touch on this corpus — background docs
-    // draw from the same ~31-word vocabulary (so a background pair can
-    // land at hamming 7/64), and the 16-bit twin even has birthday
-    // collisions at background min 0 — so the agreement contract is
-    // DISTRIBUTIONAL: in both families the planted p90 sits strictly
-    // below the background median (measured: prod 5 vs 18, port 1 vs
-    // 4), i.e. the bulk of real near-dups is closer than the typical
-    // unrelated pair, under either hash family.
+    // draw from the same ~31-word vocabulary, so a background pair can
+    // land at a small hamming distance — so the contract is
+    // DISTRIBUTIONAL: the planted p90 sits strictly below the
+    // background median, i.e. the bulk of real near-dups is closer
+    // than the typical unrelated pair
     def p(xs: Seq[Int], q: Double): Int = { val s = xs.sorted; s((s.size * q).toInt min (s.size - 1)) }
-    for ((label, sig) <- Seq("64-bit" -> prodSig, "16-bit portable" -> portSig)) {
-      val pl = planted.map { case (a, b) => hamming(sig(a), sig(b)) }
-      val bg = background.map { case (a, b) => hamming(sig(a), sig(b)) }
-      assert(p(pl, 0.9) < p(bg, 0.5),
-        s"$label simhash: planted p90 ${p(pl, 0.9)} not below background median ${p(bg, 0.5)}")
-    }
-    // and the production path's planted pairs are absolutely close:
-    // a near-identical word bag flips only the handful of bits whose
-    // votes the few differing words decide (measured max: 7/64)
-    val prodPlantedMax = planted.map { case (a, b) => hamming(prodSig(a), prodSig(b)) }.max
-    assert(prodPlantedMax <= 10, s"64-bit simhash planted max hamming $prodPlantedMax > 10")
+    val pl = planted.map { case (a, b) => hamming(sig(a), sig(b)) }
+    val bg = background.map { case (a, b) => hamming(sig(a), sig(b)) }
+    assert(p(pl, 0.9) < p(bg, 0.5),
+      s"simhash: planted p90 ${p(pl, 0.9)} not below background median ${p(bg, 0.5)}")
+    // and the planted pairs are absolutely close: a near-identical
+    // word bag flips only the handful of bits whose votes the few
+    // differing words decide
+    assert(pl.max <= 10, s"64-bit simhash planted max hamming ${pl.max} > 10")
   }
 
   test("MUTATION: a doc-keyed fingerprint perturbation fails the SimHash distributional check") {
-    // Inverse guard for the SimHash twin-bound: the plausible bug is
+    // Inverse guard for the SimHash bound: the plausible bug is
     // any per-doc term entering the fingerprint (seeding the token
     // hash with doc_id, mixing in a row number) — signatures of a
     // planted pair then differ by an independent random mask and the
     // pair's hamming distance jumps to ~32, indistinguishable from
     // background. Apply exactly that perturbation to the REAL
-    // production signatures (deterministic: scramble64 of doc_id) and
+    // signatures (deterministic: scramble64 of doc_id) and
     // assert the distributional assertion above trips.
     def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
     def scramble(id: Long): Long = { // splitmix64 finalizer — fixed, engine-free

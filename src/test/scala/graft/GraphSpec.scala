@@ -1,11 +1,8 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import scala.jdk.CollectionConverters._
 
 /** Triangle counting: hand fixtures + an orientation-invariance check
   * against the naive id-ordered enumeration (the oracle's shape). */
@@ -139,45 +136,6 @@ class GraphSpec extends SparkSpec {
     assert(got(e) == naive(e))
   }
 
-  /** `q`'s rows in the default regime and with broadcast joins off
-    * (`autoBroadcastJoinThreshold=-1`, the at-scale regime every size
-    * gate then takes), after asserting that the second run planned its
-    * joins shuffled in every execution it ran — loop rounds and
-    * checkpoint jobs included — while the first broadcast somewhere. */
-  private def bothRegimes(what: String)(q: => DataFrame): (Set[Row], Set[Row]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    def run(): (Set[Row], Seq[String]) = {
-      GraftColumnBridge.drainListeners(spark.sparkContext)
-      plans.clear()
-      val rows = q.collect().toSet
-      GraftColumnBridge.drainListeners(spark.sparkContext)
-      (rows, plans.asScala.toSeq)
-    }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.listenerManager.register(listener)
-    try {
-      val (default, defaultPlans) = run()
-      assert(defaultPlans.exists(_.contains("BroadcastHashJoin")),
-        s"$what: the default regime broadcasts nothing, so the check below proves nothing")
-      spark.conf.set(key, "-1")
-      val (shuffled, shuffledPlans) = run()
-      assert(shuffledPlans.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")),
-        s"$what: no shuffled join planned:\n${shuffledPlans.mkString("\n")}")
-      shuffledPlans.foreach(p =>
-        assert(!p.contains("BroadcastHashJoin"), s"$what: a gate still broadcasts:\n$p"))
-      (default, shuffled)
-    } finally {
-      spark.conf.set(key, saved)
-      spark.listenerManager.unregister(listener)
-    }
-  }
-
   test("above the broadcast gate the shuffled closing join gives identical counts") {
     // broadcast joins off force the degraded (web-scale) path; same triangles
     val e = Graph.coEdges(spark, sf0001)
@@ -194,7 +152,11 @@ class GraphSpec extends SparkSpec {
       "label propagation" -> (() => Graph.labelPropagation(e)),
       "k-core" -> (() => Graph.kCore(e, Graph.KCoreK)),
       "link prediction" -> (() => Graph.linkPredictionCore(e, topPerNode = 5)),
-      "graph walks" -> (() => Graph.graphWalksCore(e)))
+      "graph walks" -> (() => Graph.graphWalksCore(e)),
+      "BFS" -> (() => Graph.bfs(e, Graph.BfsSource)),
+      "SSSP" -> (() => Graph.sssp(Graph.weightedCoEdges(spark, sf0001), Graph.BfsSource)),
+      "modularity" -> (() => Graph.modularityCore(e)),
+      "HITS" -> (() => Graph.hitsCore(ops.PageRank.starEdgesDirected(spark, sf0001), 8)))
     for ((what, q) <- cases) {
       val (default, shuffled) = bothRegimes(what)(q())
       assert(default.nonEmpty && shuffled == default, s"$what: the regimes disagree")

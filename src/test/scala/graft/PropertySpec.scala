@@ -112,7 +112,7 @@ class PropertySpec extends SparkSpec {
       def run(parts: Int) = {
         val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
           .toDF("doc_id", "text").repartition(parts, col("doc_id"))
-        graft.ops.Text.simhashPortable(docs)
+        graft.ops.Text.simhash(docs)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
       run(1) == run(7)

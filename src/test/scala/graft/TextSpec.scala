@@ -3,9 +3,10 @@ package graft
 import graft.ops.Text
 import org.apache.spark.sql.functions.{col, explode, expr, sha2, size, split}
 
-/** Golden tests for the hash-based near-dup operators (no DuckDB
-  * oracle — xxhash64 is engine-specific, so behavior is pinned on
-  * synthetic fixtures instead). */
+/** Hand-solved and fixture tests for the text operators, the
+  * hash-based near-dup family included: the DuckDB oracle checks what
+  * the queries compute on the harness corpus; these pin what that
+  * computation means on planted fixtures. */
 class TextSpec extends SparkSpec {
   import spark.implicits._
 
@@ -210,19 +211,34 @@ class TextSpec extends SparkSpec {
   }
 
   test("portable simhash: bag-of-words invariant, near dups are hamming-close") {
-    val docs = Seq(
-      (1L, base),
-      (2L, base.split(" ").reverse.mkString(" ")),       // permutation: same bag
-      (3L, base.replace("lazy", "sleepy")),              // one word changed
-      (4L, "completely different words about query engines and shuffles here"),
-    ).toDF("doc_id", "text")
-    val out = Text.simhashPortable(docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-    assert(out.values.forall(v => v >= 0L && v < 65536L), s"16-bit range: $out")
-    assert(out(1L) == out(2L), "word order must not affect portable simhash")
-    assert(hamming(out(1L), out(3L)) < hamming(out(1L), out(4L)),
-      s"near dup must be closer than unrelated: ${hamming(out(1L), out(3L))} vs ${hamming(out(1L), out(4L))}")
+    val texts = Seq(
+      1L -> base,
+      2L -> base.split(" ").reverse.mkString(" "),       // permutation: same bag
+      3L -> base.replace("lazy", "sleepy"),              // one word changed
+      4L -> "completely different words about query engines and shuffles here")
+    val out = Text.simhash(texts.toDF("doc_id", "text")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), (2 to 5).map(r.getLong))).toMap
+    // the vote→sign→bit fold replayed off-engine on the same 64-bit hash
+    def reference(t: String): Long = {
+      val tf = t.split(" ").filter(_.nonEmpty).groupBy(identity).toSeq.map { case (w, ws) =>
+        graft.functions.PortableHash64(org.apache.spark.sql.catalyst.expressions.Literal(w))
+          .hash(org.apache.spark.unsafe.types.UTF8String.fromString(w)) -> ws.length
+      }
+      (0 until 64).foldLeft(0L) { (fp, b) =>
+        val v = tf.map { case (h, n) => if (((h >>> b) & 1L) == 1L) n else -n }.sum
+        if (v > 0) fp | (1L << b) else fp
+      }
+    }
+    for ((id, t) <- texts) {
+      val (fp, bands) = out(id)
+      assert(fp == reference(t), s"doc $id: engine $fp vs reference ${reference(t)}")
+      assert(bands == Seq(48, 32, 16, 0).map(k => (fp >>> k) & 65535L),
+        s"doc $id: band keys are not the fingerprint's 16-bit slices: $bands")
+    }
+    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(out(a)._1 ^ out(b)._1)
+    assert(out(1L)._1 == out(2L)._1, "word order must not affect portable simhash")
+    assert(hamming(1L, 3L) < hamming(1L, 4L),
+      s"near dup must be closer than unrelated: ${hamming(1L, 3L)} vs ${hamming(1L, 4L)}")
   }
 
   test("short documents (<3 words) survive shingle-based ops and self-cluster") {

@@ -10,8 +10,8 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== preflight: contract + plan-budget + leaf-stats specs =="
-spec_out=$(sbt -batch "testOnly graft.ContractSpec graft.PlanBudgetSpec graft.LeafStatsSpec" 2>&1 || true)
+echo "== preflight: contract + plan-budget + leaf-stats + portable-hash specs =="
+spec_out=$(sbt -batch "testOnly graft.ContractSpec graft.PlanBudgetSpec graft.LeafStatsSpec graft.PortableHash64Spec" 2>&1 || true)
 echo "$spec_out" | grep -E 'Tests: succeeded|All tests passed|\*\*\* FAILED' || true
 echo "$spec_out" | grep -q 'All tests passed' \
   || { echo "PREFLIGHT FAIL: specs red"; exit 1; }
