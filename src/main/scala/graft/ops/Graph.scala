@@ -346,9 +346,14 @@ object Graph {
       val deg = cur.select(col("u").as("n"))
         .unionByName(cur.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+      // explicit size-gated broadcast, bounded by the round leaf's
+      // rows: left to AQE, whether the streamed side's shuffle ran
+      // before the SMJ→BHJ re-plan was a stage-scheduling race (the
+      // q_modularity shape), and the job count varied run to run
+      val gate = Iterate.broadcastIf(Iterate.fits(cur))
       val keep = deg.filter(col("deg") >= k)
-      cur.join(keep.select(col("n").as("ku")), col("u") === col("ku"))
-        .join(keep.select(col("n").as("kv")), col("v") === col("kv"))
+      cur.join(gate(keep.select(col("n").as("ku"))), col("u") === col("ku"))
+        .join(gate(keep.select(col("n").as("kv"))), col("v") === col("kv"))
         .select(col("u"), col("v"))
     }
     core.select(col("u").as("n")).unionByName(core.select(col("v").as("n")))
@@ -785,57 +790,49 @@ object Graph {
     * cross-engine). Same scale mechanics as the PageRank family:
     * flat edges persisted once, size-gated score-vector broadcast
     * (zero per-iteration shuffles under the gate), totals as 1-row
-    * broadcasts. Hand-written on [[Iterate.leaf]]: h is cut every
-    * iteration, a only after the last (see the loop). */
+    * broadcasts. The first n−1 iterations run on [[Iterate.rounds]]
+    * (see the loop), the last is cut by hand. */
   def hits(s: SparkSession, d: String): DataFrame =
     hitsCore(PageRank.starEdgesDirected(s, d), 8)
 
   def hitsCore(edges: DataFrame, iterations: Int): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val e = edges.persist()
     val doBroadcast = PageRank.chooseBroadcast(e)
     val gate = Iterate.broadcastIf(doBroadcast)
-    // dual loop-invariant layouts (r12 second pass, §2.4): the a-step
-    // aggregates by dst and the h-step by src, so each half-step paid
-    // one exchange of the edge relation per iteration — 2·iterations
-    // shuffles of a relation that never changes. Under the broadcast
-    // gate the score-vector join streams the edge side unchanged, so
-    // materializing e ONCE per aggregation key makes every half-step
-    // a narrow probe+agg over cached partitions: zero per-iteration
-    // exchanges (PageRank.run's dst-layout, doubled for the two
-    // alternating keys). Past the gate the shuffled joins re-key
-    // anyway and the layouts would be two wasted exchanges.
-    val eByDst = if (doBroadcast) e.repartition(col("dst")).persist() else e
-    val eBySrc = if (doBroadcast) e.repartition(col("src")).persist() else e
-    var h = e.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("h"))
-    var a: DataFrame = null
-    for (i <- 1 to iterations) {
-      // lineage discipline (the PageRank.run every-3rd precedent,
-      // tightened to the two-consumer endpoints): mid-loop `a` has
-      // exactly ONE consumer (the h half-step, whose broadcast build
-      // executes it once), so only h is materialized per iteration —
-      // half the checkpoint jobs of the cut-every-half-step shape.
-      // The FINAL a feeds two consumers (auths + its total), so it is
-      // cut like the final h.
-      val aRaw = eByDst.join(gate(h), col("src") === col("node"))
+    // the a-step aggregates by dst and the h-step by src: one
+    // loop-invariant layout per key (PageRank.laidOut)
+    val eByDst = PageRank.laidOut(e, "dst", doBroadcast)
+    val eBySrc = PageRank.laidOut(e, "src", doBroadcast)
+    def authOf(h: DataFrame): DataFrame =
+      eByDst.join(gate(h), col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-      a = if (i == iterations) Iterate.leaf(aRaw) else aRaw
-      // `ad`, not a("dst"): the lazy mid-loop a shares e's attribute
-      // ids with eBySrc, so the df("dst") disambiguation would be an
-      // ambiguous self-join — the rename makes the key unambiguous
-      val aj = a.select(col("dst").as("ad"), col("a"))
-      h = Iterate.leaf(eBySrc.join(gate(aj), col("dst") === col("ad"))
+    // `ad`, not a("dst"): the lazy mid-loop a shares e's attribute
+    // ids with eBySrc, so the df("dst") disambiguation would be an
+    // ambiguous self-join — the rename makes the key unambiguous
+    def hubOf(a: DataFrame): DataFrame =
+      eBySrc.join(gate(a.select(col("dst").as("ad"), col("a"))), col("dst") === col("ad"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
-        .select(col("src").as("node"), col("h")))
-    }
+        .select(col("src").as("node"), col("h"))
+    // lineage discipline (the PageRank.run every-3rd precedent,
+    // tightened to the two-consumer endpoints): mid-loop `a` has
+    // exactly ONE consumer (the h half-step, whose broadcast build
+    // executes it once), so a round is the whole a→h step and only h
+    // is cut — half the checkpoint jobs of the cut-every-half-step
+    // shape. The FINAL a feeds two consumers (auths + its total), so
+    // the last iteration cuts it as well as h.
+    val h0 = e.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("h"))
+    val hLast = Iterate.rounds(h0, iterations - 1)(h => hubOf(authOf(h)))
+    val a = Iterate.leaf(authOf(hLast))
+    val h = Iterate.leaf(hubOf(a))
     val hubs = h.crossJoin(broadcast(h.agg(sum(col("h")).as("tot"))))
       .select(lit("hub").as("kind"), col("node"),
         round(col("h") / col("tot"), 6).as("score"))
     val auths = a.crossJoin(broadcast(a.agg(sum(col("a")).as("tot"))))
       .select(lit("auth").as("kind"), col("dst").as("node"),
         round(col("a") / col("tot"), 6).as("score"))
-    e.unpersist()
-    if (doBroadcast) { eByDst.unpersist(); eBySrc.unpersist() }
+    e.unpersist(); eByDst.unpersist(); eBySrc.unpersist()
     auths.unionByName(hubs).orderBy(col("kind"), col("node"))
   }
 
@@ -982,7 +979,8 @@ object Graph {
   }
 
   /** Moment assembly over an already-materialized edge relation and
-    * its label partition (three consumers of `e`: m, intra, deg).
+    * its label partition (two consumers of `e`: intra and deg; `m`
+    * is the leaf's row count).
     *
     * The |V|-row label side joins under the SAME size-gated explicit
     * broadcast the LPA loop uses, bounded by the label leaf's own row
@@ -998,7 +996,8 @@ object Graph {
     * shuffled join exactly like the loop itself. */
   private def modularityFrom(e: DataFrame, labels: DataFrame): DataFrame = {
     val gate = Iterate.broadcastIf(Iterate.fits(labels))
-    val m = e.agg(count(lit(1)).as("m"))
+    // the edge leaf's own count, read without a job
+    val m = Iterate.rows(e)
     val intra = e
       .join(gate(labels.select(col("node").as("u"), col("label").as("lu"))), Seq("u"))
       .join(gate(labels.select(col("node").as("v"), col("label").as("lv"))), Seq("v"))
@@ -1011,12 +1010,12 @@ object Graph {
       .groupBy(col("label")).agg(sum(col("deg")).as("d_c"))
     val sums = dc.agg(count(lit(1)).as("n_communities"),
       sum(col("d_c") * col("d_c")).as("sum_deg_sq"))
-    m.crossJoin(broadcast(intra)).crossJoin(broadcast(sums))
-      .select(col("m"), col("n_communities"), col("intra_edges"),
+    intra.crossJoin(broadcast(sums))
+      .select(lit(m).as("m"), col("n_communities"), col("intra_edges"),
         col("sum_deg_sq"),
-        round(col("intra_edges").cast("double") / col("m")
+        round(col("intra_edges").cast("double") / lit(m)
           - col("sum_deg_sq").cast("double")
-            / (lit(4.0) * col("m") * col("m")), 6).as("modularity"))
+            / (lit(4.0) * lit(m) * lit(m)), 6).as("modularity"))
       .orderBy(col("m"))
   }
 

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions.broadcast
   * A driver owns the round counter, the lineage cut and, for fixed
   * points, the per-round observation, the stop test and the loud
   * failure; a loop passes in only its initial relation and its step.
-  * HITS and BPE stay hand-written on [[leaf]]: each carries a second
-  * relation on its own cut schedule (HITS' authority vector is cut
-  * only after the last round; BPE's per-round rule outlives the loop).
+  * HITS runs its first n−1 a→h rounds on [[rounds]] and cuts the last
+  * one's two vectors with [[leaf]]. BPE stays hand-written on [[leaf]]:
+  * it carries a second relation on its own cut schedule (its
+  * per-round rule outlives the loop).
   */
 object Iterate {
 

@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative PageRank, quirk-faithful to the reference
   * (`assignment1/part3/task1/task1.py`) — see SURVEY.md §2.14:
@@ -25,6 +26,12 @@ import org.apache.spark.sql.functions._
   * invariants (`edges`, `degrees`) are cached (C2, `task3/task3.py:37`)
   * and the loop is cut by [[Iterate.leaf]] to truncate the 10-deep
   * lineage (C3, the task4 fault-tolerance experiment).
+  *
+  * Beside the quirk loop [[run]], one teleport loop ([[teleportLoop]])
+  * runs the standard formulation for a personalization vector: uniform
+  * in [[runTextbook]], the seed indicator in [[runPersonalized]]. Both
+  * loops, and [[Graph.hitsCore]], lay their invariants out by one rule,
+  * [[laidOut]].
   */
 object PageRank {
 
@@ -47,6 +54,31 @@ object PageRank {
       e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
         .distinct().count())
 
+  /** The power-iteration family's one loop-invariant layout rule
+    * ([[run]], [[teleportLoop]], [[Graph.hitsCore]]). Under the
+    * broadcast gate the rank/score-vector join streams the invariant
+    * side unchanged, so laying the invariant out ONCE by the key the
+    * round aggregates on leaves every round's groupBy with its
+    * distribution already satisfied: one up-front exchange replaces
+    * one per round, and the rounds shuffle nothing. Past the gate the
+    * shuffled join re-keys the invariant itself, so a layout would
+    * only add a wasted exchange: the invariant stays as it is.
+    * `numPartitions > 0` ([[run]]'s C1 sweep) keeps the requested
+    * partition count under the gate, or the sweep would silently
+    * exercise identical layouts.
+    *
+    * The result is persisted, since every round reads it; an input
+    * already cached (HITS' edge relation past the gate) is returned as
+    * it is. The caller unpersists it. */
+  private[graft] def laidOut(df: DataFrame, key: String, doBroadcast: Boolean,
+      numPartitions: Int = 0): DataFrame = {
+    val laid =
+      if (!doBroadcast) df
+      else if (numPartitions > 0) df.repartition(numPartitions, col(key))
+      else df.repartition(col(key))
+    if (laid.storageLevel == StorageLevel.NONE) laid.persist() else laid
+  }
+
   /** The iterative core. `edges(src, dst)` of any key type.
     *
     * `numPartitions > 0` reproduces the reference's partition-sweep
@@ -67,31 +99,18 @@ object PageRank {
     * holds ([[pagerankSnap]]'s dictionary leaf). */
   def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0,
       broadcastRanks: Option[Boolean] = None): DataFrame = {
-    val laidOut =
+    val laidOutBySrc =
       if (numPartitions > 0) edges.repartition(numPartitions, col("src"))
       else edges
-    val e = laidOut.persist()
+    val e = laidOutBySrc.persist()
     val doBroadcast = broadcastRanks.getOrElse(chooseBroadcast(e))
     val gate = Iterate.broadcastIf(doBroadcast)
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // the edges ⋈ degrees join is loop-invariant: materialize it once
-    // instead of recomputing it in all 10 iterations. In the broadcast
-    // regime, materialize it PARTITIONED BY dst: the broadcast join
-    // streams the edge side unchanged, so the per-iteration
-    // groupBy(dst) finds its distribution already satisfied — the
-    // loop runs 10 iterations with ZERO shuffles (one up-front
-    // exchange replaces 10 per-iteration ones). In the shuffle-join
-    // regime the join itself re-keys by src, so dst-layout would just
-    // add a wasted exchange.
-    val withDegRaw = e.join(degrees, "src")
-      .select(col("src"), col("dst"), col("deg"))
-    // honor the C1 sweep parameter in both regimes: under broadcast the
-    // layout key switches to dst but the requested partition COUNT must
-    // survive, or the sweep would silently exercise identical layouts
-    val withDeg = (if (doBroadcast) {
-      if (numPartitions > 0) withDegRaw.repartition(numPartitions, col("dst"))
-      else withDegRaw.repartition(col("dst"))
-    } else withDegRaw).persist()
+    // the edges ⋈ degrees join is loop-invariant: materialize it once,
+    // in the layout of the per-iteration groupBy(dst), instead of
+    // recomputing it in all 10 iterations
+    val withDeg = laidOut(e.join(degrees, "src").select(col("src"), col("dst"), col("deg")),
+      "dst", doBroadcast, numPartitions)
     val init = withDeg.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("pr"))
     val ranks = Iterate.rounds(init, iterations, cutEvery = 3) { ranks =>
@@ -109,15 +128,21 @@ object PageRank {
     ranks
   }
 
-  /** Textbook PageRank — the variant SURVEY §2.14 documents alongside
-    * the quirk-faithful [[run]] (standard formulation, e.g. the
-    * original Brin/Page paper): ranks init to 1/N over the FULL node
-    * set (sources ∪ sinks); every node is keyed every iteration;
-    * dangling (no-out-edge) mass is redistributed uniformly:
-    * pr' = 0.15/N + 0.85·(Σ contribs + danglingMass/N), so total mass
-    * is conserved at 1.0 per iteration. Same scale shape as [[run]]:
-    * flat edges, O(1) rows, invariants persisted; the dangling mass
-    * flows back as a 1-row broadcast, never a collect.
+  /** A teleport loop's personalization vector, given the node count
+    * N, as column builders over `node`: each node's initial rank, its
+    * teleport term (its part of the 0.15 restart mass) and its share
+    * of a dangling mass. Each variant writes them as it computes them,
+    * so the floating point stays the variant's own. */
+  private final case class Teleport(init: Column, jump: Column, share: Column => Column)
+
+  /** The teleport PageRank loop behind [[runTextbook]] and
+    * [[runPersonalized]] (the standard formulation): every node of the
+    * FULL node set (sources ∪ sinks) is keyed every iteration, and the
+    * mass of dangling (no-out-edge) nodes restarts by the vector:
+    * pr' = jump + 0.85·(Σ contribs + share(danglingMass)), so total
+    * mass is conserved at 1.0 per iteration. Same scale shape as
+    * [[run]]: flat edges, O(1) rows, invariants persisted; the
+    * dangling mass flows back as a 1-row broadcast, never a collect.
     *
     * Unlike [[run]] (one consumer of ranks per iteration, so a cut
     * every 3rd), ranks here feeds TWO consumers next iteration
@@ -125,32 +150,27 @@ object PageRank {
     * shared subplan re-executes per consumer and the plan fans out
     * ~2^k between cuts (measured 18 s vs ~7 s at sf0.1), so the loop
     * cuts every iteration. */
-  def runTextbook(edges: DataFrame, iterations: Int = 10): DataFrame = {
+  private def teleportLoop(edges: DataFrame, iterations: Int)(
+      vec: Double => Teleport): DataFrame = {
     val e = edges.persist()
     val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = Iterate.leaf(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
-    // the 1/N init needs |nodes| anyway, and it equals chooseBroadcast's
-    // endpoint bound — the leaf's row count serves both
-    val n = Iterate.rows(nodes).toDouble
+    // the node leaf's row count is N, and it equals chooseBroadcast's
+    // endpoint bound — it serves both the vector and the gate
+    val v = vec(Iterate.rows(nodes).toDouble)
     val doBroadcast = Iterate.fits(nodes)
     val gate = Iterate.broadcastIf(doBroadcast)
     // past the gate every iteration sort-merges nodes on node: lay the
     // leaf out by node once instead of exchanging it per iteration
     val byNode = if (doBroadcast) nodes else nodes.repartition(col("node")).persist()
-    // same dst-layout rule as [[run]]: under broadcast the streamed
-    // edge side carries its partitioning through the join, so the
-    // per-iteration contribs agg shuffles nothing
-    val withDegRaw = e.join(degrees, "src")
-      .select(col("src"), col("dst"), col("deg"))
-    val withDeg =
-      (if (doBroadcast) withDegRaw.repartition(col("dst")) else withDegRaw).persist()
+    val withDeg = laidOut(e.join(degrees, "src").select(col("src"), col("dst"), col("deg")),
+      "dst", doBroadcast)
     // sinks: nodes with no out-edges; their rank mass would otherwise
     // leak (the quirk variant deliberately loses it)
     val dangling = byNode.join(
       degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
-    val ranks = Iterate.rounds(nodes.select(col("node"), lit(1.0 / n).as("pr")),
-        iterations) { ranks =>
+    val ranks = Iterate.rounds(nodes.select(col("node"), v.init.as("pr")), iterations) { ranks =>
       val rankSide = gate(ranks)
       val contribs = withDeg
         .join(rankSide, col("src") === col("node"))
@@ -164,56 +184,31 @@ object PageRank {
         .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
-          (lit(0.15 / n) + lit(0.85) *
-            (coalesce(col("c"), lit(0.0)) + col("dm") / lit(n))).as("pr"))
+          (v.jump + lit(0.85) * (coalesce(col("c"), lit(0.0)) + v.share(col("dm")))).as("pr"))
     }
     e.unpersist(); withDeg.unpersist(); byNode.unpersist(); dangling.unpersist()
     ranks
   }
 
+  /** Textbook PageRank — the variant SURVEY §2.14 documents alongside
+    * the quirk-faithful [[run]] (the original Brin/Page formulation):
+    * [[teleportLoop]] with the uniform vector 1/N — ranks init to 1/N,
+    * the teleport term is 0.15/N and dangling mass spreads as dm/N. */
+  def runTextbook(edges: DataFrame, iterations: Int = 10): DataFrame =
+    teleportLoop(edges, iterations)(n => Teleport(lit(1.0 / n), lit(0.15 / n), _ / lit(n)))
+
   /** Personalized PageRank (r5 wave 14; Haveliwala WWW 2002, the
-    * Page et al. personalization vector): the textbook loop with
-    * teleport mass concentrated on ONE seed node — restart probability
-    * 0.15 returns to the seed, and dangling mass restarts there too,
-    * so the stationary distribution ranks the graph BY PROXIMITY TO
-    * THE SEED (on the directed customer→supplier star this is the
-    * seed customer's supplier-affinity profile). Same scale mechanics
-    * as [[runTextbook]], including its cut every iteration: invariants
-    * persisted, size-gated rank broadcast; the seed indicator is a
-    * pure column expression — no extra join, no collect. */
+    * Page et al. personalization vector): [[teleportLoop]] with the
+    * vector concentrated on ONE seed node — ranks init to the seed
+    * indicator, restart probability 0.15 returns to the seed, and
+    * dangling mass restarts there too, so the stationary distribution
+    * ranks the graph BY PROXIMITY TO THE SEED (on the directed
+    * customer→supplier star this is the seed customer's
+    * supplier-affinity profile). The indicator is a pure column
+    * expression — no extra join, no collect. */
   def runPersonalized(edges: DataFrame, seed: Long, iterations: Int = 10): DataFrame = {
-    val e = edges.persist()
-    val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = Iterate.leaf(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
-    val doBroadcast = Iterate.fits(nodes)
-    val gate = Iterate.broadcastIf(doBroadcast)
-    val byNode = if (doBroadcast) nodes else nodes.repartition(col("node")).persist()
-    val withDegRaw = e.join(degrees, "src")
-      .select(col("src"), col("dst"), col("deg"))
-    val withDeg =
-      (if (doBroadcast) withDegRaw.repartition(col("dst")) else withDegRaw).persist()
-    val dangling = byNode.join(
-      degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
-    def seedInd(c: org.apache.spark.sql.Column) =
-      when(c === seed, lit(1.0)).otherwise(lit(0.0))
-    val ranks = Iterate.rounds(nodes.select(col("node"), seedInd(col("node")).as("pr")),
-        iterations) { ranks =>
-      val rankSide = gate(ranks)
-      val contribs = withDeg
-        .join(rankSide, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
-      val dm = dangling.join(rankSide, "node")
-        .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      byNode
-        .join(gate(contribs), col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dm))
-        .select(col("node"),
-          (lit(0.15) * seedInd(col("node")) + lit(0.85) *
-            (coalesce(col("c"), lit(0.0)) + col("dm") * seedInd(col("node")))).as("pr"))
-    }
-    e.unpersist(); withDeg.unpersist(); byNode.unpersist(); dangling.unpersist()
-    ranks
+    val ind = when(col("node") === seed, lit(1.0)).otherwise(lit(0.0))
+    teleportLoop(edges, iterations)(_ => Teleport(ind, lit(0.15) * ind, _ * ind))
   }
 
   /** Deterministic edge table derived from the star schema: each
@@ -310,8 +305,10 @@ object PageRank {
   }
 
   /** Seed = customer node 1 (present at every SF). */
+  val PersonalizedSeed = 1L
+
   def pagerankPersonalized(s: SparkSession, d: String): DataFrame =
-    runPersonalized(starEdgesDirected(s, d), seed = 1L, 10)
+    runPersonalized(starEdgesDirected(s, d), PersonalizedSeed, 10)
       .select(col("node"), round(col("pr"), 6).as("pr"))
       .orderBy(col("node"))
 
@@ -349,23 +346,27 @@ object PageRank {
     base + iters + " SELECT node, round(pr, 6) AS pr FROM r10 ORDER BY node"
   }
 
-  /** Textbook oracle: 1/N init over all nodes, per-iteration dangling
-    * mass (`dm_i`) redistributed uniformly, LEFT JOIN keeps every node.
-    * Double literals written `…e0` — a bare `0.15` is DECIMAL in
-    * DuckDB and would poison the IEEE parity with Spark's doubles.
-    * Base CTEs are MATERIALIZED: DuckDB otherwise inlines them into
-    * every one of the 10 unrolled iterations, re-opening the parquet
-    * per reference until the file-handle limit blows. */
-  private val textbookOracle: String = {
+  /** Teleport oracle ([[teleportLoop]] unrolled): every node keyed
+    * every iteration via the LEFT JOIN, per-iteration dangling mass
+    * (`dm_i`) restarted by the vector. `jump` is the teleport term and
+    * `share(m)` a node's share of mass `m`, both over `nd.node` and
+    * `nn.n`; the init is `share(1.0e0)` (1/N, or the indicator, which
+    * 1.0·x keeps exact). Double literals written `…e0` — a bare `0.15`
+    * is DECIMAL in DuckDB and would poison the IEEE parity with
+    * Spark's doubles. Base CTEs are MATERIALIZED: DuckDB otherwise
+    * inlines them into every one of the 10 unrolled iterations,
+    * re-opening the parquet per reference until the file-handle limit
+    * blows. */
+  private def teleportOracle(jump: String, share: String => String): String = {
     val base =
-      """WITH edges AS MATERIALIZED (
+      s"""WITH edges AS MATERIALIZED (
            SELECT o_custkey AS src, l_suppkey + 10000000 AS dst
            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
          degrees AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          nodes AS MATERIALIZED (SELECT DISTINCT node FROM
            (SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges)),
          nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-         r0 AS (SELECT node, 1.0e0 / nn.n AS pr FROM nodes CROSS JOIN nn)"""
+         r0 AS (SELECT nd.node, ${share("1.0e0")} AS pr FROM nodes nd CROSS JOIN nn)"""
     // every per-iteration CTE is MATERIALIZED: r_{i-1} is referenced
     // TWICE per level (contribution + dangling mass), so DuckDB's
     // default inlining expands the chain ~2^10-fold — at sf1 the
@@ -383,54 +384,24 @@ object PageRank {
            FROM r${i - 1} r LEFT JOIN degrees d ON r.node = d.src
            WHERE d.src IS NULL),
          r$i AS MATERIALIZED (
-           SELECT nd.node, 0.15e0 / nn.n + 0.85e0 * (coalesce(c.c, 0.0e0) + dm.dm / nn.n) AS pr
+           SELECT nd.node, $jump + 0.85e0 * (coalesce(c.c, 0.0e0) + ${share("dm.dm")}) AS pr
            FROM nodes nd LEFT JOIN c$i c ON nd.node = c.node
            CROSS JOIN dm$i dm CROSS JOIN nn)"""
     }.mkString
     base + iters + " SELECT node, round(pr, 6) AS pr FROM r10 ORDER BY node"
   }
 
-  /** Personalized oracle: the textbook unroll with the teleport (and
-    * dangling restart) concentrated on the seed via a CASE indicator —
-    * same e0 double literals, same MATERIALIZED base CTEs. */
-  private val personalizedOracle: String = {
-    val ind = "CASE WHEN nd.node = 1 THEN 1.0e0 ELSE 0.0e0 END"
-    val base =
-      """WITH edges AS MATERIALIZED (
-           SELECT o_custkey AS src, l_suppkey + 10000000 AS dst
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         degrees AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         nodes AS MATERIALIZED (SELECT DISTINCT node FROM
-           (SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges)),
-         r0 AS (SELECT node, CASE WHEN node = 1 THEN 1.0e0 ELSE 0.0e0 END AS pr FROM nodes)"""
-    // MATERIALIZED per-iteration CTEs — same double-reference
-    // inlining blowup as textbookOracle (see there)
-    val iters = (1 to 10).map { i =>
-      s""", c$i AS MATERIALIZED (
-           SELECT e.dst AS node, sum(r.pr / d.deg) AS c
-           FROM edges e JOIN degrees d ON e.src = d.src
-           JOIN r${i - 1} r ON e.src = r.node
-           GROUP BY e.dst),
-         dm$i AS MATERIALIZED (
-           SELECT coalesce(sum(r.pr), 0.0e0) AS dm
-           FROM r${i - 1} r LEFT JOIN degrees d ON r.node = d.src
-           WHERE d.src IS NULL),
-         r$i AS MATERIALIZED (
-           SELECT nd.node, 0.15e0 * ($ind) + 0.85e0 * (coalesce(c.c, 0.0e0) + dm.dm * ($ind)) AS pr
-           FROM nodes nd LEFT JOIN c$i c ON nd.node = c.node
-           CROSS JOIN dm$i dm)"""
-    }.mkString
-    base + iters + " SELECT node, round(pr, 6) AS pr FROM r10 ORDER BY node"
-  }
+  private val seedIndSql =
+    s"(CASE WHEN nd.node = $PersonalizedSeed THEN 1.0e0 ELSE 0.0e0 END)"
 
   val oracles: Map[String, String] = Map(
-    "q_pagerank_personalized" -> personalizedOracle,
+    "q_pagerank_personalized" -> teleportOracle(s"0.15e0 * $seedIndSql", m => s"$m * $seedIndSql"),
     "q_degree_hist" -> s"""WITH edges AS ($symEdgesSql),
          deg AS (SELECT src, count(*) AS degree FROM edges GROUP BY src)
          SELECT degree, count(*) AS n_nodes FROM deg
          GROUP BY degree ORDER BY degree""",
     "q_pagerank" -> quirkOracle(symEdgesSql),
-    "q_pagerank_textbook" -> textbookOracle,
+    "q_pagerank_textbook" -> teleportOracle("0.15e0 / nn.n", m => s"$m / nn.n"),
     // identical graph, VARCHAR node ids (the SNAP parse keeps strings)
     "q_pagerank_snap" -> quirkOracle(
       """SELECT CAST(o_custkey AS VARCHAR) AS src,

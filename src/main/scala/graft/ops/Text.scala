@@ -987,9 +987,13 @@ object Text {
 
   /** MinHash-LSH dedup (T3): cluster representative = min doc_id over
     * each band bucket (single-pass LSH clustering; the transitive
-    * closure is [[minhashClustersClosure]]). */
+    * closure is [[minhashClustersClosure]]). The shingle-hash and
+    * signature stage costs CPU per row, so the scan is fanned out to
+    * the session's parallelism floor ([[FanOut]], identity at real
+    * scale), as in [[minhashCalibrate]] and the two entry points
+    * below. */
   def dedupMinhash(s: SparkSession, d: String): DataFrame =
-    minhashClusters(Tables.documents(s, d))
+    minhashClusters(FanOut(Tables.documents(s, d), col("doc_id")))
 
   /** Core MinHash-LSH over any `(doc_id, text)` relation — one-pass
     * clustering (rep = min doc over each band bucket; not transitive). */
@@ -1101,7 +1105,7 @@ object Text {
     * cluster even when A and C never share a bucket — the semantics a
     * real corpus dedup wants. */
   def dedupMinhashClosure(s: SparkSession, d: String): DataFrame =
-    minhashClustersClosure(Tables.documents(s, d))
+    minhashClustersClosure(FanOut(Tables.documents(s, d), col("doc_id")))
 
   def minhashClustersClosure(docs: DataFrame): DataFrame = {
     val edges = bandsWithReps(docs)
@@ -1118,7 +1122,7 @@ object Text {
     * keys for Hamming-LSH bucketing. Work = |tokens|×64 narrow rows,
     * two shuffles (doc×bit, then doc). */
   def dedupSimhash(s: SparkSession, d: String): DataFrame =
-    simhash(Tables.documents(s, d))
+    simhash(FanOut(Tables.documents(s, d), col("doc_id")))
 
   /** Core SimHash over any `(doc_id, text)` relation. The 64 bit
     * votes are 64 codegen'd aggregate columns over the flat token

@@ -33,6 +33,19 @@ class GraphSpec extends SparkSpec {
     assert(got2(("auth", 10L)) > got(("auth", 10L)), s"$got2 vs $got")
   }
 
+  test("HITS: 1 and 2 iterations give the hand-computed scores") {
+    // h0 = 1 per hub. Iteration 1: a10 = h1 + h2 = 2, a11 = h1 = 1;
+    // h1 = a10 + a11 = 3, h2 = a10 = 2. Iteration 2: a = (5, 3),
+    // h = (8, 5). Scores are each vector over its own total.
+    val e = Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("src", "dst")
+    def scores(iterations: Int) = Graph.hitsCore(e, iterations).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(scores(1) == Map(("auth", 10L) -> 0.666667, ("auth", 11L) -> 0.333333,
+      ("hub", 1L) -> 0.6, ("hub", 2L) -> 0.4))
+    assert(scores(2) == Map(("auth", 10L) -> 0.625, ("auth", 11L) -> 0.375,
+      ("hub", 1L) -> 0.615385, ("hub", 2L) -> 0.384615))
+  }
+
   test("LPA: two cliques joined by a bridge resolve to two communities") {
     // cliques {1,2,3} and {10,11,12} with bridge 3–10. Each clique
     // node sees ≥2 same-clique votes vs ≤1 across the bridge, so mode
