@@ -260,11 +260,9 @@ object Bench {
         val t0 = System.nanoTime()
         ops.PageRank.run(ops.PageRank.starEdges(spark, sfDir), 10, numPartitions = n)
           .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        // same eager block release as Harness.reset: 10 sweep points × a
-        // 10-iteration loop otherwise stack GC-owned checkpoint blocks
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // eager block release: 10 sweep points × a 10-iteration loop
+        // otherwise stack GC-owned checkpoint blocks
+        Harness.reset(spark)
         (System.nanoTime() - t0) / 1e9
       }
       // one UNTIMED execution before the grid: the r7 clean-run4

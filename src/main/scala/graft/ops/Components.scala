@@ -29,17 +29,21 @@ object Components {
     // deep pipeline (LSH banding is a DAG of self-joins) that every
     // round's plan would re-embed several times, growing Catalyst's
     // optimizer work and size estimates with the producer pipeline;
-    // the cut keeps every round's logical plan O(1) deep.
-    val und = Iterate.leaf(edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
+    // the cut keeps every round's logical plan O(1) deep. Laid out by
+    // a, whose exchange is also the distinct's.
+    val byA = Iterate.leaf(Iterate.layout(
+      edges.select(col("src").as("a"), col("dst").as("b"))
+        .unionByName(edges.select(col("dst").as("a"), col("src").as("b"))), "a")
       .distinct())
-    // und's row count bounds every per-round relation below (labels
+    // byA's row count bounds every per-round relation below (labels
     // are keyed by its endpoints, received/jumpSrc are its projections).
-    // Under the gate the label side ships and und never moves; without
-    // it und re-shuffles EVERY round (exchange reuse never spans the
-    // per-round checkpoint queries).
-    val gate = Iterate.broadcastIf(Iterate.fits(und))
-    val init = Iterate.leaf(und.select(col("a").as("node")).distinct()
+    // The round joins on a and aggregates on b (Iterate's layout rule);
+    // the edges are symmetric, so the swapped columns are them laid
+    // out by b.
+    val doBroadcast = Iterate.fits(byA)
+    val gate = Iterate.broadcastIf(doBroadcast)
+    val und = if (!doBroadcast) byA else byA.select(col("b").as("a"), col("a").as("b"))
+    val init = Iterate.leaf(byA.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("comp")))
     // `changed` is null when a node has no inbound neighbor (null OR
     // false folds to null) — that means unchanged, and when() skips it

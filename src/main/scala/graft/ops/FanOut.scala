@@ -48,6 +48,12 @@ object FanOut {
   def apply(df: DataFrame, keys: Column*): DataFrame =
     when(df)(df, keys: _*)
 
+  /** [[apply]] by range on `key`, for a pipeline that aggregates by
+    * `key` and ends in a global sort on it: the layout serves both, and
+    * its boundary sample reads the source, not the whole pipeline. */
+  def byRange(df: DataFrame, key: Column): DataFrame =
+    if (narrow(df)) df.repartitionByRange(floor(df), key) else df
+
   /** Hash-repartition `df` on `keys` up to the floor iff the given
     * SOURCE scan is narrow — for call sites where the expensive stage
     * sits above exchanges (joins, distincts) whose AQE-coalesced

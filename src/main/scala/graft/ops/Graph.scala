@@ -384,8 +384,12 @@ object Graph {
     * Unreached nodes are absent from the output (no sentinel
     * distances), matching the oracle's min-propagation fixed point. */
   def bfs(edges: DataFrame, src: Long, maxRounds: Int = 30): DataFrame = {
-    val sym = Iterate.leafOr(edges.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
+    // the symmetric adjacency laid out by a, the round's join key; under
+    // the gate (every frontier fits when it does) by b, its aggregation
+    // key (Iterate's layout rule): the same edges, columns swapped
+    val byA = Iterate.laidOut(edges.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(edges.select(col("v").as("a"), col("u").as("b"))), "a")
+    val sym = if (!Iterate.fits(byA)) byA else byA.select(col("b").as("a"), col("a").as("b"))
     val init = edges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0).cast("int").as("dist"))
       .localCheckpoint()
@@ -788,30 +792,30 @@ object Graph {
     * end-normalization keeps the loop pure multiply-accumulate — no
     * per-iteration division whose rounding could compound
     * cross-engine). Same scale mechanics as the PageRank family:
-    * flat edges persisted once, size-gated score-vector broadcast
-    * (zero per-iteration shuffles under the gate), totals as 1-row
-    * broadcasts. The first n−1 iterations run on [[Iterate.rounds]]
-    * (see the loop), the last is cut by hand. */
+    * flat edges laid out once per key as leaves, size-gated
+    * score-vector broadcast (zero per-iteration shuffles under the
+    * gate), totals as 1-row broadcasts. The first n−1 iterations run
+    * on [[Iterate.rounds]] (see the loop), the last is cut by hand. */
   def hits(s: SparkSession, d: String): DataFrame =
     hitsCore(PageRank.starEdgesDirected(s, d), 8)
 
   def hitsCore(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.persist()
-    val doBroadcast = PageRank.chooseBroadcast(e)
+    // the a-step joins on src and aggregates by dst, the h-step the
+    // other way round: one laid-out leaf per key, and each step streams
+    // the one that Iterate's layout rule picks for the regime
+    val bySrc = Iterate.laidOut(edges, "src")
+    val byDst = Iterate.laidOut(bySrc, "dst")
+    val doBroadcast = PageRank.chooseBroadcast(bySrc)
     val gate = Iterate.broadcastIf(doBroadcast)
-    // the a-step aggregates by dst and the h-step by src: one
-    // loop-invariant layout per key (PageRank.laidOut)
-    val eByDst = PageRank.laidOut(e, "dst", doBroadcast)
-    val eBySrc = PageRank.laidOut(e, "src", doBroadcast)
+    val (aEdges, hEdges) = if (doBroadcast) (byDst, bySrc) else (bySrc, byDst)
     def authOf(h: DataFrame): DataFrame =
-      eByDst.join(gate(h), col("src") === col("node"))
+      aEdges.join(gate(h), col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-    // `ad`, not a("dst"): the lazy mid-loop a shares e's attribute
-    // ids with eBySrc, so the df("dst") disambiguation would be an
-    // ambiguous self-join — the rename makes the key unambiguous
+    // `ad`, not a("dst"): the rename keeps the join key unambiguous
+    // whichever edge leaf the lazy mid-loop a was built from
     def hubOf(a: DataFrame): DataFrame =
-      eBySrc.join(gate(a.select(col("dst").as("ad"), col("a"))), col("dst") === col("ad"))
+      hEdges.join(gate(a.select(col("dst").as("ad"), col("a"))), col("dst") === col("ad"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
         .select(col("src").as("node"), col("h"))
     // lineage discipline (the PageRank.run every-3rd precedent,
@@ -821,7 +825,7 @@ object Graph {
     // is cut — half the checkpoint jobs of the cut-every-half-step
     // shape. The FINAL a feeds two consumers (auths + its total), so
     // the last iteration cuts it as well as h.
-    val h0 = e.select(col("src").as("node")).distinct()
+    val h0 = bySrc.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("h"))
     val hLast = Iterate.rounds(h0, iterations - 1)(h => hubOf(authOf(h)))
     val a = Iterate.leaf(authOf(hLast))
@@ -832,7 +836,6 @@ object Graph {
     val auths = a.crossJoin(broadcast(a.agg(sum(col("a")).as("tot"))))
       .select(lit("auth").as("kind"), col("dst").as("node"),
         round(col("a") / col("tot"), 6).as("score"))
-    e.unpersist(); eByDst.unpersist(); eBySrc.unpersist()
     auths.unionByName(hubs).orderBy(col("kind"), col("node"))
   }
 

@@ -3,13 +3,20 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** The iterative operators' shared mechanics, written once: the
-  * materialization primitive [[leaf]] and its row count [[rows]], the
-  * two loop drivers [[rounds]] (fixed round count) and [[untilStable]]
-  * (fixed point), and the one size gate [[fits]] behind the explicit
-  * broadcasts.
+  * materialization primitive [[leaf]], its row count [[rows]] and its
+  * hash layout [[laidOut]], the two loop drivers [[rounds]] (fixed
+  * round count) and [[untilStable]] (fixed point), and the one size
+  * gate [[fits]] behind the explicit broadcasts.
+  *
+  * A leaf keeps its plan's hash layout, so the planner does the
+  * reference's `partitionBy` + `cache()`: a loop builds each invariant
+  * once with [[laidOut]], by one rule. Under the broadcast gate the
+  * round streams the invariant, so it is laid out by the key the round
+  * aggregates on; past the gate, by the key the round joins on. No
+  * round re-exchanges it.
   *
   * A driver owns the round counter, the lineage cut and, for fixed
   * points, the per-round observation, the stop test and the loud
@@ -65,11 +72,27 @@ object Iterate {
     * pure function of the query; AQE still re-plans from exact
     * shuffle sizes.
     *
+    * The leaf keeps the plan's `HashPartitioning` when its blocks are
+    * exactly the hash buckets; any other layout is unknown.
+    *
     * The blocks are not in the SQL CacheManager, so `unpersist()`
     * cannot release them: they are freed when the RDD is garbage
     * collected. */
   def leaf(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftColumnBridge.localCheckpoint(df)
+
+  /** `df` hash-repartitioned on `key` into `numPartitions` (> 0) or
+    * the session's shuffle partitions: AQE coalesces a count-less
+    * repartition of a small relation, and a leaf over it keeps no layout. */
+  def layout(df: DataFrame, key: String, numPartitions: Int = 0): DataFrame =
+    df.repartition(
+      if (numPartitions > 0) numPartitions
+      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col(key))
+
+  /** [[leaf]] of [[layout]]: a loop invariant laid out by `key`. */
+  def laidOut(df: DataFrame, key: String, numPartitions: Int = 0): DataFrame =
+    leaf(layout(df, key, numPartitions))
 
   private def exactRows(p: LogicalPlan): Option[Long] = p match {
     case l: LogicalRDD => l.computeStats().rowCount.map(_.toLong)

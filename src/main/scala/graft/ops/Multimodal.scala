@@ -339,10 +339,8 @@ object Multimodal {
     * offset each breaks a different column. The media table feeds two
     * structurally different consumers (relational header parse, typed
     * pixel decode — no exchange to reuse), so it's materialized once
-    * via an eager localCheckpoint: unlike r3's persist, the blocks
-    * are owned by the RDD and reclaimed by the ContextCleaner when
-    * the query's plan is garbage-collected — nothing registers in
-    * the session CacheManager. */
+    * via an eager localCheckpoint, whose blocks the ContextCleaner
+    * reclaims with the plan — nothing registers in the CacheManager. */
   def multimodalDecode(s: SparkSession, d: String): DataFrame = {
     val imgs = mediaTable(s, d).filter(_.kind == "image").localCheckpoint()
     val header = imgs.toDF().select(

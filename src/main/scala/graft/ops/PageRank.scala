@@ -3,7 +3,6 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative PageRank, quirk-faithful to the reference
   * (`assignment1/part3/task1/task1.py`) — see SURVEY.md §2.14:
@@ -22,16 +21,19 @@ import org.apache.spark.storage.StorageLevel
   * Spark-first rendering: the adjacency list is never materialized as
   * arrays — edges stay flat and degrees are a count, so the widest row
   * is O(1) regardless of a node's fan-out (the 100 TB-safe shape; the
-  * reference's `groupByKey` would OOM on a celebrity node). Loop
-  * invariants (`edges`, `degrees`) are cached (C2, `task3/task3.py:37`)
-  * and the loop is cut by [[Iterate.leaf]] to truncate the 10-deep
-  * lineage (C3, the task4 fault-tolerance experiment).
+  * reference's `groupByKey` would OOM on a celebrity node). The loop
+  * invariant (edges with their degrees) is one laid-out leaf
+  * ([[Iterate.laidOut]]): the reference's hand-set `partitionBy` and
+  * `cache()` (C2, `task2/task2.py`, `task3/task3.py:37`) become a
+  * plan property, so no round re-exchanges it. The rank loop is cut by
+  * [[Iterate.leaf]] to truncate the 10-deep lineage (C3, the task4
+  * fault-tolerance experiment).
   *
   * Beside the quirk loop [[run]], one teleport loop ([[teleportLoop]])
   * runs the standard formulation for a personalization vector: uniform
   * in [[runTextbook]], the seed indicator in [[runPersonalized]]. Both
-  * loops, and [[Graph.hitsCore]], lay their invariants out by one rule,
-  * [[laidOut]].
+  * loops, and [[Graph.hitsCore]], lay their invariants out by
+  * [[Iterate]]'s one layout rule.
   */
 object PageRank {
 
@@ -45,7 +47,7 @@ object PageRank {
         split(col("value"), "\t").getItem(1).as("dst"))
 
   /** The broadcast decision: one count of distinct endpoints over the
-    * (persisted, not leaf) edge relation — an upper bound on every
+    * (persisted or leaf) edge relation — an upper bound on every
     * iteration's rank-vector size (the init vector is src-keyed, later
     * ones dst-keyed). The rank leaves carry their row count only at
     * the default size, so Catalyst/AQE can't make this call itself. */
@@ -54,39 +56,22 @@ object PageRank {
       e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
         .distinct().count())
 
-  /** The power-iteration family's one loop-invariant layout rule
-    * ([[run]], [[teleportLoop]], [[Graph.hitsCore]]). Under the
-    * broadcast gate the rank/score-vector join streams the invariant
-    * side unchanged, so laying the invariant out ONCE by the key the
-    * round aggregates on leaves every round's groupBy with its
-    * distribution already satisfied: one up-front exchange replaces
-    * one per round, and the rounds shuffle nothing. Past the gate the
-    * shuffled join re-keys the invariant itself, so a layout would
-    * only add a wasted exchange: the invariant stays as it is.
-    * `numPartitions > 0` ([[run]]'s C1 sweep) keeps the requested
-    * partition count under the gate, or the sweep would silently
-    * exercise identical layouts.
-    *
-    * The result is persisted, since every round reads it; an input
-    * already cached (HITS' edge relation past the gate) is returned as
-    * it is. The caller unpersists it. */
-  private[graft] def laidOut(df: DataFrame, key: String, doBroadcast: Boolean,
-      numPartitions: Int = 0): DataFrame = {
-    val laid =
-      if (!doBroadcast) df
-      else if (numPartitions > 0) df.repartition(numPartitions, col(key))
-      else df.repartition(col(key))
-    if (laid.storageLevel == StorageLevel.NONE) laid.persist() else laid
-  }
+  /** Both loops' invariant: each edge with its source's out-degree,
+    * laid out by [[Iterate]]'s rule — by the round's aggregation key dst
+    * under the gate, by its join key src (the join's own exchange) past it. */
+  private def withDegrees(e: DataFrame, doBroadcast: Boolean, numPartitions: Int = 0): DataFrame =
+    Iterate.laidOut(e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
+      .select(col("src"), col("dst"), col("deg")), if (doBroadcast) "dst" else "src", numPartitions)
 
   /** The iterative core. `edges(src, dst)` of any key type.
     *
     * `numPartitions > 0` reproduces the reference's partition-sweep
     * experiment (C1, `task2/task2.py:36` — `groupByKey().repartition(n)`
-    * swept over {10,50,100,200,300}): the loop-invariant edge relation
-    * is hash-repartitioned on `src`, which also co-locates the
-    * per-iteration `edges ⋈ ranks` probe. Results are partition-count
-    * invariant (PageRankSpec pins this) — only shuffle layout changes.
+    * swept over {10,50,100,200,300}): the edge relation is
+    * hash-repartitioned on `src` and the loop invariant is laid out in
+    * `n` partitions, or the sweep would exercise identical layouts.
+    * Results are partition-count invariant (PageRankSpec pins this) —
+    * only shuffle layout changes.
     *
     * Lineage is truncated every 3rd iteration (and after the last)
     * rather than every one: each eager `localCheckpoint` is a full
@@ -99,32 +84,20 @@ object PageRank {
     * holds ([[pagerankSnap]]'s dictionary leaf). */
   def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0,
       broadcastRanks: Option[Boolean] = None): DataFrame = {
-    val laidOutBySrc =
-      if (numPartitions > 0) edges.repartition(numPartitions, col("src"))
-      else edges
-    val e = laidOutBySrc.persist()
+    val e = (if (numPartitions > 0) Iterate.layout(edges, "src", numPartitions) else edges).persist()
     val doBroadcast = broadcastRanks.getOrElse(chooseBroadcast(e))
-    val gate = Iterate.broadcastIf(doBroadcast)
-    val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // the edges ⋈ degrees join is loop-invariant: materialize it once,
-    // in the layout of the per-iteration groupBy(dst), instead of
-    // recomputing it in all 10 iterations
-    val withDeg = laidOut(e.join(degrees, "src").select(col("src"), col("dst"), col("deg")),
-      "dst", doBroadcast, numPartitions)
+    val withDeg = withDegrees(e, doBroadcast, numPartitions)
     val init = withDeg.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("pr"))
     val ranks = Iterate.rounds(init, iterations, cutEvery = 3) { ranks =>
       withDeg
-        .join(gate(ranks), col("src") === col("node"))
+        .join(Iterate.broadcastIf(doBroadcast)(ranks), col("src") === col("node"))
         .select(col("dst"), (col("pr") / col("deg")).as("contrib"))
         .groupBy(col("dst"))
         .agg((lit(0.15) + lit(0.85) * sum(col("contrib"))).as("pr"))
         .select(col("dst").as("node"), col("pr"))
     }
-    // ranks is checkpointed (no lineage back to the invariants) —
-    // release them instead of leaking cache entries per run
-    e.unpersist()
-    withDeg.unpersist()
+    e.unpersist() // ranks is a leaf, with no lineage back to e
     ranks
   }
 
@@ -141,7 +114,7 @@ object PageRank {
     * mass of dangling (no-out-edge) nodes restarts by the vector:
     * pr' = jump + 0.85·(Σ contribs + share(danglingMass)), so total
     * mass is conserved at 1.0 per iteration. Same scale shape as
-    * [[run]]: flat edges, O(1) rows, invariants persisted; the
+    * [[run]]: flat edges, O(1) rows, invariants laid-out leaves; the
     * dangling mass flows back as a 1-row broadcast, never a collect.
     *
     * Unlike [[run]] (one consumer of ranks per iteration, so a cut
@@ -153,41 +126,37 @@ object PageRank {
   private def teleportLoop(edges: DataFrame, iterations: Int)(
       vec: Double => Teleport): DataFrame = {
     val e = edges.persist()
-    val degrees = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = Iterate.leaf(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    // every node once, with whether it has out-edges, laid out by node
+    // (every round joins on node) by its own aggregation's exchange
+    val nodes = Iterate.laidOut(
+      e.select(col("src").as("node"), lit(true).as("out"))
+        .unionByName(e.select(col("dst").as("node"), lit(false).as("out")))
+        .groupBy("node").agg(max(col("out")).as("out")), "node")
     // the node leaf's row count is N, and it equals chooseBroadcast's
     // endpoint bound — it serves both the vector and the gate
     val v = vec(Iterate.rows(nodes).toDouble)
     val doBroadcast = Iterate.fits(nodes)
     val gate = Iterate.broadcastIf(doBroadcast)
-    // past the gate every iteration sort-merges nodes on node: lay the
-    // leaf out by node once instead of exchanging it per iteration
-    val byNode = if (doBroadcast) nodes else nodes.repartition(col("node")).persist()
-    val withDeg = laidOut(e.join(degrees, "src").select(col("src"), col("dst"), col("deg")),
-      "dst", doBroadcast)
-    // sinks: nodes with no out-edges; their rank mass would otherwise
-    // leak (the quirk variant deliberately loses it)
-    val dangling = byNode.join(
-      degrees.select(col("src").as("node")), Seq("node"), "left_anti").persist()
-    val ranks = Iterate.rounds(nodes.select(col("node"), v.init.as("pr")), iterations) { ranks =>
-      val rankSide = gate(ranks)
+    val withDeg = withDegrees(e, doBroadcast)
+    // the ranks carry the out-edge flag, so the dangling mass (sinks'
+    // rank, which the quirk variant deliberately loses) is a filter of
+    // the state, with no join
+    val init = nodes.select(col("node"), v.init.as("pr"), col("out"))
+    val ranks = Iterate.rounds(init, iterations) { ranks =>
       val contribs = withDeg
-        .join(rankSide, col("src") === col("node"))
+        .join(gate(ranks), col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
-      // rankSide, not ranks: under broadcast the dangling-mass probe
-      // would otherwise plan a fresh two-sided shuffle join on node
-      // every iteration (Catalyst never broadcasts a default-size leaf)
-      val dm = dangling.join(rankSide, "node")
+      val dm = ranks.filter(!col("out"))
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      byNode
+      nodes
         .join(gate(contribs), col("node") === col("dst"), "left")
         .crossJoin(broadcast(dm))
         .select(col("node"),
-          (v.jump + lit(0.85) * (coalesce(col("c"), lit(0.0)) + v.share(col("dm")))).as("pr"))
+          (v.jump + lit(0.85) * (coalesce(col("c"), lit(0.0)) + v.share(col("dm")))).as("pr"),
+          col("out"))
     }
-    e.unpersist(); withDeg.unpersist(); byNode.unpersist(); dangling.unpersist()
-    ranks
+    e.unpersist()
+    ranks.select(col("node"), col("pr"))
   }
 
   /** Textbook PageRank — the variant SURVEY §2.14 documents alongside

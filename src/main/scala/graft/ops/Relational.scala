@@ -1352,13 +1352,13 @@ object Relational {
     * should flag; median/MAD don't). Both medians are DISCRETE
     * rank-and-filter selections ([[aggApproxExact]]'s technique: the
     * chosen value is a data value, immune to the cross-engine
-    * interpolation ULP that flipped a half-cent at sf0.001), each one
-    * window pass over the (event_type) partition. Flag threshold =
-    * 3·1.4826·MAD (1.4826 ≈ 1/Φ⁻¹(¾) scales MAD to σ under
-    * normality); |value−median| and the product are single IEEE ops
-    * both engines compute bit-identically, so the count needs no
-    * epsilon. Group count = 5, so the second window over (group) is
-    * as cheap as the first at any event volume. */
+    * interpolation ULP that flipped a half-cent at sf0.001). Every
+    * step is a window over the (event_type) partition: one exchange,
+    * no join (a join-back of the 5-row medians flipped from sort-merge
+    * to broadcast late, run to run). Flag threshold = 3·1.4826·MAD
+    * (1.4826 ≈ 1/Φ⁻¹(¾) scales MAD to σ under normality);
+    * |value−median| and the product are single IEEE ops both engines
+    * compute bit-identically, so the count needs no epsilon. */
   def madOutliers(s: SparkSession, d: String): DataFrame =
     madOutliersCore(Tables.events(s, d))
 
@@ -1368,20 +1368,14 @@ object Relational {
   def madOutliersCore(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grp = Window.partitionBy(col("event_type"))
-    val ev = events.select(col("event_type"), col("value"))
-    val med = ev
-      .withColumn("rn", row_number().over(grp.orderBy(col("value").asc_nulls_last)))
+    // the ceil(n/2)-th of `v` in the group's `order`
+    def median(v: String, order: Column): Column =
+      max(when(row_number().over(grp.orderBy(order)) === ceil(col("n") * 0.5), col(v))).over(grp)
+    events.select(col("event_type"), col("value"))
       .withColumn("n", count(lit(1)).over(grp))
-      .groupBy(col("event_type"))
-      .agg(max(when(col("rn") === ceil(col("n") * 0.5), col("value"))).as("med"))
-    val dev = ev.join(med, Seq("event_type"))
+      .withColumn("med", median("value", col("value").asc_nulls_last))
       .withColumn("adev", abs(col("value") - col("med")))
-    val mad = dev
-      .withColumn("rn", row_number().over(grp.orderBy(col("adev"))))
-      .withColumn("n", count(lit(1)).over(grp))
-      .groupBy(col("event_type"))
-      .agg(max(when(col("rn") === ceil(col("n") * 0.5), col("adev"))).as("mad"))
-    dev.join(mad, Seq("event_type"))
+      .withColumn("mad", median("adev", col("adev")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         round(max(col("med")), 4).as("med"),

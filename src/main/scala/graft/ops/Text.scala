@@ -140,9 +140,8 @@ object Text {
     val terms = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
     // tf is already one row per (doc, word): df falls out of it as a
     // window count over the word partition — ONE consumer of tf, so
-    // nothing needs caching (the r3 persist leaked into the session's
-    // CacheManager), and the agg+join-back pair collapses into a
-    // single shuffle on word.
+    // nothing needs caching, and one shuffle on word does the work of
+    // an aggregate and its join-back.
     val tf = terms.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("word")))
     val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -341,16 +340,12 @@ object Text {
   /** Shared-shingle candidate pairs with exact Jaccard:
     * `(da, db, na, nb, inter, jac)`, jac ≥ `minJac`.
     *
-    * r3 persisted the shingle relation because it fed THREE consumers
-    * (per-doc sizes and both self-join sides) — but the persist never
-    * had an owner to release it and leaked into the session cache.
-    * Restructured to need no cache at all: per-doc set sizes ride
-    * along as a window count over the doc_id partition (sizes joins
-    * gone), and the self-join's two sides are the *identical* subplan
-    * shuffled on the same key, which Spark's ReuseExchange collapses
-    * into one computed exchange (PlanSpec pins `ReusedExchange`) —
-    * the tokenize+shuffle pipeline runs once, same as the persist
-    * gave, with zero cache residency. */
+    * The shingle relation feeds no cache: per-doc set sizes ride along
+    * as a window count over the doc_id partition, and the self-join's
+    * two sides are the *identical* subplan shuffled on the same key,
+    * which Spark's ReuseExchange collapses into one computed exchange
+    * (PlanSpec pins `ReusedExchange`) — the tokenize+shuffle pipeline
+    * runs once. */
   private def jaccardPairs(shRaw: DataFrame, minJac: Double): DataFrame = {
     val sh = shRaw.withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
     sh.as("a").join(sh.as("b"),
@@ -395,10 +390,8 @@ object Text {
   /** Pre-sort verified relation of [[dedupNgramIdf]] — the
     * [[ngramVerified]] exposure, IDF-capped variant. */
   private[graft] def ngramIdfVerified(s: SparkSession, d: String): DataFrame = {
-    // the df cap is a window count over the shingle partition — the r3
-    // shape (persist + df aggregate + join-back) re-derived the
-    // explode pipeline per consumer unless cached; this is one pass
-    // and leaves nothing in the CacheManager
+    // the df cap is a window count over the shingle partition: one
+    // pass, no df aggregate joined back
     val sh = docShingles(FanOut(Tables.documents(s, d), col("doc_id")))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
       .filter(col("df") <= NgramMaxDf)
@@ -968,9 +961,7 @@ object Text {
   /** Band-bucket membership with each bucket's min-doc rep:
     * `(doc_id, band, band_sig, band_rep)`. The rep is a window min
     * over the bucket partition — one shuffle, one consumer of the
-    * band subplan (shingle explode + 16-way minhash agg), where the
-    * r3 agg+join-back shape needed a persist (leaked) or re-derived
-    * that subplan per consumer. */
+    * band subplan (shingle explode + 16-way minhash agg). */
   private def bandsWithReps(docs: DataFrame): DataFrame =
     minhashBands(docs).withColumn("band_rep",
       min(col("doc_id")).over(Window.partitionBy("band", "band_sig")))
@@ -1119,10 +1110,11 @@ object Text {
 
   /** 64-bit SimHash over the word bag: per-word [[PortableHash64]],
     * each bit votes ±term-frequency, sign → bit. Emits 4×16-bit band
-    * keys for Hamming-LSH bucketing. Work = |tokens|×64 narrow rows,
-    * two shuffles (doc×bit, then doc). */
+    * keys for Hamming-LSH bucketing. Work = |tokens|×64 narrow rows;
+    * the fan-out's range layout on doc_id serves both per-doc
+    * aggregates and the output sort. */
   def dedupSimhash(s: SparkSession, d: String): DataFrame =
-    simhash(FanOut(Tables.documents(s, d), col("doc_id")))
+    simhash(FanOut.byRange(Tables.documents(s, d), col("doc_id")))
 
   /** Core SimHash over any `(doc_id, text)` relation. The 64 bit
     * votes are 64 codegen'd aggregate columns over the flat token

@@ -198,8 +198,7 @@ object Vectors {
     * hyperplane dots in one fused pass instead of 32 interpreted HOF
     * folds. The two self-join sides are the identical banded subplan
     * shuffled on the same (band, bkey) key, so ReuseExchange computes
-    * the explode pipeline once (PlanSpec pins the ReusedExchange) —
-    * r3's persist did the same job but leaked into the session cache.
+    * the explode pipeline once (PlanSpec pins the ReusedExchange).
     * At scale the bucket is a shuffle key: candidates are bounded by
     * bucket sizes (the LSH guarantee), never by a quadratic blow-up. */
   private[graft] def srpCandidates(e: DataFrame, bandCol: String = "v"): DataFrame = {
@@ -220,9 +219,7 @@ object Vectors {
     * vector copy per side — the blobs never ride through the
     * candidate self-join. The two join-backs are the same vector
     * relation shuffled on the same single key, so ReuseExchange
-    * materializes it once; the only extra cost of dropping r3's
-    * (leaky) persist is one more column-pruned parquet scan feeding
-    * the banded exchange. */
+    * materializes it once. */
   private[graft] def srpPairs(emb: DataFrame, minCos: Double): DataFrame =
     srpPairsOf(emb.select(col("vec_id"), darr.as("v")), minCos)
 
@@ -621,10 +618,10 @@ object Vectors {
     * order and the λ arithmetic on hand-built low-dim vectors. */
   private[graft] def vectorMmrCore(emb: DataFrame, qv: Column): DataFrame = {
     val lam = lit(0.7)
-    val cand = emb
+    // ≤10 rows, reused across the 3 greedy steps
+    val cand = Iterate.leaf(emb
       .select(col("vec_id"), darr.as("v"), cosine(darr, qv).as("cos_q"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc).limit(10)
-      .persist() // ≤10 rows, reused across the 3 greedy steps
+      .orderBy(col("cos_q").desc, col("vec_id").asc).limit(10))
     var selected = cand
       .orderBy(col("cos_q").desc, col("vec_id").asc).limit(1)
       .select(lit(1).as("pick"), col("vec_id"), col("v"), col("cos_q"),
@@ -641,11 +638,7 @@ object Vectors {
         .orderBy(col("mmr").desc, col("vec_id").asc).limit(1)
       selected = selected.unionByName(next)
     }
-    // eager checkpoint cuts the lineage back to cand, so the cache
-    // can be released before the caller's action re-executes the plan
-    val fin = Iterate.leaf(selected)
-    cand.unpersist()
-    fin.select(col("pick"), col("vec_id"),
+    Iterate.leaf(selected).select(col("pick"), col("vec_id"),
         round(col("cos_q"), 6).as("cos_q"), round(col("mmr"), 6).as("mmr"))
       .orderBy(col("pick"))
   }

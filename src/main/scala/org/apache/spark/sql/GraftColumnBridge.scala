@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Spark 4 made the Column↔Expression converters `private[sql]`
   * (`classic.ExpressionUtils`); this is the minimal in-package bridge
@@ -19,16 +21,20 @@ object GraftColumnBridge {
   def wrap1(a: Column)(f: Expression => Expression): Column =
     ExpressionUtils.column(f(ExpressionUtils.expression(a)))
 
-  /** `df.localCheckpoint()` that keeps the row count
-    * (`graft.ops.Iterate.leaf` says why). One eager job materializes
-    * the blocks and counts them: Spark's own eager checkpoint runs the
-    * same per-partition iterator-size job and drops the sizes. The
-    * blocks come back as a fresh `LogicalRDD` whose statistics are
-    * exactly that many rows at the conservative default size, not the
-    * source plan's estimate that `Dataset.localCheckpoint` carries
-    * over (`originStats` is private[sql], hence this bridge). The SQL
-    * execution is named as Spark names it, so its call site still
-    * reads `localCheckpoint at <caller>`. */
+  /** `df.localCheckpoint()` that keeps the row count and the hash
+    * layout (`graft.ops.Iterate.leaf` says why). One eager job
+    * materializes the blocks and counts them: Spark's own eager
+    * checkpoint runs the same per-partition iterator-size job and
+    * drops the sizes. The blocks come back as a fresh `LogicalRDD`
+    * whose statistics are exactly that many rows at the conservative
+    * default size, not the source plan's estimate that
+    * `Dataset.localCheckpoint` carries over (`originStats` is
+    * private[sql], hence this bridge). The SQL execution is named as
+    * Spark names it, so its call site still reads
+    * `localCheckpoint at <caller>`. The leaf reports the FINAL physical
+    * plan's `HashPartitioning` (under AQE the adaptive node's own is
+    * always unknown), remapped onto its output, when there are exactly
+    * as many blocks as buckets; any other layout stays unknown. */
   def localCheckpoint(df: Dataset[Row]): Dataset[Row] = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = df.queryExecution
@@ -39,8 +45,19 @@ object GraftColumnBridge {
     }
     val stats = Statistics(
       sizeInBytes = spark.sessionState.conf.defaultSizeInBytes, rowCount = Some(rows))
-    classic.Dataset.ofRows(spark,
-      LogicalRDD(DataTypeUtils.toAttributes(df.schema), blocks)(spark, Some(stats)))
+    val output = DataTypeUtils.toAttributes(df.schema)
+    val executed = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val toLeaf = AttributeMap(executed.output.zip(output))
+    val layout = executed.outputPartitioning match {
+      case h: HashPartitioning if h.numPartitions == blocks.getNumPartitions &&
+          h.references.forall(toLeaf.contains) =>
+        h.transform { case a: Attribute => toLeaf(a) }.asInstanceOf[HashPartitioning]
+      case _ => UnknownPartitioning(0)
+    }
+    classic.Dataset.ofRows(spark, LogicalRDD(output, blocks, layout)(spark, Some(stats)))
   }
 
   /** `bloom_filter_agg` as a Column: Spark ships the aggregate that

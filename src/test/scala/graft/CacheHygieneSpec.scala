@@ -10,10 +10,12 @@ package graft
   *
   * The harness clearCache() calls are now defensive only — this spec
   * is what proves they're unnecessary, and it catches the next
-  * accidental `.persist()` automatically. Iterative ops (PageRank,
-  * connected components) MAY persist loop invariants because they
-  * materialize eagerly and unpersist before returning; that discipline
-  * is exactly what this spec verifies from the outside.
+  * accidental `.persist()` automatically. Loop invariants are
+  * laid-out checkpoint leaves (`Iterate.laidOut`), which the
+  * CacheManager never holds; the only persisted relations left are the
+  * raw edge relations of `PageRank.run` and the teleport PageRank loop,
+  * each unpersisted before the loop returns — the discipline this spec
+  * verifies from the outside.
   */
 class CacheHygieneSpec extends SparkSpec {
 

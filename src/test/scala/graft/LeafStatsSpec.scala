@@ -2,13 +2,16 @@ package graft
 
 import graft.ops.Iterate
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** The materialization primitive's statistics: every `Iterate.leaf`
-  * carries its exact row count, counted by its own checkpoint job,
-  * and the size gates read it back through `Iterate.rows` without a
-  * job of their own. */
+/** The materialization primitive's statistics and layout: every
+  * `Iterate.leaf` carries its exact row count, counted by its own
+  * checkpoint job, and the size gates read it back through
+  * `Iterate.rows` without a job of their own; a leaf of a hash
+  * layout keeps that layout. */
 class LeafStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,5 +82,40 @@ class LeafStatsSpec extends SparkSpec {
       assert(!Iterate.fits(spark, 1L))
     } finally spark.conf.set(key, saved)
     assert(Iterate.fits(spark, 1L))
+  }
+
+  private def layoutOf(leaf: DataFrame): (LogicalRDD, Partitioning) = {
+    val l = leaf.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }.get
+    (l, l.outputPartitioning)
+  }
+
+  test("a leaf of a hash repartition keeps the layout over its own output") {
+    val data = (1 to 300).map(i => (i.toLong % 37, i)).toDF("k", "x")
+    val leaf = Iterate.leaf(data.repartition(4, col("k")))
+    val (l, layout) = layoutOf(leaf)
+    assert(layout == HashPartitioning(Seq(l.output.head), 4), layout.toString)
+    // every row sits in the bucket the layout names
+    val buckets = leaf.select(spark_partition_id().as("p"), pmod(hash(col("k")), lit(4)).as("b"))
+    assert(buckets.filter(col("p") =!= col("b")).count() == 0L)
+    assert(buckets.select("p").distinct().count() == 4L)
+    // the planner sees it: an aggregation on the key plans no exchange
+    val agg = leaf.groupBy("k").agg(sum("x").as("s"))
+    assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
+      agg.queryExecution.executedPlan.toString)
+    assert(agg.count() == 37L)
+    // a projection that renames the key carries the layout through
+    val (rl, renamed) = layoutOf(Iterate.leaf(
+      data.repartition(4, col("k")).select(col("x"), col("k").as("key"))))
+    assert(renamed == HashPartitioning(Seq(rl.output(1)), 4), renamed.toString)
+  }
+
+  test("coalesced, range-partitioned and scan leaves keep no layout") {
+    // 37 tiny groups: AQE coalesces the aggregation's 4 buckets
+    val coalesced = Iterate.leaf((1 to 300).map(i => (i.toLong % 37, i)).toDF("k", "x")
+      .groupBy("k").agg(sum("x").as("s")))
+    assert(layoutOf(coalesced)._2 == UnknownPartitioning(0))
+    assert(layoutOf(Iterate.leaf(spark.range(0, 100, 1, 3).toDF()))._2 == UnknownPartitioning(0))
+    assert(layoutOf(Iterate.leaf(spark.read.parquet(s"$sf0001/nation.parquet")))._2 ==
+      UnknownPartitioning(0))
   }
 }

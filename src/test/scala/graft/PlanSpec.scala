@@ -1,5 +1,13 @@
 package graft
 
+import graft.ops.{Components, Graph, PageRank}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.functions.col
+
 /** Physical-plan shape guards: the optimizer wins found during round-1
   * tuning, pinned so a refactor can't silently regress them (a plan
   * that stops broadcasting or starts exchanging per iteration would
@@ -603,5 +611,60 @@ class PlanSpec extends SparkSpec {
     val p = planOf("q_naive_bayes")
     assert(!p.contains("SortMergeJoin"),
       s"the |V|·k model joins back as a broadcast under the dim gate: $p")
+  }
+
+  /** Every node of an executed plan, the final adaptive plan's query
+    * stages and reused exchanges included. */
+  private def nodesOf(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case _ => p.children
+  }).flatMap(nodesOf)
+
+  /** Whether `p` computes rows of the leaf whose columns are `cols`
+    * alone: a chain of one-input operators down to its scan. */
+  private def overLeaf(cols: Set[String])(p: SparkPlan): Boolean = p match {
+    case s: RDDScanExec => s.output.map(_.name).toSet == cols
+    case _: Exchange | _: QueryStageExec => false
+    case a: AdaptiveSparkPlanExec => overLeaf(cols)(a.executedPlan)
+    case _ => p.children match {
+      case Seq(c) => overLeaf(cols)(c)
+      case _ => false
+    }
+  }
+
+  test("past the gate no loop round exchanges the loop's laid-out invariant leaf") {
+    val star = PageRank.starEdges(spark, sf0001)
+    val directed = PageRank.starEdgesDirected(spark, sf0001)
+    val co = Graph.coEdges(spark, sf0001)
+    // each loop with the columns of its invariant leaves
+    val cases = Seq[(String, Seq[Set[String]], () => DataFrame)](
+      ("pagerank", Seq(Set("src", "dst", "deg")), () => PageRank.run(star, 10)),
+      ("teleport pagerank", Seq(Set("src", "dst", "deg"), Set("node", "out")),
+        () => PageRank.runTextbook(directed, 10)),
+      ("hits", Seq(Set("src", "dst")), () => Graph.hitsCore(directed, 8)),
+      ("connected components", Seq(Set("a", "b")), () => Components.connectedComponents(
+        co.select(col("u").as("src"), col("v").as("dst")))),
+      ("bfs", Seq(Set("a", "b")), () => Graph.bfs(co, Graph.BfsSource)))
+    for ((what, leaves, q) <- cases; plans = pastTheGate(executions(q())._2).map(_.executedPlan);
+        cols <- leaves) {
+      val scans = plans.flatMap(nodesOf).collect {
+        case s: RDDScanExec if overLeaf(cols)(s) => s.outputPartitioning
+      }
+      assert(scans.exists(_.isInstanceOf[HashPartitioning]),
+        s"$what: no round reads a laid-out ${cols.mkString(",")} leaf: $scans")
+      for (p <- plans) {
+        // one the planner adds to meet a join's or aggregate's
+        // distribution (not a layout the loop asks for), and by hash:
+        // a global aggregate's single-partition exchange of partial
+        // sums moves no layout
+        val exchanges = nodesOf(p).collect {
+          case x: ShuffleExchangeLike if x.shuffleOrigin == ENSURE_REQUIREMENTS &&
+              x.outputPartitioning.isInstanceOf[HashPartitioning] && overLeaf(cols)(x.child) => x
+        }
+        assert(exchanges.isEmpty, s"$what: a round re-exchanges its ${cols.mkString(",")} leaf:\n$p")
+      }
+    }
   }
 }

@@ -15,42 +15,48 @@ trait SparkSpec extends AnyFunSuite {
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 
-  /** `q`'s rows in the default regime and with broadcast joins off
-    * (`autoBroadcastJoinThreshold=-1`, the at-scale regime every size
-    * gate then takes), after asserting that the second run planned its
-    * joins shuffled in every execution it ran — loop rounds and
-    * checkpoint jobs included — while the first broadcast somewhere. */
-  protected def bothRegimes(what: String)(q: => DataFrame): (Set[Row], Set[Row]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  /** `q`'s rows, and every execution computing them ran — loop rounds
+    * and checkpoint jobs included — in the order they finished. */
+  protected def executions(q: => DataFrame): (Set[Row], Seq[QueryExecution]) = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def run(): (Set[Row], Seq[String]) = {
-      GraftColumnBridge.drainListeners(spark.sparkContext)
-      plans.clear()
-      val rows = q.collect().toSet
-      GraftColumnBridge.drainListeners(spark.sparkContext)
-      (rows, plans.asScala.toSeq)
-    }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
+    GraftColumnBridge.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      val (default, defaultPlans) = run()
-      assert(defaultPlans.exists(_.contains("BroadcastHashJoin")),
-        s"$what: the default regime broadcasts nothing, so the check below proves nothing")
-      spark.conf.set(key, "-1")
-      val (shuffled, shuffledPlans) = run()
-      assert(shuffledPlans.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")),
-        s"$what: no shuffled join planned:\n${shuffledPlans.mkString("\n")}")
-      shuffledPlans.foreach(p =>
-        assert(!p.contains("BroadcastHashJoin"), s"$what: a gate still broadcasts:\n$p"))
-      (default, shuffled)
-    } finally {
-      spark.conf.set(key, saved)
-      spark.listenerManager.unregister(listener)
+      val rows = q.collect().toSet
+      GraftColumnBridge.drainListeners(spark.sparkContext)
+      (rows, qes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `f` with broadcast joins off (`autoBroadcastJoinThreshold=-1`,
+    * the at-scale regime every size gate then takes). */
+  protected def pastTheGate[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, saved)
+  }
+
+  /** `q`'s rows in the default regime and [[pastTheGate]], after
+    * asserting that the second run planned its joins shuffled in every
+    * execution it ran while the first broadcast somewhere. */
+  protected def bothRegimes(what: String)(q: => DataFrame): (Set[Row], Set[Row]) = {
+    def run(): (Set[Row], Seq[String]) = {
+      val (rows, qes) = executions(q)
+      (rows, qes.map(_.executedPlan.toString))
     }
+    val (default, defaultPlans) = run()
+    assert(defaultPlans.exists(_.contains("BroadcastHashJoin")),
+      s"$what: the default regime broadcasts nothing, so the check below proves nothing")
+    val (shuffled, shuffledPlans) = pastTheGate(run())
+    assert(shuffledPlans.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")),
+      s"$what: no shuffled join planned:\n${shuffledPlans.mkString("\n")}")
+    shuffledPlans.foreach(p =>
+      assert(!p.contains("BroadcastHashJoin"), s"$what: a gate still broadcasts:\n$p"))
+    (default, shuffled)
   }
 }
