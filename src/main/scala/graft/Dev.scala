@@ -126,7 +126,8 @@ object Dev {
       GraftColumnBridge.drainListeners(sc)
       val jobs = listener.jobs.sortBy(_.start)
       val stages = listener.stages
-      println(f"\n===== $name: $secs%.2f s, ${jobs.size} jobs, ${stages.size} stages =====")
+      println(f"\n===== $name: $secs%.2f s, ${jobs.size} jobs, ${stages.size} stages, " +
+        f"sr ${stages.map(_.shuffleReadB).sum / 1024}%d KiB, sw ${stages.map(_.shuffleWriteB).sum / 1024}%d KiB =====")
       val tQuery0 = jobs.headOption.map(_.start).getOrElse(0L)
       jobs.foreach { j =>
         println(f"  job ${j.id}%-4d +${j.start - tQuery0}%-6d ms  dur ${j.end - j.start}%-6d ms")

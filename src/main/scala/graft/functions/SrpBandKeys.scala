@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 /** Native Catalyst rendering of the SRP-LSH band keys over a 64-dim
   * `array<double>` embedding: all `nBands · bitsPerBand` hyperplane
   * dot products in ONE fused pass over the vector, each band's sign
-  * bits packed little-endian into an int.
+  * bits packed little-endian into an int (one 32-bit band packs every
+  * plane's bit into one word, the sign bit included).
   *
   * The HOF rendering — per plane, `aggregate(zip_with(v, hplane(j),
   * _*_), 0D, _+_)` — is CodegenFallback and walks 32 interpreted
@@ -36,7 +37,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 case class SrpBandKeys(child: Expression, nBands: Int, bitsPerBand: Int)
     extends UnaryExpression {
 
-  require(nBands > 0 && bitsPerBand > 0 && bitsPerBand <= 31,
+  require(nBands > 0 && bitsPerBand > 0 && bitsPerBand <= 32,
     s"bad SRP shape: $nBands bands x $bitsPerBand bits")
 
   private val dims = 64

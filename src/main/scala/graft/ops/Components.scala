@@ -29,11 +29,12 @@ object Components {
     // deep pipeline (LSH banding is a DAG of self-joins) that every
     // round's plan would re-embed several times, growing Catalyst's
     // optimizer work and size estimates with the producer pipeline;
-    // the cut keeps every round's logical plan O(1) deep. Laid out by
-    // a, whose exchange is also the distinct's.
+    // the cut keeps every round's logical plan O(1) deep. One pass
+    // over the edges emits both orientations; laid out by a, whose
+    // exchange is also the distinct's.
     val byA = Iterate.leaf(Iterate.layout(
-      edges.select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(edges.select(col("dst").as("a"), col("src").as("b"))), "a")
+      edges.select(explode(array(struct(col("src").as("a"), col("dst").as("b")),
+        struct(col("dst").as("a"), col("src").as("b")))).as("e")).select("e.*"), "a")
       .distinct())
     // byA's row count bounds every per-round relation below (labels
     // are keyed by its endpoints, received/jumpSrc are its projections).

@@ -191,26 +191,36 @@ object Vectors {
       when(dotPlane(v, b * BitsPerBand + t) > 0, lit(1 << t)).otherwise(lit(0))
     }.reduce(_ + _).cast("int")
 
-  /** SRP-LSH candidate pairs over any `(vec_id, v)` relation: explode
-    * each vector into its (band, key) buckets, self-join pure-equi on
-    * the bucket, dedup pairs found by several bands. Band keys come
-    * from the codegen'd [[graft.functions.SrpBandKeys]] — all 32
-    * hyperplane dots in one fused pass instead of 32 interpreted HOF
-    * folds. The two self-join sides are the identical banded subplan
-    * shuffled on the same (band, bkey) key, so ReuseExchange computes
-    * the explode pipeline once (PlanSpec pins the ReusedExchange).
-    * At scale the bucket is a shuffle key: candidates are bounded by
-    * bucket sizes (the LSH guarantee), never by a quadratic blow-up. */
-  private[graft] def srpCandidates(e: DataFrame, bandCol: String = "v"): DataFrame = {
-    val banded = e.select(col("vec_id"),
-        posexplode(graft.functions.SrpBandKeys.srpBandKeys(col(bandCol), NBands, BitsPerBand))
-          .as(Seq("band", "bkey")))
-    val probe = banded.select(col("vec_id").as("va"), col("band"), col("bkey"))
-    val build = banded.select(col("vec_id").as("vb"), col("band"), col("bkey"))
-    probe.join(build, Seq("band", "bkey"))
-      .filter(col("va") < col("vb"))
+  /** SRP-LSH candidate pairs over any `(vec_id, v)` relation with a
+    * unique `vec_id`: the codegen'd [[graft.functions.SrpBandKeys]]
+    * packs a vector's 32 sign bits into one word (band b's key is its
+    * byte b), the word is exploded once per band, and the vectors
+    * self-join pure-equi on (`within`, band, key). A pair is emitted
+    * only from the lowest band it collides in, a local test on the two
+    * words, so each pair is one row and no pair-dedup shuffle follows
+    * (EDBT 2022, PAPERS.md). The test reads the generator's output, not
+    * a column computed from `v` beside it, whose inferred constraints
+    * would reach the scan below a caller's `groupBy(v)` and cost the
+    * join-backs their exchange reuse. Both self-join sides are one
+    * banded subplan on one key, so ReuseExchange computes it once
+    * (PlanSpec pins it); candidates are bounded by bucket sizes. */
+  private[graft] def srpCandidates(e: DataFrame, bandCol: String = "v",
+      within: Seq[String] = Nil): DataFrame = {
+    val word = graft.functions.SrpBandKeys.srpBandKeys(col(bandCol), 1, NBands * BitsPerBand)(0)
+    val bucket = within :+ "band" :+ "bkey"
+    val banded = e.select(col("vec_id") +: within.map(col) :+ word.as("word"): _*)
+      .select(col("vec_id") +: within.map(col) :+
+        posexplode(array(Seq.fill(NBands)(col("word")): _*)).as(Seq("band", "w")): _*)
+      .withColumn("bkey", expr(s"shiftright(w, band * $BitsPerBand) & 255"))
+    def side(id: String, w: String) =
+      banded.select(col("vec_id").as(id) +: col("w").as(w) +: bucket.map(col): _*)
+    // no lower band collides: each lower key byte of the two words differs
+    val x = col("wa").bitwiseXOR(col("wb"))
+    val lowest = (0 until NBands - 1).map(b =>
+      col("band") <= b || x.bitwiseAND(lit(255 << (b * BitsPerBand))) =!= 0).reduce(_ && _)
+    side("va", "wa").join(side("vb", "wb"), bucket)
+      .filter(col("va") < col("vb") && lowest)
       .select(col("va"), col("vb"))
-      .distinct()
   }
 
   /** Candidates → verified near-neighbor edges: join the (narrow)
@@ -229,10 +239,12 @@ object Vectors {
     * `bandCol` lets the BUCKETING see a transformed rendering of the
     * vector (Pipeline centers its all-positive count vectors so they
     * spread across sign orthants) while the cosine CONFIRM always
-    * scores the raw `v`. */
+    * scores the raw `v`; `within` restricts candidates to pairs equal
+    * on those columns. `vec_id` must be unique in `e`: each candidate
+    * pair is then one row, from its lowest colliding band. */
   private[graft] def srpPairsOf(e: DataFrame, minCos: Double,
-      bandCol: String = "v"): DataFrame = {
-    srpCandidates(e, bandCol)
+      bandCol: String = "v", within: Seq[String] = Nil): DataFrame = {
+    srpCandidates(e, bandCol, within)
       .join(e.select(col("vec_id").as("va"), col("v").as("va_v")), Seq("va"))
       .join(e.select(col("vec_id").as("vb"), col("v").as("vb_v")), Seq("vb"))
       .select(col("va"), col("vb"), cosine(col("va_v"), col("vb_v")).as("cos"))
@@ -571,27 +583,12 @@ object Vectors {
       .orderBy(col("vec_id"))
   }
 
-  /** The cosine-confirmed within-cluster edge stage of
-    * [[dedupSemantic]] — exposed so PlanSpec can pin the banded
-    * self-join's exchange reuse on THIS subplan: the declared query's
-    * final plan can't show it, because [[Components]] materializes
-    * the edges through localCheckpoint jobs before the output query
-    * runs (the q_pipeline_corpus precedent). */
-  private[graft] def semanticDupEdges(assigned: DataFrame): DataFrame = {
-    val banded = assigned.select(col("vec_id"), col("cluster"),
-      posexplode(graft.functions.SrpBandKeys.srpBandKeys(col("v"), NBands, BitsPerBand))
-        .as(Seq("band", "bkey")))
-    val probe = banded.select(col("vec_id").as("va"), col("cluster"), col("band"), col("bkey"))
-    val build = banded.select(col("vec_id").as("vb"), col("cluster"), col("band"), col("bkey"))
-    val cands = probe.join(build, Seq("cluster", "band", "bkey"))
-      .filter(col("va") < col("vb"))
-      .select(col("va"), col("vb")).distinct()
-    cands
-      .join(assigned.select(col("vec_id").as("va"), col("v").as("va_v")), Seq("va"))
-      .join(assigned.select(col("vec_id").as("vb"), col("v").as("vb_v")), Seq("vb"))
-      .filter(cosine(col("va_v"), col("vb_v")) >= SemCos)
+  /** The cosine-confirmed within-cluster edges of [[dedupSemantic]],
+    * exposed for PlanSpec: the declared query's final plan reads them
+    * from [[Components]]' checkpoint leaf. */
+  private[graft] def semanticDupEdges(assigned: DataFrame): DataFrame =
+    srpPairsOf(assigned, SemCos, within = Seq("cluster"))
       .select(col("va").as("src"), col("vb").as("dst"))
-  }
 
   /** The assigned `(vec_id, v, cluster)` relation [[semanticDupEdges]]
     * expects, from the harness embeddings — spec-side entry. */

@@ -1,9 +1,10 @@
 package graft
 
-import graft.ops.{Components, Graph, PageRank}
+import graft.ops.{Components, Graph, Iterate, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions.col
@@ -412,6 +413,52 @@ class PlanSpec extends SparkSpec {
         s"expected the banded self-join AND the vector join-backs to reuse exchanges:\n$p")
       assert(!p.contains("InMemoryTableScan"), "srpPairs must not cache anything")
     } finally spark.conf.set(key, saved)
+  }
+
+  test("SRP-LSH pairs are emitted once: no aggregate and no (va, vb) exchange, in either regime") {
+    // lowest-band emission makes each candidate pair one row, so no
+    // pair-dedup (an aggregate and its exchange keyed on both ids)
+    // may come back; the k-means assignment is a leaf so that its own
+    // aggregates stay out of the plan
+    val assigned = Iterate.leaf(ops.Vectors.semanticAssigned(spark, sf0001))
+    val cases = Seq[(String, () => DataFrame)](
+      "srpPairs" -> (() => ops.Vectors.srpPairs(Tables.embeddings(spark, sf0001), 0.25)),
+      "semanticDupEdges" -> (() => ops.Vectors.semanticDupEdges(assigned)))
+    for ((what, q) <- cases; past <- Seq(false, true)) {
+      def run(): SparkPlan = {
+        val df = q()
+        df.queryExecution.toRdd.foreach(_ => ())
+        df.queryExecution.executedPlan
+      }
+      val plan = if (past) pastTheGate(run()) else run()
+      val bad = nodesOf(plan).collect {
+        case a: BaseAggregateExec => a
+        case x: ShuffleExchangeLike if (x.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet == Set("va", "vb")
+          case _ => false
+        }) => x
+      }
+      assert(bad.isEmpty, s"$what (past the gate: $past): a pair-dedup aggregate or exchange:\n$plan")
+    }
+  }
+
+  test("SRP band keys reach no Filter and no scan's data filters (the join-backs keep their reuse)") {
+    // the lowest-band test reads the word the banded explode emits; a
+    // key column computed from v beside the explode would have its
+    // inferred isnotnull pushed under q_dedup_embed's groupBy(v) into
+    // the scan, and the banded side's vector exchange would stop
+    // matching the join-backs'
+    for (past <- Seq(false, true)) {
+      def run(): Seq[SparkPlan] =
+        executions(ops.Vectors.dedupEmbed(spark, sf0001))._2.map(_.executedPlan)
+      val nodes = (if (past) pastTheGate(run()) else run()).flatMap(nodesOf)
+      assert(nodes.exists(_.isInstanceOf[GenerateExec]), "no banded explode ran")
+      val bad = nodes.collect {
+        case f: FilterExec if f.condition.toString.contains("srp_band_keys") => f
+        case s: FileSourceScanExec if s.dataFilters.exists(_.toString.contains("srp_band_keys")) => s
+      }
+      assert(bad.isEmpty, s"past the gate: $past: band keys filtered:\n${bad.mkString("\n")}")
+    }
   }
 
   test("bucketed join variant: the fact-fact join itself never exchanges") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Vector-family guarantees that the driver's hash-compare can't see:
@@ -92,11 +93,39 @@ class VectorsSpec extends SparkSpec {
 
   test("exact duplicates collide in every SRP band (recall 1 at cos = 1)") {
     // cos = 1 → every hyperplane dot has the same sign → all 4 band
-    // keys equal; the pair is found 4 times over before dedup, so no
-    // single band's 8-bit key is load-bearing
+    // keys equal; the pair collides in all 4 bands and is emitted once,
+    // from band 0
     val pairs = ops.Vectors.srpPairs(plantedCorpus, 0.999999)
       .select("va", "vb").as[(Long, Long)].collect().toSet
     assert(pairs == Set((3L, 480L)), s"expected exactly the planted pair, got $pairs")
+  }
+
+  /** Every `va < vb` pair of `e` sharing a band key (and, with
+    * `within`, its `cluster`), brute-forced over the collected 4 × 8-bit
+    * keys: the set srpCandidates must return. */
+  private def bruteCandidates(e: DataFrame, within: Boolean): Set[(Long, Long)] = {
+    val keyed = e.select($"vec_id", (if (within) $"cluster" else lit(0)).cast("long"),
+        graft.functions.SrpBandKeys.srpBandKeys($"v", 4, 8))
+      .as[(Long, Long, Seq[Int])].collect()
+    (for (a <- keyed; b <- keyed if a._1 < b._1 && a._2 == b._2 &&
+        a._3.zip(b._3).exists { case (x, y) => x == y }) yield (a._1, b._1)).toSet
+  }
+
+  test("SRP candidates: each colliding pair exactly once, the brute-force set, within clusters too") {
+    val toV = transform($"embedding", x => x.cast("double")).as("v")
+    val emb = Tables.embeddings(spark, sf0001).select($"vec_id", toV)
+    val planted = plantedCorpus.select($"vec_id", $"label".as("cluster"), toV)
+    val assigned = ops.Vectors.semanticAssigned(spark, sf0001)
+    for ((what, e, within) <- Seq(("sf0.001", emb, false), ("planted", planted, false),
+        ("planted within labels", planted, true), ("sf0.001 within clusters", assigned, true))) {
+      val got = ops.Vectors.srpCandidates(e, within = if (within) Seq("cluster") else Nil)
+        .as[(Long, Long)].collect()
+      assert(got.length == got.distinct.length,
+        s"$what: a pair emitted more than once: ${got.diff(got.distinct).take(5).mkString(",")}")
+      val want = bruteCandidates(e, within)
+      assert(want.nonEmpty, s"$what: no colliding pair, the check below proves nothing")
+      assert(got.toSet == want, s"$what: missing ${(want -- got).take(5)}, extra ${(got.toSet -- want).take(5)}")
+    }
   }
 
   test("native srp_band_keys is bit-identical to the HOF fold rendering") {
@@ -306,8 +335,9 @@ class VectorsSpec extends SparkSpec {
     val groupRep = cloneIds.min
     assert(cloneIds.forall(id => collapsed(id) == groupRep))
     // (b) the candidate cut: uncollapsed candidates hold all C(k,2)
-    // clone pairs (identical vectors collide in every band); collapsed
-    // candidates hold NONE of them (one rep entered the join)
+    // clone pairs, one row each (identical vectors collide in every
+    // band, emitted from the lowest); collapsed candidates hold NONE of
+    // them (one rep entered the join)
     val clonePairs = (k.toLong * (k - 1)) / 2
     val rawCand = ops.Vectors.srpCandidates(e)
       .as[(Long, Long)].collect()
@@ -319,6 +349,19 @@ class VectorsSpec extends SparkSpec {
       .as[(Long, Long)].collect()
       .count { case (a, b) => cloneIds(a) && cloneIds(b) }
     assert(cutCand == 0, s"collapsed front still emitted $cutCand intra-clone candidates")
+  }
+
+  test("past the broadcast gate the SRP-LSH family plans shuffled joins and gives the same rows") {
+    val cases = Seq[(String, () => DataFrame)](
+      "q_label_spread" -> (() => SparkEntry.queries("q_label_spread")(spark, sf0001)),
+      "dedupEmbedCore" -> (() => ops.Vectors.dedupEmbed(spark, sf0001)),
+      "Pipeline.nearDupEdges" -> (() => ops.Pipeline.nearDupEdges(Tables.documents(spark, sf0001))),
+      "semanticDupEdges" -> (() =>
+        ops.Vectors.semanticDupEdges(ops.Vectors.semanticAssigned(spark, sf0001))))
+    for ((what, q) <- cases) {
+      val (default, shuffled) = bothRegimes(what)(q())
+      assert(default.nonEmpty && shuffled == default, s"$what: the regimes disagree")
+    }
   }
 
   test("semantic dedup: reps are cluster-local min ids and the cosine gate genuinely prunes") {

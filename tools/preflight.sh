@@ -4,7 +4,7 @@
 # code/resource change and the snapshot). Runs the cheap structural
 # gates in ~2-3 min; the FULL bar before a snapshot is:
 #   1. this script green
-#   2. `sbt -batch test` green (371 tests, ~20 min on 4 cores)
+#   2. `sbt -batch test` green (375 tests, ~20 min on 4 cores)
 #   3. the 3-SF Verify sweep from .claude/skills/verify/SKILL.md
 # The snapshot commit message must cite the green full-suite run.
 set -euo pipefail
