@@ -806,7 +806,8 @@ object Graph {
     // the one that Iterate's layout rule picks for the regime
     val bySrc = Iterate.laidOut(edges, "src")
     val byDst = Iterate.laidOut(bySrc, "dst")
-    val doBroadcast = PageRank.chooseBroadcast(bySrc)
+    // |V| bounds both score vectors
+    val doBroadcast = Iterate.fits(PageRank.nodeLeaf(bySrc))
     val gate = Iterate.broadcastIf(doBroadcast)
     val (aEdges, hEdges) = if (doBroadcast) (byDst, bySrc) else (bySrc, byDst)
     def authOf(h: DataFrame): DataFrame =

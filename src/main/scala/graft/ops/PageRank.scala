@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   * runs the standard formulation for a personalization vector: uniform
   * in [[runTextbook]], the seed indicator in [[runPersonalized]]. Both
   * loops, and [[Graph.hitsCore]], lay their invariants out by
-  * [[Iterate]]'s one layout rule.
+  * [[Iterate]]'s one layout rule and gate their vectors' broadcast on
+  * one bound, the row count of the node leaf [[nodeLeaf]].
   */
 object PageRank {
 
@@ -46,22 +47,36 @@ object PageRank {
         split(col("value"), "\t").getItem(0).as("src"),
         split(col("value"), "\t").getItem(1).as("dst"))
 
-  /** The broadcast decision: one count of distinct endpoints over the
-    * (persisted or leaf) edge relation — an upper bound on every
-    * iteration's rank-vector size (the init vector is src-keyed, later
-    * ones dst-keyed). The rank leaves carry their row count only at
-    * the default size, so Catalyst/AQE can't make this call itself. */
-  private[graft] def chooseBroadcast(e: DataFrame): Boolean =
-    Iterate.fits(e.sparkSession,
-      e.select(col("src").as("n")).unionByName(e.select(col("dst").as("n")))
-        .distinct().count())
+  /** Every node once (sources ∪ sinks), with whether it has out-edges,
+    * laid out by `node` by its own aggregation's exchange. Its row count
+    * |V| bounds every rank and score vector of the loops and of
+    * [[Graph.hitsCore]], so it is the one bound their size gate reads. */
+  private[graft] def nodeLeaf(e: DataFrame): DataFrame =
+    Iterate.laidOut(
+      e.select(col("src").as("node"), lit(true).as("out"))
+        .unionByName(e.select(col("dst").as("node"), lit(false).as("out")))
+        .groupBy("node").agg(max(col("out")).as("out")), "node")
 
   /** Both loops' invariant: each edge with its source's out-degree,
     * laid out by [[Iterate]]'s rule — by the round's aggregation key dst
     * under the gate, by its join key src (the join's own exchange) past it. */
-  private def withDegrees(e: DataFrame, doBroadcast: Boolean, numPartitions: Int = 0): DataFrame =
+  private def withDegrees(e: DataFrame, doBroadcast: Boolean, numPartitions: Int): DataFrame =
     Iterate.laidOut(e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .select(col("src"), col("dst"), col("deg")), if (doBroadcast) "dst" else "src", numPartitions)
+
+  /** Both loops' prologue: the edges, hash-laid-out by src in
+    * `numPartitions` partitions when > 0, persisted while the node set
+    * `nodesOf(e)`, the rank gate its row count decides and the degree
+    * leaf are built. `loop` returns a leaf, so the edges go after it. */
+  private def withInvariants(edges: DataFrame, numPartitions: Int, nodesOf: DataFrame => DataFrame)(
+      loop: (DataFrame, DataFrame => DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = (if (numPartitions > 0) Iterate.layout(edges, "src", numPartitions) else edges).persist()
+    try {
+      val nodes = nodesOf(e)
+      val doBroadcast = Iterate.fits(nodes)
+      loop(nodes, Iterate.broadcastIf(doBroadcast), withDegrees(e, doBroadcast, numPartitions))
+    } finally e.unpersist()
+  }
 
   /** The iterative core. `edges(src, dst)` of any key type.
     *
@@ -77,29 +92,25 @@ object PageRank {
     * rather than every one: each eager `localCheckpoint` is a full
     * materialization job, and a 3-deep join/agg lineage replans
     * cheaply — same recompute-bound idea as C3, a third of the
-    * checkpoint cost.
-    *
-    * `broadcastRanks`: None (default) size-gates per [[chooseBroadcast]];
-    * Some(b) is a decision the caller already made from a bound it
-    * holds ([[pagerankSnap]]'s dictionary leaf). */
-  def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0,
-      broadcastRanks: Option[Boolean] = None): DataFrame = {
-    val e = (if (numPartitions > 0) Iterate.layout(edges, "src", numPartitions) else edges).persist()
-    val doBroadcast = broadcastRanks.getOrElse(chooseBroadcast(e))
-    val withDeg = withDegrees(e, doBroadcast, numPartitions)
-    val init = withDeg.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("pr"))
-    val ranks = Iterate.rounds(init, iterations, cutEvery = 3) { ranks =>
-      withDeg
-        .join(Iterate.broadcastIf(doBroadcast)(ranks), col("src") === col("node"))
-        .select(col("dst"), (col("pr") / col("deg")).as("contrib"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15) + lit(0.85) * sum(col("contrib"))).as("pr"))
-        .select(col("dst").as("node"), col("pr"))
+    * checkpoint cost. */
+  def run(edges: DataFrame, iterations: Int = 10, numPartitions: Int = 0): DataFrame =
+    quirkLoop(edges, iterations, numPartitions, nodeLeaf)
+
+  /** [[run]], its gate read from the node set `nodesOf(edges)`. */
+  private def quirkLoop(edges: DataFrame, iterations: Int, numPartitions: Int,
+      nodesOf: DataFrame => DataFrame): DataFrame =
+    withInvariants(edges, numPartitions, nodesOf) { (_, gate, withDeg) =>
+      val init = withDeg.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("pr"))
+      Iterate.rounds(init, iterations, cutEvery = 3) { ranks =>
+        withDeg
+          .join(gate(ranks), col("src") === col("node"))
+          .select(col("dst"), (col("pr") / col("deg")).as("contrib"))
+          .groupBy(col("dst"))
+          .agg((lit(0.15) + lit(0.85) * sum(col("contrib"))).as("pr"))
+          .select(col("dst").as("node"), col("pr"))
+      }
     }
-    e.unpersist() // ranks is a leaf, with no lineage back to e
-    ranks
-  }
 
   /** A teleport loop's personalization vector, given the node count
     * N, as column builders over `node`: each node's initial rank, its
@@ -124,40 +135,28 @@ object PageRank {
     * ~2^k between cuts (measured 18 s vs ~7 s at sf0.1), so the loop
     * cuts every iteration. */
   private def teleportLoop(edges: DataFrame, iterations: Int)(
-      vec: Double => Teleport): DataFrame = {
-    val e = edges.persist()
-    // every node once, with whether it has out-edges, laid out by node
-    // (every round joins on node) by its own aggregation's exchange
-    val nodes = Iterate.laidOut(
-      e.select(col("src").as("node"), lit(true).as("out"))
-        .unionByName(e.select(col("dst").as("node"), lit(false).as("out")))
-        .groupBy("node").agg(max(col("out")).as("out")), "node")
-    // the node leaf's row count is N, and it equals chooseBroadcast's
-    // endpoint bound — it serves both the vector and the gate
-    val v = vec(Iterate.rows(nodes).toDouble)
-    val doBroadcast = Iterate.fits(nodes)
-    val gate = Iterate.broadcastIf(doBroadcast)
-    val withDeg = withDegrees(e, doBroadcast)
-    // the ranks carry the out-edge flag, so the dangling mass (sinks'
-    // rank, which the quirk variant deliberately loses) is a filter of
-    // the state, with no join
-    val init = nodes.select(col("node"), v.init.as("pr"), col("out"))
-    val ranks = Iterate.rounds(init, iterations) { ranks =>
-      val contribs = withDeg
-        .join(gate(ranks), col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
-      val dm = ranks.filter(!col("out"))
-        .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      nodes
-        .join(gate(contribs), col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dm))
-        .select(col("node"),
-          (v.jump + lit(0.85) * (coalesce(col("c"), lit(0.0)) + v.share(col("dm")))).as("pr"),
-          col("out"))
+      vec: Double => Teleport): DataFrame =
+    withInvariants(edges, 0, nodeLeaf) { (nodes, gate, withDeg) =>
+      // the node leaf's row count is N: it serves the vector too
+      val v = vec(Iterate.rows(nodes).toDouble)
+      // the ranks carry the out-edge flag, so the dangling mass (sinks'
+      // rank, which the quirk variant deliberately loses) is a filter of
+      // the state, with no join
+      val init = nodes.select(col("node"), v.init.as("pr"), col("out"))
+      Iterate.rounds(init, iterations) { ranks =>
+        val contribs = withDeg
+          .join(gate(ranks), col("src") === col("node"))
+          .groupBy(col("dst")).agg(sum(col("pr") / col("deg")).as("c"))
+        val dm = ranks.filter(!col("out"))
+          .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
+        nodes
+          .join(gate(contribs), col("node") === col("dst"), "left")
+          .crossJoin(broadcast(dm))
+          .select(col("node"),
+            (v.jump + lit(0.85) * (coalesce(col("c"), lit(0.0)) + v.share(col("dm")))).as("pr"),
+            col("out"))
+      }.select(col("node"), col("pr"))
     }
-    e.unpersist()
-    ranks.select(col("node"), col("pr"))
-  }
 
   /** Textbook PageRank — the variant SURVEY §2.14 documents alongside
     * the quirk-faithful [[run]] (the original Brin/Page formulation):
@@ -258,16 +257,14 @@ object PageRank {
         .unionByName(parsed.select(col("dst").as("name")))
         .distinct()
         .select(col("name"), monotonically_increasing_id().as("nid")))
-    // the dict leaf's row count IS chooseBroadcast's endpoint bound —
-    // it serves the encode joins, the decode join AND the loop (whose
-    // own distinct-count job it replaces)
-    val doBroadcast = Iterate.fits(dict)
-    val gate = Iterate.broadcastIf(doBroadcast)
+    // the dict leaf's rows are the loop's node set: they gate the
+    // encode joins, the decode join and the loop
+    val gate = Iterate.broadcastIf(Iterate.fits(dict))
     val enc = parsed
       .join(gate(dict.select(col("name").as("src"), col("nid").as("nsrc"))), Seq("src"))
       .join(gate(dict.select(col("name").as("dst"), col("nid").as("ndst"))), Seq("dst"))
       .select(col("nsrc").as("src"), col("ndst").as("dst"))
-    run(enc, 10, broadcastRanks = Some(doBroadcast))
+    quirkLoop(enc, 10, 0, _ => dict)
       .join(gate(dict), col("node") === col("nid"))
       .select(col("name").as("node"), round(col("pr"), 6).as("pr"))
       .orderBy(col("node"))

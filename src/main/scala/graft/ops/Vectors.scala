@@ -1204,9 +1204,10 @@ object Vectors {
     * exact clone of a seed and pin that the label crosses. */
   private[graft] def labelSpreadCore(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"), darr.as("v"))
-    val edges = srpPairsOf(e, MinCos).select(col("va"), col("vb"))
-    val und = edges.select(col("va").as("dst"), col("vb").as("src"))
-      .unionByName(edges.select(col("vb").as("dst"), col("va").as("src")))
+    // one pass emits both orientations, so the LSH pipeline runs once
+    val und = srpPairsOf(e, MinCos)
+      .select(explode(array(struct(col("va").as("dst"), col("vb").as("src")),
+        struct(col("vb").as("dst"), col("va").as("src")))).as("p")).select("p.*")
     val seedLabels = emb.filter(labelSeedPred(col("vec_id")))
       .select(col("vec_id").as("src"), col("label").cast("long").as("vote"))
     val votes = und.filter(!labelSeedPred(col("dst")))

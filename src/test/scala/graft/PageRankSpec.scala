@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.PageRank
+import graft.ops.{Graph, PageRank}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** Golden tests for the quirk-faithful PageRank (SURVEY.md §2.14).
@@ -12,11 +13,11 @@ import org.apache.spark.sql.functions.col
   */
 class PageRankSpec extends SparkSpec {
 
-  private def toyRanks(iters: Int): Map[String, Double] = {
-    val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
-    PageRank.run(PageRank.parseEdgeLines(raw), iters)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-  }
+  private def toyEdges = PageRank.parseEdgeLines(
+    spark.read.text(getClass.getResource("/toy_graph.tsv").getPath))
+
+  private def toyRanks(iters: Int): Map[String, Double] =
+    PageRank.run(toyEdges, iters).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   private def assertRanks(got: Map[String, Double], want: Map[String, Double]): Unit = {
     assert(got.keySet == want.keySet, s"key sets differ: $got vs $want")
@@ -43,15 +44,13 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("comment lines are skipped and node IDs stay strings") {
-    val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
-    val edges = PageRank.parseEdgeLines(raw)
+    val edges = toyEdges
     assert(edges.count() == 7) // duplicate 1->2 preserved
     assert(edges.schema("src").dataType.typeName == "string")
   }
 
   test("ranks are invariant under the partition sweep (task2 analog)") {
-    val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
-    val edges = PageRank.parseEdgeLines(raw)
+    val edges = toyEdges
     val base = PageRank.run(edges, 10).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     Seq(2, 8).foreach { n =>
@@ -64,11 +63,8 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
-  private def toyTextbook(iters: Int): Map[String, Double] = {
-    val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
-    PageRank.runTextbook(PageRank.parseEdgeLines(raw), iters)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-  }
+  private def toyTextbook(iters: Int): Map[String, Double] =
+    PageRank.runTextbook(toyEdges, iters).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   // Expected values from a direct simulation of the standard
   // formulation: 1/N init over all nodes, dangling mass (node 5, no
@@ -92,22 +88,22 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("broadcast gate: small graphs broadcast, forced paths agree") {
-    val raw = spark.read.text(getClass.getResource("/toy_graph.tsv").getPath)
-    val edges = PageRank.parseEdgeLines(raw)
-    assert(PageRank.chooseBroadcast(edges))
-    val bc = PageRank.run(edges, 5).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // broadcast joins off: the at-scale regime, which the gate takes too
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    val sh = try {
-      spark.conf.set(key, "-1")
-      assert(!PageRank.chooseBroadcast(edges))
-      PageRank.run(edges, 5).collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    } finally spark.conf.set(key, saved)
-    assert(bc.keySet == sh.keySet)
-    bc.foreach { case (k, v) => assert(math.abs(sh(k) - v) < 1e-12, s"node=$k") }
+    val (bc, sh) = bothRegimes("pagerank")(PageRank.run(toyEdges, 5))
+    def ranks(rows: Set[Row]) =
+      rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val (b, s) = (ranks(bc), ranks(sh))
+    assert(b.nonEmpty && b.keySet == s.keySet)
+    b.foreach { case (k, v) => assert(math.abs(s(k) - v) < 1e-12, s"node=$k") }
+  }
+
+  test("the rank gates run no count job: run and hitsCore read the node leaf's rows") {
+    for ((what, q) <- Seq[(String, () => DataFrame)](
+        "run" -> (() => PageRank.run(toyEdges, 5)),
+        "hitsCore" -> (() => Graph.hitsCore(toyEdges, 3)))) {
+      val actions = listened(q().collect())._2.map(_._1)
+      assert(actions.contains("localCheckpoint") && !actions.contains("count"),
+        s"$what ran: ${actions.mkString(", ")}")
+    }
   }
 
   test("textbook and personalized: the shuffled regime gives the same ranks") {
@@ -118,7 +114,7 @@ class PageRankSpec extends SparkSpec {
       try { spark.conf.set(key, "-1"); (bc, f()) } finally spark.conf.set(key, saved)
     }
     val e = PageRank.starEdgesDirected(spark, sf0001)
-    def ranks(df: org.apache.spark.sql.DataFrame) =
+    def ranks(df: DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for ((bc, sh) <- Seq(both(() => ranks(PageRank.runTextbook(e, 5))),
         both(() => ranks(PageRank.runPersonalized(e, seed = 1L, 5))))) {
@@ -143,7 +139,7 @@ class PageRankSpec extends SparkSpec {
 
   test("SNAP text: past the gates the shuffled plan gives the same ranks") {
     val (bc, sh) = bothRegimes("pagerank_snap")(PageRank.pagerankSnap(spark, sf0001))
-    def ranks(rows: Set[org.apache.spark.sql.Row]) =
+    def ranks(rows: Set[Row]) =
       rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
     val (b, s) = (ranks(bc), ranks(sh))
     // ULP-tolerant like the star-schema parity above: the two regimes

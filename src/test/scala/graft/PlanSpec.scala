@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions.col
@@ -458,6 +459,20 @@ class PlanSpec extends SparkSpec {
         case s: FileSourceScanExec if s.dataFilters.exists(_.toString.contains("srp_band_keys")) => s
       }
       assert(bad.isEmpty, s"past the gate: $past: band keys filtered:\n${bad.mkString("\n")}")
+    }
+  }
+
+  test("label spreading symmetrizes its edges in one pass: one banded SRP self-join runs") {
+    // a union of the two orientations plans the candidate pipeline
+    // once per branch
+    for (past <- Seq(false, true)) {
+      def run(): Seq[SparkPlan] = executions(
+        ops.Vectors.labelSpreadCore(Tables.embeddings(spark, sf0001)))._2.map(_.executedPlan)
+      val selfJoins = (if (past) pastTheGate(run()) else run()).flatMap(nodesOf).collect {
+        case j: BaseJoinExec if j.leftKeys.flatMap(_.references.map(_.name)).contains("bkey") => j
+      }
+      assert(selfJoins.length == 1, s"past the gate: $past: ${selfJoins.length} band self-joins:\n" +
+        selfJoins.mkString("\n"))
     }
   }
 

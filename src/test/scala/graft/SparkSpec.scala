@@ -15,21 +15,29 @@ trait SparkSpec extends AnyFunSuite {
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 
-  /** `q`'s rows, and every execution computing them ran — loop rounds
-    * and checkpoint jobs included — in the order they finished. */
-  protected def executions(q: => DataFrame): (Set[Row], Seq[QueryExecution]) = {
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+  /** `f`'s result, and every execution it ran — loop rounds and
+    * checkpoint jobs included — with the name of the action that ran it
+    * (`collect`, `count`, `localCheckpoint`, …), in the order they
+    * finished. */
+  protected def listened[T](f: => T): (T, Seq[(String, QueryExecution)]) = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.add(f -> qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     GraftColumnBridge.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      val rows = q.collect().toSet
+      val result = f
       GraftColumnBridge.drainListeners(spark.sparkContext)
-      (rows, qes.asScala.toSeq)
+      (result, ran.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `q`'s rows, and every execution computing them ran (see [[listened]]). */
+  protected def executions(q: => DataFrame): (Set[Row], Seq[QueryExecution]) = {
+    val (rows, ran) = listened(q.collect().toSet)
+    (rows, ran.map(_._2))
   }
 
   /** `f` with broadcast joins off (`autoBroadcastJoinThreshold=-1`,

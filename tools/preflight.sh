@@ -4,8 +4,8 @@
 # code/resource change and the snapshot). Runs the cheap structural
 # gates in ~2-3 min; the FULL bar before a snapshot is:
 #   1. this script green
-#   2. `sbt -batch test` green (375 tests, ~20 min on 4 cores)
-#   3. the 3-SF Verify sweep from .claude/skills/verify/SKILL.md
+#   2. `sbt -batch test` green (377 tests, ~20 min on 4 cores)
+#   3. tools/oracle_sweep.sh (the 3-SF Verify sweep + the past-gate run)
 # The snapshot commit message must cite the green full-suite run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -22,4 +22,4 @@ echo "$smoke_out"
 echo "$smoke_out" | grep -q 'ENTRY_ROWS=1000' \
   || { echo "PREFLIGHT FAIL: entry smoke"; exit 1; }
 
-echo "PREFLIGHT OK (now run: sbt -batch test  AND  the 3-SF Verify sweep)"
+echo "PREFLIGHT OK (now run: sbt -batch test  AND  tools/oracle_sweep.sh)"
