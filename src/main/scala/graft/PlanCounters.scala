@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 
 /** The physical-plan features that matter at scale, extracted from an
   * EXECUTED query's final adaptive plan — shared by `graft.Dev
@@ -57,8 +58,10 @@ object PlanCounters {
   /** The executed plan's text without the pre-adaptive plan that
     * AdaptiveSparkPlan.toString appends under "== Initial Plan =="
     * (counting over both would double-count every feature). */
-  def finalPlan(df: DataFrame): String = {
-    val full = df.queryExecution.executedPlan.toString
+  def finalPlan(df: DataFrame): String = finalPlan(df.queryExecution)
+
+  def finalPlan(qe: QueryExecution): String = {
+    val full = qe.executedPlan.toString
     full.indexOf("== Initial Plan ==") match {
       case -1 => full
       case i => full.substring(0, i)

@@ -48,13 +48,15 @@ object PageRank {
         split(col("value"), "\t").getItem(1).as("dst"))
 
   /** Every node once (sources ∪ sinks), with whether it has out-edges,
-    * laid out by `node` by its own aggregation's exchange. Its row count
-    * |V| bounds every rank and score vector of the loops and of
-    * [[Graph.hitsCore]], so it is the one bound their size gate reads. */
+    * laid out by `node` by its own aggregation's exchange. One pass
+    * over the edges emits both endpoints, so a persisted edge relation
+    * is scanned once. Its row count |V| bounds every rank and score
+    * vector of the loops and of [[Graph.hitsCore]], so it is the one
+    * bound their size gate reads. */
   private[graft] def nodeLeaf(e: DataFrame): DataFrame =
     Iterate.laidOut(
-      e.select(col("src").as("node"), lit(true).as("out"))
-        .unionByName(e.select(col("dst").as("node"), lit(false).as("out")))
+      e.select(explode(array(struct(col("src").as("node"), lit(true).as("out")),
+          struct(col("dst").as("node"), lit(false).as("out")))).as("n")).select("n.*")
         .groupBy("node").agg(max(col("out")).as("out")), "node")
 
   /** Both loops' invariant: each edge with its source's out-degree,

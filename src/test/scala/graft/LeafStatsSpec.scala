@@ -1,8 +1,7 @@
 package graft
 
 import graft.ops.Iterate
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -14,22 +13,6 @@ import org.apache.spark.sql.functions._
   * layout keeps that layout. */
 class LeafStatsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started while `f` runs. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftColumnBridge.drainListeners(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      GraftColumnBridge.drainListeners(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("rows equals count() for a leaf, a projection of a leaf and an empty leaf") {
     val data = (1 to 57).map(i => (i.toLong, i % 5)).toDF("k", "g").repartition(3)
@@ -68,9 +51,9 @@ class LeafStatsSpec extends SparkSpec {
   test("a leaf is one checkpoint job, and reading its rows runs none") {
     val narrow = (1 to 40).map(i => (i.toLong, i)).toDF("k", "x").filter(col("x") > 3)
     val (leaf, jobs) = jobsOf(Iterate.leaf(narrow))
-    assert(jobs == 1, s"leaf of a narrow relation ran $jobs jobs")
+    assert(jobs.size == 1, s"leaf of a narrow relation ran ${jobs.size} jobs")
     val (n, rowJobs) = jobsOf(Iterate.rows(leaf))
-    assert(n == 37L && rowJobs == 0, s"rows = $n in $rowJobs jobs")
+    assert(n == 37L && rowJobs.isEmpty, s"rows = $n in ${rowJobs.size} jobs")
   }
 
   test("the size gate answers shuffle when the session switches broadcast joins off") {

@@ -106,6 +106,20 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
+  test("the node leaf scans persisted edges once: one cached-relation scan in its checkpoint") {
+    // a union of the src and dst projections plans two scans of the
+    // cache, and AQE materializes the same blocks twice, concurrently
+    val e = toyEdges.persist()
+    try {
+      val (nodes, ran) = listened(PageRank.nodeLeaf(e))
+      val plans = ran.collect { case ("localCheckpoint", qe) => PlanCounters.finalPlan(qe) }
+      assert(plans.size == 1, s"checkpoints: ${plans.size}")
+      assert("InMemoryTableScan".r.findAllMatchIn(plans.head).size == 1, plans.head)
+      assert(nodes.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap ==
+        Map("1" -> true, "2" -> true, "3" -> true, "4" -> true, "5" -> false))
+    } finally e.unpersist()
+  }
+
   test("textbook and personalized: the shuffled regime gives the same ranks") {
     def both(f: () => Map[Long, Double]): (Map[Long, Double], Map[Long, Double]) = {
       val key = "spark.sql.autoBroadcastJoinThreshold"

@@ -685,10 +685,12 @@ class PlanSpec extends SparkSpec {
   }).flatMap(nodesOf)
 
   /** Whether `p` computes rows of the leaf whose columns are `cols`
-    * alone: a chain of one-input operators down to its scan. */
+    * alone: a chain of one-input operators down to its scan. A
+    * generator's rows are new rows (the node leaf's explode emits each
+    * edge's two endpoints), not the leaf's. */
   private def overLeaf(cols: Set[String])(p: SparkPlan): Boolean = p match {
     case s: RDDScanExec => s.output.map(_.name).toSet == cols
-    case _: Exchange | _: QueryStageExec => false
+    case _: Exchange | _: QueryStageExec | _: GenerateExec => false
     case a: AdaptiveSparkPlanExec => overLeaf(cols)(a.executedPlan)
     case _ => p.children match {
       case Seq(c) => overLeaf(cols)(c)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -32,6 +33,22 @@ trait SparkSpec extends AnyFunSuite {
       GraftColumnBridge.drainListeners(spark.sparkContext)
       (result, ran.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `f`'s result, and every Spark job started while it ran. */
+  protected def jobsOf[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    GraftColumnBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      GraftColumnBridge.drainListeners(sc)
+      (r, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
   }
 
   /** `q`'s rows, and every execution computing them ran (see [[listened]]). */

@@ -4,14 +4,14 @@
 # code/resource change and the snapshot). Runs the cheap structural
 # gates in ~2-3 min; the FULL bar before a snapshot is:
 #   1. this script green
-#   2. `sbt -batch test` green (377 tests, ~20 min on 4 cores)
+#   2. `sbt -batch test` green (382 tests, ~20 min on 4 cores)
 #   3. tools/oracle_sweep.sh (the 3-SF Verify sweep + the past-gate run)
 # The snapshot commit message must cite the green full-suite run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== preflight: contract + plan-budget + leaf-stats + plan + portable-hash specs =="
-spec_out=$(sbt -batch "testOnly graft.ContractSpec graft.PlanBudgetSpec graft.LeafStatsSpec graft.PlanSpec graft.PortableHash64Spec" 2>&1 || true)
+echo "== preflight: contract + plan-budget + leaf-stats + plan + portable-hash + tables specs =="
+spec_out=$(sbt -batch "testOnly graft.ContractSpec graft.PlanBudgetSpec graft.LeafStatsSpec graft.PlanSpec graft.PortableHash64Spec graft.TablesSpec" 2>&1 || true)
 echo "$spec_out" | grep -E 'Tests: succeeded|All tests passed|\*\*\* FAILED' || true
 echo "$spec_out" | grep -q 'All tests passed' \
   || { echo "PREFLIGHT FAIL: specs red"; exit 1; }
