@@ -40,14 +40,16 @@ object Tables {
     val files = Iterator.continually(leaves).takeWhile(_.hasNext).map(_.next())
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
     val key = SchemaKey(files, spark.conf.getAll.filter(_._1.contains("parquet")))
-    // inferred outside the map's lock, which must not be held across a
-    // Spark job: two racing first reads both infer, and both use the
-    // schema stored first
-    val schema = Option(schemas.get(key)).getOrElse {
-      val inferred = spark.read.parquet(path).schema
-      Option(schemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+    // a miss infers outside the map's lock, which must not be held
+    // across a Spark job: two racing first reads both infer the same
+    // schema, and the first stored stays
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.putIfAbsent(key, df.schema)
+        df
     }
-    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
